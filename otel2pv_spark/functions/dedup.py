@@ -993,13 +993,14 @@ def cluster_survivors(
 
     Scale shape: no window over members of a cluster (a viral document
     can have millions of near-copies — a per-cluster sort would put
-    them all in one task). Per-cluster argmax is ONE map-side-combined
-    groupBy of struct(-scored, -quality, id) MIN, then an equi-join
-    back on the cluster key — both co-partitioned on cluster_col, skew
-    handled by AQE. The MIN form (minimize -scored, then -quality, then
-    id) expresses scored-beats-unscored → highest quality → lowest id
-    without ever negating the ID — so ids may be strings (conversation
-    grain) or integers (document grain). Quality must be NUMERIC and is
+    them all in one task). Per-cluster argmax is two map-side-combined
+    groupBys — the lowest id per (cluster, scored, quality), then the
+    MAX struct(scored, quality, id) per cluster, whose key is unique by
+    then so the id never decides it — and an equi-join back on the
+    cluster key, skew handled by AQE. Nothing is negated: ids may be
+    strings (conversation grain) or integers (document grain), and
+    quality keeps Spark's own order (Long.MIN_VALUE is the lowest, NaN
+    ranks above every number). Quality must be NUMERIC and is
     ideally an exact (integer / fixed-point) score so the keep flag is
     engine-reproducible; float quality works but ties then depend on
     float equality.
@@ -1013,18 +1014,15 @@ def cluster_survivors(
     j = clusters.select(id_col, cluster_col).join(
         quality.select(id_col, quality_col), id_col, "left"
     )
-    # scored-beats-unscored flag first, then quality, then id; a null
-    # quality never enters the comparison (unscored rows carry the
-    # constant 0 in the quality slot and lose on the scored flag), and
-    # the winner is identified by its (unique) id
-    best = j.groupBy(cluster_col).agg(
-        F.min(
-            F.struct(
-                (-F.col(quality_col).isNotNull().cast("int")).alias("ns"),
-                (-F.coalesce(F.col(quality_col), F.lit(0))).alias("nq"),
-                F.col(id_col).alias("id"),
-            )
-        ).alias("_b")
+    # scored-beats-unscored flag first, then quality; a null quality
+    # only ever meets the other unscored members of its cluster
+    per_q = j.groupBy(
+        cluster_col,
+        F.col(quality_col).isNotNull().alias("s"),
+        F.col(quality_col).alias("q"),
+    ).agg(F.min(id_col).alias("id"))
+    best = per_q.groupBy(cluster_col).agg(
+        F.max(F.struct("s", "q", "id")).alias("_b")
     )
     return (
         j.join(best, cluster_col)

@@ -3,7 +3,9 @@
 Brute-force cosine top-k as the exactness baseline, and an LSH
 (random-hyperplane, data-derived anchors) bucketed variant as the scale
 path. All math in doubles via built-in higher-order functions
-(F.zip_with / F.aggregate) — JVM-side, no Python in the loop.
+(F.zip_with / F.aggregate) — JVM-side, no Python in the loop — except
+the IVF assignment argmax (``ivf_assign``), an Arrow/numpy kernel with
+the same fold roundings.
 
 Scale shapes:
 - brute force: broadcast the (small) query set, one pass over the
@@ -202,70 +204,35 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = False,
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
     centroid by cosine (ties → lowest centroid id). ``centroids`` is a
-    tiny (anchor_rank, vec) table — broadcast, so assignment is a
-    map-side projection + a per-vector argmax (map-side partial agg);
-    the inverted lists ARE the partitions of a later repartition on
-    ``cluster``. Centroids here are data-derived (``make_anchors``) for
-    determinism; a production pipeline would plug k-means centroids
-    into the same shape.
+    tiny (anchor_rank, vec) table — collected once and shipped to every
+    task as a plain list; the corpus streams through ``mapInPandas``
+    batches with no shuffle, so the inverted lists ARE the partitions
+    of a later repartition on ``cluster``. Output: one (id, cluster)
+    row per input row.
 
-    ``vectorized=True`` routes through :func:`_ivf_assign_arrow` —
-    the bit-identical numpy argmax (pytest-pinned equal), ~100x the
-    per-element constant of the expression fold. The hot N·k paths
-    (``ivf_train``'s Lloyd loop, ``semantic_dedup``'s assignment) use
-    it; the default stays on the expression path whose broadcast-
-    crossJoin plan shape other callers pin in tests."""
-    if vectorized:
-        return _ivf_assign_arrow(df, centroids, id_col, vec_col)
-    c = centroids.select(
-        F.col("anchor_rank").alias("cid"), F.col(vec_col).alias("cvec")
-    )
-    j = df.select(id_col, vec_col).crossJoin(F.broadcast(c))
-    csim = _dot(F.col(vec_col), F.col("cvec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("cvec"))
-    )
-    scored = j.select(F.col(id_col), F.col("cid"), csim.alias("csim"))
-    best = (
-        scored.groupBy(id_col)
-        .agg(F.max(F.struct(F.col("csim"), (-F.col("cid")).alias("ncid"))).alias("b"))
-        .select(F.col(id_col), (-F.col("b.ncid")).cast("int").alias("cluster"))
-    )
-    return best
+    Arithmetic: the N·k·d dot fold runs as d numpy passes over the
+    (batch, k) score matrix, accumulating IN INDEX ORDER, so every
+    rounding equals a left-to-right Spark ``F.aggregate`` fold
+    (float32→double casts first, one multiply + one add per step,
+    norm = sqrt of the same fold, cosine = dot/(na·nc)); ``np.argmax``
+    returns the FIRST maximum — the lowest centroid id. The expression
+    fold it replaced cost ~200 ns per element-op per crossJoin row;
+    it survives as the row-for-row reference in the twin test.
 
-
-def _ivf_assign_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Arrow/numpy fast path for the IVF assignment argmax — BIT-
-    IDENTICAL to the expression path (pytest-pinned): the N·k·d dot
-    fold runs as d vectorized numpy passes over the (batch, k) score
-    matrix, accumulating IN INDEX ORDER so every intermediate rounding
-    equals Spark's left-to-right ``F.aggregate`` fold (float32→double
-    casts first, one multiply + one add per step, norm = sqrt of the
-    same fold, cosine = dot/(na·nc) with the same two roundings), and
-    ``np.argmax`` returns the FIRST maximum — the lowest centroid id,
-    exactly the ``max(struct(csim, -cid))`` tie-break.
-
-    Why it exists: the expression path evaluates the higher-order
-    zip_with/aggregate fold per crossJoin ROW (~200ns per element-op
-    measured — 137 s for the sf1 semdedup train/assign); this path
-    does the same arithmetic at numpy vector speed, ~100x the
-    constant, same distributed shape (centroids broadcast as a plain
-    Python list — config-sized; corpus streams through mapInPandas
-    batches, no shuffle)."""
+    Bad vectors never fail the job: a vector that is null, empty, of
+    the wrong length, or has a null or NaN element or zero norm gets
+    the lowest centroid id. That is the reference fold's answer: a
+    zero denominator scores null (``try_divide``), a null score never
+    beats a real one, and NaN ties rank first-id as in Spark."""
     rows = centroids.select("anchor_rank", vec_col).orderBy("anchor_rank").collect()
+    if not rows:
+        raise ValueError("ivf_assign: empty centroid table")
     cvecs = [[float(x) for x in r[vec_col]] for r in rows]
     cids = [int(r["anchor_rank"]) for r in rows]
-    id_type = dict(
-        (f.name, f.dataType.simpleString()) for f in df.schema.fields
-    )[id_col]
+    id_type = df.schema[id_col].dataType.simpleString()
 
     def gen(batches):
         import numpy as np
@@ -273,30 +240,35 @@ def _ivf_assign_arrow(
 
         Cm = np.asarray(cvecs, dtype=np.float64)
         k, d = Cm.shape
-        cid_arr = np.asarray(cids)
+        cid_arr = np.asarray(cids, dtype="int32")
         cs = np.zeros(k, dtype=np.float64)
         for p in range(d):
             cs = cs + Cm[:, p] * Cm[:, p]
         cn = np.sqrt(cs)
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({id_col: pdf[id_col], "cluster": []})
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            vecs = pdf[vec_col]
+            n = len(vecs)
+            # null elements arrive as NaN (Arrow → numpy), so only a
+            # null or wrong-length vector needs an explicit check
+            ok = np.fromiter(
+                (v is not None and len(v) == d for v in vecs), bool, n
             )
-            n = X.shape[0]
+            X = np.zeros((n, d), dtype=np.float64)
+            if ok.any():
+                X[ok] = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
+                )
             dots = np.zeros((n, k), dtype=np.float64)
             xs = np.zeros(n, dtype=np.float64)
             for p in range(d):
                 dots = dots + X[:, p : p + 1] * Cm[None, :, p]
                 xs = xs + X[:, p] * X[:, p]
-            xn = np.sqrt(xs)
-            csim = dots / (xn[:, None] * cn[None, :])
+            den = np.sqrt(xs)[:, None] * cn[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                csim = np.where(den == 0, -np.inf, dots / den)
             best = np.argmax(csim, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cluster": cid_arr[best].astype("int32")}
-            )
+            best[~ok] = 0
+            yield pd.DataFrame({id_col: pdf[id_col], "cluster": cid_arr[best]})
 
     return df.select(id_col, vec_col).mapInPandas(
         gen, schema=f"{id_col} {id_type}, cluster int"
@@ -336,7 +308,7 @@ def ivf_train(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias(vec_col)
     )
     for _ in range(iters):
-        assigned = ivf_assign(v, cent, id_col, vec_col, vectorized=True)
+        assigned = ivf_assign(v, cent, id_col, vec_col)
         # elementwise mean as dim avg-aggregates in ONE groupBy — no
         # posexplode row inflation (see pq_train)
         means = (
@@ -999,9 +971,7 @@ def semantic_dedup(
     # join exchanges (see dedup.minhash_lsh_candidates) — without this
     # the k-centroid assignment projection runs three times. Vectors
     # are not checkpointed.
-    assigned = ivf_assign(
-        df, centroids, id_col, vec_col, vectorized=True
-    ).transform(snapshot)
+    assigned = ivf_assign(df, centroids, id_col, vec_col).transform(snapshot)
     # Precompute each vector's norm ONCE (n rows) instead of inside the
     # pair expression (2× per pair): cos stays dot/(na*nb) — the exact
     # same value the oracle computes, just with the norm factored out.

@@ -20,7 +20,6 @@ Config schema (all optional except input/out_root)::
       "input":   {"events_dir": ".../sf0.01"} | {"transcripts_path": "..."},
       "out_root": "/data/otel2pv_out",
       "run_id":  "2026-08-17-a",
-      "parse":   {"use_pandas": false},
       "sequence": {"out_col": "previous_event_ids", "array_mode": true,
                    "id_map_col": null, "gap_reset": true,
                    "hot_block_size": null,
@@ -66,6 +65,14 @@ def validate_config(raw) -> dict:
         )
     if not raw.get("out_root"):
         raise ConfigError("out_root is required")
+    if raw.get("parse"):
+        # the parse stage has one implementation (native, JVM-side);
+        # fail loudly on the removed parse.use_pandas switch instead of
+        # silently ignoring it
+        raise ConfigError(
+            f"parse has no settable keys (got {raw['parse']!r});"
+            " parse.use_pandas was removed"
+        )
     ga = raw.get("group_applies", [])
     if not all(isinstance(g, (list, tuple)) and len(g) == 3 for g in ga):
         raise ConfigError(
@@ -394,7 +401,6 @@ def to_pipeline_config(raw: dict) -> PipelineConfig:
     seq = raw.get("sequence", {})
     return PipelineConfig(
         out_root=raw["out_root"],
-        use_pandas_parse=bool(raw.get("parse", {}).get("use_pandas", False)),
         seq_array_mode=bool(seq.get("array_mode", True)),
         seq_out_col=seq.get("out_col", "previous_event_ids"),
         seq_id_map_col=seq.get("id_map_col"),

@@ -8,8 +8,7 @@ Logstash/Elastic convention). This module compiles a grok expression
 into ONE combined regex whose named fields become capture groups, and
 emits one :class:`~.parse.ExtractionRule` per field — so the whole grok
 line is still a single fused codegen projection (N ``regexp_extract``
-over the same pattern; Catalyst CSEs the shared match) and works
-unchanged through both parse paths (native / pandas).
+over the same pattern; Catalyst CSEs the shared match).
 
 Syntax supported (the portable core of grok):
 
@@ -130,7 +129,7 @@ def grok_rules(
 ) -> list[ExtractionRule]:
     """Compile a grok expression into ExtractionRules — one per captured
     field, all sharing the combined pattern with distinct group indices,
-    ready for :func:`~.parse.parse` (native or pandas path)."""
+    ready for :func:`~.parse.parse`."""
     regex, fields = compile_grok(expr)
     if not fields:
         raise ValueError("grok: expression captures no fields")

@@ -9,15 +9,10 @@ evaluated in a single whole-stage-codegen pass over the scan (Catalyst
 collapses the adjacent projections, so like the reference there is
 exactly one pass per row).
 
-Two execution paths, chosen per rule set:
-
-- **native** (default): ``F.regexp_extract`` per rule — stays JVM-side
-  inside WholeStageCodegen; this is the 100 TB hot path.
-- **pandas** (grok fallback): one Arrow-vectorized struct-returning
-  pandas UDF compiling all rules with Python ``re`` — for rule features
-  Java regex can't express (or user-supplied grok libraries). One UDF
-  call computes ALL columns (the "fused program" property), never one
-  UDF per rule.
+One execution path: ``F.regexp_extract`` per regex rule,
+``get_json_object`` per json rule and ``F.expr`` per expr rule — all
+JVM-side inside WholeStageCodegen, so the whole rule set is one fused
+projection (the "fused program" property) with no Python in the loop.
 
 Rows failing required extractions are routed to the rejects path — the
 InvalidError → reject/DLQ semantics (Server/consumers.go:776-827,
@@ -29,10 +24,8 @@ from __future__ import annotations
 import re as _re
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..portable_sql import GROK_PATTERNS
 
@@ -56,8 +49,8 @@ class ExtractionRule:
     ``CASE WHEN a = '' THEN concat('r:', b) ELSE a END``. The result
     is cast to string (dtype re-casts after, like any rule) and the
     expression fuses into the SAME single projection as the captures
-    (native and pandas paths both — Catalyst collapses the adjacent
-    projections). Statements, subqueries and comments are rejected.
+    (Catalyst collapses the adjacent projections). Statements,
+    subqueries and comments are rejected.
     ``source``: the column the rule reads; defaults to the parse text
     column. May name an EARLIER rule's output (rules are applied in
     order), e.g. a json rule over the regex-extracted ``body`` field —
@@ -122,96 +115,20 @@ def _native_col(rule: ExtractionRule, text_col: str) -> Column:
     return c.alias(rule.name)
 
 
-def _json_path_series(s: pd.Series, path: str) -> pd.Series:
-    """Pandas analog of ``get_json_object`` for the ``$.a.b`` subset:
-    '' on miss/invalid JSON; scalars rendered like Spark (numbers and
-    strings unquoted, booleans lowercase, containers compact JSON)."""
-    import json as _json
-
-    keys = [k for k in path.lstrip("$").lstrip(".").split(".") if k]
-
-    def one(v):
-        try:
-            obj = _json.loads(v)
-        except (TypeError, ValueError):
-            return ""
-        for k in keys:
-            if isinstance(obj, dict) and k in obj:
-                obj = obj[k]
-            else:
-                return ""
-        if obj is None:
-            return ""
-        if isinstance(obj, bool):
-            return "true" if obj else "false"
-        if isinstance(obj, (dict, list)):
-            return _json.dumps(obj, separators=(",", ":"))
-        return str(obj)
-
-    return s.map(one)
-
-
-def _pandas_extractor(rules: list[ExtractionRule], text_col: str = "text"):
-    """Compile all rules into one Arrow-batched pandas UDF returning a
-    struct — the vectorized grok path. ``pd.Series.str.extract`` is
-    vectorized C under the hood; one UDF invocation per Arrow batch.
-    A rule's ``source`` may name an earlier rule's output (computed
-    series are chained inside the one UDF, preserving the fused-program
-    property); json-kind rules fall back to per-value ``json.loads``
-    inside the batch (still one Arrow roundtrip)."""
-    import re
-
-    compiled = {
-        r.name: re.compile(r.pattern) for r in rules if r.kind != "json"
-    }
-    schema = T.StructType([T.StructField(r.name, T.StringType()) for r in rules])
-
-    known: set[str] = {text_col}
-    for r in rules:
-        if r.source and r.source not in known:
-            # the UDF sees only the text column — a source naming any
-            # OTHER input column would silently extract from text
-            raise ValueError(
-                f"pandas grok: rule {r.name!r} source {r.source!r} is not "
-                "an earlier rule's output (the vectorized UDF receives "
-                "only the text column)"
-            )
-        known.add(r.name)
-
-    @F.pandas_udf(schema)
-    def grok(text: pd.Series) -> pd.DataFrame:
-        out: dict[str, pd.Series] = {}
-        for r in rules:
-            src = out[r.source] if r.source and r.source != text_col else text
-            if r.kind == "json":
-                col = _json_path_series(src, r.pattern)
-            else:
-                ext = src.str.extract(compiled[r.name], expand=True)
-                col = ext.iloc[:, r.group - 1].fillna("")
-            for s in r.null_sentinels:
-                col = col.mask(col == s, "")
-            out[r.name] = col
-        return pd.DataFrame(out)
-
-    return grok
-
-
 def parse(
     df: DataFrame,
     rules: list[ExtractionRule] | None = None,
     text_col: str = "text",
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Apply all extraction rules; adds one column per rule plus
     ``parse_ok`` (all required rules matched)."""
     rules = rules if rules is not None else default_rules()
     # an expr rule may reference only EARLIER rules' outputs (plus
-    # input columns). In the native path a forward reference would bind
-    # to a pre-existing input column of that name; in the pandas path
-    # the expr evaluates AFTER the UDF computed every capture and would
-    # bind to the capture — same rule set, different semantics per
-    # path. Rejected up front (word-boundary scan; a later rule's name
-    # inside a string literal is also rejected — conservative, loud).
+    # input columns): a forward reference would silently bind to a
+    # pre-existing input column of that name instead of the capture
+    # the rule set defines later. Rejected up front (word-boundary
+    # scan; a later rule's name inside a string literal is also
+    # rejected — conservative, loud).
     for i, r in enumerate(rules):
         if r.kind != "expr":
             continue
@@ -222,25 +139,8 @@ def parse(
                     f"{later.name!r} — expr rules may use only earlier "
                     "captures (reorder the rules)"
                 )
-    if use_pandas:
-        # expr rules stay JVM-side in BOTH paths: here they are native
-        # F.expr over the UDF's capture struct — Catalyst collapses the
-        # UDF projection and the expr projection into one pass, so the
-        # fused-program property holds (and the expression semantics
-        # cannot drift between paths). A capture rule sourcing an expr
-        # output is rejected by _pandas_extractor's known-set check.
-        base_rules = [r for r in rules if r.kind != "expr"]
-        grok = _pandas_extractor(base_rules, text_col)
-        df = df.withColumn("_g", grok(F.col(text_col)))
-        for r in base_rules:
-            df = df.withColumn(r.name, F.col(f"_g.{r.name}"))
-        df = df.drop("_g")
-        for r in rules:
-            if r.kind == "expr":
-                df = df.withColumn(r.name, _native_col(r, text_col))
-    else:
-        for r in rules:
-            df = df.withColumn(r.name, _native_col(r, text_col))
+    for r in rules:
+        df = df.withColumn(r.name, _native_col(r, text_col))
     for r in rules:
         if r.dtype:
             # ''/malformed (no match) → NULL; try_cast because ANSI-mode

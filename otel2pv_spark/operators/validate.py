@@ -233,13 +233,10 @@ def _schema_checks(schema: dict, path: str) -> list:
                 # every int64 AND the (2^63, 10^20) band a DECIMAL
                 # instance can exactly equal (review finding: uint64-
                 # scale values fell out of every exact branch). Beyond
-                # that, fail loudly rather than silently never-match.
-                if abs(vi) >= 10**20:
-                    raise ValueError(
-                        f"{path}: enum value {vi!r} exceeds the exact"
-                        " comparison range (|v| < 1e20)"
-                    )
-                dec_ints.append(vi)
+                # that only the DOUBLE branch can match (a 21+-digit
+                # JSON integer is a DECIMAL instance and never does).
+                if abs(vi) < 10**20:
+                    dec_ints.append(vi)
                 if -(2**63) <= vi < 2**63:
                     ints.append(vi)
             try:
@@ -249,6 +246,13 @@ def _schema_checks(schema: dict, path: str) -> list:
                 exact = False
             if exact:
                 dbls.append(fv)
+            elif vi is not None and abs(vi) >= 10**20:
+                # no branch represents it: fail loudly rather than
+                # silently never-match
+                raise ValueError(
+                    f"{path}: enum value {vi!r} is outside every exact"
+                    " comparison range (|v| < 1e20, or double-exact)"
+                )
 
         # DECIMAL instances vs integral enum values must compare
         # EXACTLY too (review finding: a DECIMAL 9007199254740993.0
@@ -286,7 +290,7 @@ def _schema_checks(schema: dict, path: str) -> list:
                 dec = n.try_cast("decimal(38,18)")
                 # string literals: F.lit cannot hold ints beyond int64,
                 # and a string→decimal cast is exact for every value
-                # the compile-time 1e20 guard admits
+                # below 1e20
                 branches.append(
                     t.startswith("DECIMAL")
                     & functools.reduce(

@@ -76,7 +76,6 @@ class PipelineConfig:
     (Server/setupServers.go:80-139; Sequencer config sequencer.go:182-251)."""
 
     out_root: str = "/tmp/otel2pv_out"
-    use_pandas_parse: bool = False
     # extraction rule set for the parse stage (None = default_rules).
     # Replayable config: fixing a rule and re-running the DLQ is
     # replay_rejects() — the reference's reprocess-the-dead-letter
@@ -253,9 +252,7 @@ def build_single_pass(
     per-input-partition lineage; invalid rows carry ``reject_reason``
     and a reserved reject sink."""
     df = transcripts.withColumn("src_partition_id", F.spark_partition_id())
-    parsed = parse_op.parse(
-        df, rules=cfg.parse_rules, use_pandas=cfg.use_pandas_parse
-    )
+    parsed = parse_op.parse(df, rules=cfg.parse_rules)
 
     if cfg.tree_mode:
         # General-tree plan: the Arrow DFS kernel is a genuine second

@@ -5,13 +5,14 @@ Two modes, mirroring the reference's architecture (file:line into
 
 1. **Micro-batch incremental pipeline** (``run_stream_pipeline``):
    ``readStream`` over a growing transcript directory →
-   ``foreachBatch`` applying the SAME batch operators (parse → enrich →
-   verify → sequence → route) → per-sink append. This is the analog of
-   the consumer → pipe → producer chain (Server/server.go:74-105) with
-   the micro-batch replacing the AMQP delivery: source offsets +
-   checkpointLocation give the ack-after-downstream-success semantics
-   (Server/consumers.go:638-651) — a batch is only committed to the
-   offset log after its foreachBatch writes return.
+   ``foreachBatch`` running the batch DAG's single-pass plan (parse →
+   verify → sequence → enrich → route) → per-sink append. This is the
+   analog of the consumer → pipe → producer chain
+   (Server/server.go:74-105) with the micro-batch replacing the AMQP
+   delivery: source offsets + checkpointLocation give the
+   ack-after-downstream-success semantics (Server/consumers.go:638-651)
+   — a batch is only committed to the offset log after its
+   foreachBatch writes return.
    Assumption (documented): a conversation's turns arrive within one
    micro-batch (file = bundle of whole conversations), the analog of
    the Sequencer receiving the whole tree as one message
@@ -48,12 +49,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..snapshot import snapshot
-from ..operators import enrich as enrich_op
-from ..operators import parse as parse_op
-from ..operators import route as route_op
-from ..operators import sequence as seq_op
-from ..operators import verify as verify_op
-from ..plans.pipeline import KNOWN_SINKS, OUTPUT_COLS, REJECT_COLS
+from ..plans.pipeline import (
+    OUTPUT_COLS,
+    REJECT_COLS,
+    PipelineConfig,
+    build_single_pass,
+)
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -86,28 +87,24 @@ def run_stream_pipeline(
     checkpoint: str,
     available_now: bool = False,
 ):
-    """foreachBatch micro-batch pipeline: same operators as the batch
-    DAG, once per micro-batch; sink fan-out + rejects per batch."""
+    """foreachBatch micro-batch pipeline: each micro-batch runs the
+    batch DAG itself (``build_single_pass`` with the default config),
+    persisted once and written as its two filters — routable rows per
+    sink, and rejects."""
+    cfg = PipelineConfig()
+    is_reject = F.col("reject_reason").isNotNull()
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        parsed = parse_op.parse(batch).persist()
+        sp = build_single_pass(batch, tool_meta, role_meta, cfg).persist()
         try:
-            good, parse_rejects = parse_op.split_rejects(parsed)
-            enriched = enrich_op.enrich(good, tool_meta, role_meta)
-            ver = verify_op.chain_verify(parsed).select("conv_id", "verified")
-            enriched = enriched.join(ver, "conv_id", "left")
-            seq = seq_op.sequence_window(
-                enriched, dup_compare_cols=("role", "text", "tool")
-            )
-            routable, route_rejects = route_op.route(seq, KNOWN_SINKS)
-            routable.select(*OUTPUT_COLS).write.mode("append").partitionBy(
-                "sink"
-            ).parquet(f"{out_root}/sequenced_events")
-            parse_rejects.select(*REJECT_COLS).unionByName(
-                route_rejects.select(*REJECT_COLS)
-            ).write.mode("append").parquet(f"{out_root}/rejects")
+            sp.filter(~is_reject).select(*OUTPUT_COLS).write.mode(
+                "append"
+            ).partitionBy("sink").parquet(f"{out_root}/sequenced_events")
+            sp.filter(is_reject).select(*REJECT_COLS).write.mode(
+                "append"
+            ).parquet(f"{out_root}/rejects")
         finally:
-            parsed.unpersist()
+            sp.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process)

@@ -22,11 +22,10 @@ def _results(df):
     )
 
 
-def test_committed_index_serving_matches_lazy(spark, sf_dir, tmp_path):
+def _check_serving_matches_lazy(spark, emb, cfg):
     """Serving from the committed index == pq_refine_topk from scratch
-    on the same corpus — the text_bm25_indexed equivalence pattern."""
-    emb = _emb(spark, sf_dir)
-    cfg = aidx.AnnIndexConfig(out_root=str(tmp_path / "aidx"), run_id="a1")
+    on the same corpus and the same coarse centroids — the
+    text_bm25_indexed equivalence pattern."""
     res = aidx.run_index(spark, emb, cfg)
     assert set(res["committed"]) == {"centroids", "codebooks", "codes", "vectors"}
     assert res["cells"] == cfg.k_cells
@@ -35,10 +34,14 @@ def test_committed_index_serving_matches_lazy(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 8)
     served = aidx.query_index(spark, cfg, queries)
 
+    if cfg.train_centroids:
+        cents = sim.ivf_train(emb, k=cfg.k_cells, iters=cfg.pq_iters)
+    else:
+        cents = sim.make_anchors(emb, cfg.k_cells)
     cb = sim.pq_train(emb, m=cfg.pq_m, ksub=cfg.pq_ksub, iters=cfg.pq_iters)
     lazy = sim.pq_refine_topk(
         emb, queries, cb, k=cfg.final_k, refine_r=cfg.refine_r,
-        centroids=sim.make_anchors(emb, cfg.k_cells), nprobe=cfg.nprobe,
+        centroids=cents, nprobe=cfg.nprobe,
     )
     assert _results(served) == _results(lazy)
     # rank contract: contiguous 1..k per query
@@ -47,6 +50,20 @@ def test_committed_index_serving_matches_lazy(spark, sf_dir, tmp_path):
         per_q.setdefault(qid, []).append(rank)
     for ranks in per_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
+
+
+def test_committed_index_serving_matches_lazy(spark, sf_dir, tmp_path):
+    cfg = aidx.AnnIndexConfig(out_root=str(tmp_path / "aidx"), run_id="a1")
+    _check_serving_matches_lazy(spark, _emb(spark, sf_dir), cfg)
+
+
+def test_committed_index_serving_matches_lazy_trained(spark, sf_dir, tmp_path):
+    """Same equality with Lloyd-trained coarse centroids: the committed
+    codes table assigns cells with ivf_assign over ivf_train output."""
+    cfg = aidx.AnnIndexConfig(
+        out_root=str(tmp_path / "aidx_t"), run_id="a1t", train_centroids=True
+    )
+    _check_serving_matches_lazy(spark, _emb(spark, sf_dir), cfg)
 
 
 def test_index_resume_skips_committed_steps(spark, sf_dir, tmp_path):

@@ -1,4 +1,4 @@
-"""Grok compiler: expansion, typing, and native/pandas/SQL parity."""
+"""Grok compiler: expansion, typing, and native/SQL parity."""
 
 import re
 
@@ -48,10 +48,10 @@ def test_rules_share_one_pattern():
     assert rules[1].dtype == "long"
 
 
-def test_native_pandas_sql_parity(spark):
-    """The same grok rule set through the native codegen path, the
-    Arrow pandas path, and DuckDB's RE2 regexp_extract must agree on a
-    fixture with matches, partial text, sentinels, and misses."""
+def test_native_sql_parity(spark):
+    """The same grok rule set through the native codegen path and
+    DuckDB's RE2 regexp_extract must agree on a fixture with matches,
+    partial text, sentinels, and misses."""
     import duckdb
 
     expr = (
@@ -69,11 +69,6 @@ def test_native_pandas_sql_parity(spark):
     cols = ["etype", "eid", "par", "n", "body"]
 
     nat = [tuple(r) for r in parse_op.parse(df, rules=rules).select(*cols).collect()]
-    pdn = [
-        tuple(r)
-        for r in parse_op.parse(df, rules=rules, use_pandas=True).select(*cols).collect()
-    ]
-    assert nat == pdn
 
     regex, _ = G.compile_grok(expr)
     con = duckdb.connect()
@@ -104,7 +99,7 @@ def test_required_typed_field_gates_parse_ok(spark):
 # ---------------------------------------------------------------- expr rules
 class TestExprRules:
     """kind='expr' extraction: computed/conditional values over earlier
-    captures, fused into the same projection (native + pandas paths)."""
+    captures, fused into the same projection."""
 
     def _rules(self, parse_op):
         return [
@@ -148,20 +143,6 @@ class TestExprRules:
         out = parse_op.parse(self._fixture(spark), rules=self._rules(parse_op))
         self._check(out.collect())
 
-    def test_expr_pandas_matches_native(self, spark):
-        from otel2pv_spark.operators import parse as parse_op
-
-        native = parse_op.parse(
-            self._fixture(spark), rules=self._rules(parse_op)
-        )
-        pandas = parse_op.parse(
-            self._fixture(spark), rules=self._rules(parse_op), use_pandas=True
-        )
-        cols = ["id", "a_or_b", "label", "n2"]
-        assert sorted(map(tuple, native.select(*cols).collect())) == sorted(
-            map(tuple, pandas.select(*cols).collect())
-        )
-
     def test_expr_fuses_into_one_projection(self, spark):
         """Native path: captures + expr columns execute in ONE
         WholeStageCodegen span over the scan — a single pass per row
@@ -204,29 +185,25 @@ class TestExprRules:
             with pytest.raises(ValueError, match="expr rule"):
                 parse_op.parse(self._fixture(spark), rules=rules).collect()
 
-    def test_pandas_capture_cannot_source_expr(self, spark):
-        """A capture rule sourcing an expr output is rejected in the
-        pandas path (the UDF cannot see JVM-computed columns)."""
-        import pytest
-
+    def test_capture_can_source_expr(self, spark):
+        """A capture rule may read an earlier expr rule's output: every
+        rule is one column of the same projection, applied in order."""
         from otel2pv_spark.operators import parse as parse_op
 
         rules = [
             parse_op.ExtractionRule("a", r"a=(\w+)"),
             parse_op.ExtractionRule("e", "concat(a, '!')", kind="expr"),
-            parse_op.ExtractionRule("bad", r"(\w+)", source="e"),
+            parse_op.ExtractionRule("w", r"(\w+)", source="e"),
         ]
-        with pytest.raises(ValueError, match="earlier rule"):
-            parse_op.parse(
-                self._fixture(spark), rules=rules, use_pandas=True
-            ).collect()
+        out = parse_op.parse(self._fixture(spark), rules=rules)
+        assert {r.id: r.w for r in out.collect()} == {1: "x", 2: "", 3: "yy"}
 
 
 def test_expr_forward_reference_rejected(spark):
     """An expr rule referencing a LATER rule's name is rejected up
-    front — in the pandas path it would bind to the capture while the
-    native path binds to a pre-existing input column (cross-path
-    drift; review-finding regression)."""
+    front — it would silently bind to a pre-existing input column of
+    that name, not the capture defined later (review-finding
+    regression)."""
     import pytest
 
     from otel2pv_spark.operators import parse as parse_op
@@ -236,6 +213,5 @@ def test_expr_forward_reference_rejected(spark):
         parse_op.ExtractionRule("lab", "concat('t:', a)", kind="expr"),
         parse_op.ExtractionRule("a", r"a=(\w+)"),
     ]
-    for up in (False, True):
-        with pytest.raises(ValueError, match="later rule"):
-            parse_op.parse(df, rules=rules, use_pandas=up).collect()
+    with pytest.raises(ValueError, match="later rule"):
+        parse_op.parse(df, rules=rules).collect()

@@ -56,6 +56,14 @@ def test_job_config_validation(tmp_path):
     }))
     with pytest.raises(job.ConfigError, match="group_applies"):
         job.load_config(str(bad))
+    # the parse stage has one implementation: the removed pandas switch
+    # fails loudly instead of being silently ignored
+    bad.write_text(json.dumps({
+        "input": {"events_dir": SF}, "out_root": "/tmp/x",
+        "parse": {"use_pandas": True},
+    }))
+    with pytest.raises(job.ConfigError, match="parse.use_pandas"):
+        job.load_config(str(bad))
 
 
 # ------------------------------------------------------------ http sink

@@ -466,8 +466,8 @@ def test_cluster_survivors_golden(spark):
 
 
 def test_cluster_survivors_string_ids(spark):
-    """Conversation-grain ids are strings: the MIN(struct(-s,-q,id))
-    argmax must break ties by LEXICOGRAPHIC lowest id and never negate
+    """Conversation-grain ids are strings: the survivor argmax must
+    break ties by LEXICOGRAPHIC lowest id and never negate
     the id column (the r4 form negated it, silently nulling strings)."""
     from otel2pv_spark.functions import dedup as ddp
 
@@ -488,6 +488,39 @@ def test_cluster_survivors_string_ids(spark):
     }
     # b and c tie at 9 -> lexicographic lowest (conv-b) wins; singleton keeps
     assert out == {"conv-a": False, "conv-b": True, "conv-c": False, "conv-z": True}
+
+
+def test_cluster_survivors_extreme_quality(spark):
+    """ADVICE regression: the survivor ordering must not negate quality
+    — ``-Long.MIN_VALUE`` overflows — and NaN must rank the way Spark
+    orders doubles (above every number), as a MAX over quality does."""
+    from otel2pv_spark.functions import dedup as ddp
+
+    lo = -(2**63)
+    clusters = spark.createDataFrame(
+        [(1, 10), (2, 10), (6, 60), (7, 60), (8, 80), (9, 80)],
+        "doc_id long, cluster_id long",
+    )
+    quality = spark.createDataFrame(
+        [(1, lo), (2, 0), (6, lo), (7, lo), (8, lo)],
+        "doc_id long, quality bigint",
+    )
+    out = {
+        r["doc_id"]: r["keep"]
+        for r in ddp.cluster_survivors(clusters, quality).collect()
+    }
+    # 0 beats MIN_VALUE; a MIN_VALUE tie breaks to the lowest id; a
+    # MIN_VALUE-scored member still beats an unscored one
+    assert out == {1: False, 2: True, 6: True, 7: False, 8: True, 9: False}
+
+    c2 = spark.createDataFrame(
+        [(3, 30), (4, 30), (5, 30)], "doc_id long, cluster_id long"
+    )
+    q2 = spark.createDataFrame(
+        [(3, 1.0), (4, float("nan")), (5, 2.0)], "doc_id long, quality double"
+    )
+    out2 = {r["doc_id"]: r["keep"] for r in ddp.cluster_survivors(c2, q2).collect()}
+    assert out2 == {3: False, 4: True, 5: False}
 
 
 def test_conv_dedup_clusters_golden(spark):

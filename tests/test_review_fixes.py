@@ -261,15 +261,16 @@ def test_dfs_budget_allows_many_missing_children(spark):
     assert out["r"][1] == "k"
 
 
-def test_pandas_grok_unknown_source_fails_loudly(spark):
+def test_unknown_source_fails_loudly(spark):
     import pytest as _pytest
+    from pyspark.errors import AnalysisException
 
     from otel2pv_spark.operators import parse as parse_op
 
     rules = [parse_op.ExtractionRule("a_val", r"A=(\d)", source="other_col")]
     tr = _mk_transcripts(spark, [("c1", 0, "A=1")])
-    with _pytest.raises(ValueError, match="other_col"):
-        parse_op.parse(tr, rules=rules, use_pandas=True)
+    with _pytest.raises(AnalysisException, match="other_col"):
+        parse_op.parse(tr, rules=rules)
 
 
 def test_sequence_null_parents_still_sequenceable(spark):

@@ -203,12 +203,36 @@ def test_semdedup_k_scales_with_corpus():
         sim.semdedup_k(0)
 
 
+def _ivf_assign_fold(df, centroids, id_col="vec_id", vec_col="embedding"):
+    """Reference for ``sim.ivf_assign``: the cosine argmax as a Spark
+    expression fold over a broadcast crossJoin (zip_with pads a
+    short/long vector with nulls, so its dot is null). ``try_divide``
+    makes it total: a zero denominator scores null instead of failing
+    the job under ANSI. ``max(struct(csim, -cid))`` ranks null lowest,
+    NaN highest and ties to the lowest centroid id."""
+    c = centroids.select(
+        F.col("anchor_rank").alias("cid"), F.col(vec_col).alias("cvec")
+    )
+    csim = F.try_divide(
+        sim._dot(F.col(vec_col), F.col("cvec")),
+        sim._norm(F.col(vec_col)) * sim._norm(F.col("cvec")),
+    )
+    return (
+        df.select(id_col, vec_col)
+        .crossJoin(F.broadcast(c))
+        .select(id_col, "cid", csim.alias("csim"))
+        .groupBy(id_col)
+        .agg(F.max(F.struct("csim", (-F.col("cid")).alias("ncid"))).alias("b"))
+        .select(id_col, (-F.col("b.ncid")).cast("int").alias("cluster"))
+    )
+
+
 def test_ivf_assign_vectorized_bit_identical(spark):
-    """The Arrow/numpy assignment fast path must be BIT-identical to
-    the expression path: same left-to-right fold roundings, same
+    """The Arrow/numpy assignment kernel must be BIT-identical to the
+    expression fold: same left-to-right fold roundings, same
     first-maximum (lowest-cid) tie-break — across float32 inputs,
-    exact cosine ties (scaled copies), and a deliberately adversarial
-    irrational-ish value mix."""
+    exact cosine ties (scaled copies), an adversarial value mix, and
+    eight edge vectors that must neither fail the job nor differ."""
     import math
 
     rows = [
@@ -227,15 +251,27 @@ def test_ivf_assign_vectorized_bit_identical(spark):
     ]
     # exact-tie pair: vec 1000 is a scaled copy of vec 0
     rows.append((1000, [x * 3.0 for x in rows[0][1]]))
-    df32 = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    df64 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for df in (df32, df64):
-        cents = sim.ivf_train(df, k=7, iters=2)
-        slow = sim.ivf_assign(df, cents)
-        fast = sim.ivf_assign(df, cents, vectorized=True)
-        assert sorted(map(tuple, slow.collect())) == sorted(
-            map(tuple, fast.collect())
-        )
+    edges = [
+        (2000, None),
+        (2001, []),
+        (2002, [0.5, 0.25]),                    # short
+        (2003, [0.5, 0.25, 1.0, 2.0, 3.0]),     # long
+        (2004, [0.0, 0.0, 0.0, 0.0]),           # zero norm
+        (2005, [0.5, float("nan"), 1.0, 2.0]),  # NaN element
+        (2006, [0.5, None, 1.0, 2.0]),          # null element
+        (2007, [0.3, -0.2, 1.5, 0.75]),         # normal
+    ]
+    for typ in ("float", "double"):
+        schema = f"vec_id long, embedding array<{typ}>"
+        clean = spark.createDataFrame(rows, schema)
+        df = spark.createDataFrame(rows + edges, schema)
+        cents = sim.ivf_train(clean, k=7, iters=2)
+        fast = {r.vec_id: r.cluster for r in sim.ivf_assign(df, cents).collect()}
+        ref = {r.vec_id: r.cluster for r in _ivf_assign_fold(df, cents).collect()}
+        assert fast == ref
+        assert len(fast) == len(rows) + len(edges)
+        # every bad vector lands in the lowest centroid id
+        assert {fast[i] for i in range(2000, 2007)} == {0}
 
 
 def test_semantic_dedup_derived_k_matches_explicit(spark):

@@ -53,14 +53,13 @@ def test_stream_pipeline_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    got = (
-        spark.read.parquet(f"{out}/sequenced_events")
-        .select("conv_id", "turn_idx", "event_id", "previous_event_ids", "sink")
+    # every output column, not a subset: the stream runs the batch DAG
+    got = spark.read.parquet(f"{out}/sequenced_events").select(
+        *pipeline.OUTPUT_COLS
     )
     want, _ = pipeline.build_sequenced(
         tr, datagen.tool_meta(spark), datagen.role_meta(spark), pipeline.PipelineConfig()
     )
-    want = want.select("conv_id", "turn_idx", "event_id", "previous_event_ids", "sink")
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

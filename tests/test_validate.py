@@ -329,8 +329,9 @@ class TestReferenceValidatorSemantics:
         it fell out of every exact branch; (2) a 30-digit JSON integer
         instance must FAIL the row, not crash the job with
         INVALID_VARIANT_CAST (SQL & does not short-circuit, so the
-        numeric branches must try_cast); (3) enum values at or beyond
-        1e20 exceed the exact range and fail loudly at compile."""
+        numeric branches must try_cast); (3) an enum value at or beyond
+        1e20 that no double represents exactly fits no exact branch and
+        fails loudly at compile."""
         import pytest
 
         big = 2**64  # 18446744073709551616 — DECIMAL(20,0) instance
@@ -346,8 +347,25 @@ class TestReferenceValidatorSemantics:
 
         with pytest.raises(ValueError, match="exact comparison range"):
             validate_op.validate_json(
-                df, "payload", {"properties": {"n": {"enum": [10**20]}}}
+                df, "payload", {"properties": {"n": {"enum": [10**20 + 1]}}}
             )
+
+    def test_enum_double_exact_beyond_decimal_range(self, spark):
+        """ADVICE regression: 1e20 and larger double-exact values are
+        valid enum members. They must compile (not raise) and match
+        equal DOUBLE instances; only the DECIMAL-exact branch skips
+        them."""
+        schema = {"properties": {"n": {"enum": [1e20, -(10**21), 2.5e30]}}}
+        df = spark.createDataFrame(
+            [(1, '{"n": 1e20}'), (2, '{"n": -1e21}'), (3, '{"n": 2.5e30}'),
+             (4, '{"n": 1e21}'), (5, '{"n": 3}')],
+            "id int, payload string",
+        )
+        out = validate_op.validate_json(df, "payload", schema)
+        got = {r.id: r.schema_error for r in out.collect()}
+        assert got == {
+            1: None, 2: None, 3: None, 4: "$.n: enum", 5: "$.n: enum"
+        }
 
     def test_container_enum_value_raises_at_compile(self, spark):
         """Advice finding: array/object enum values fell into the
