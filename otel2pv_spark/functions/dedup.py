@@ -148,13 +148,12 @@ def minhash_lsh_candidates(
     n: int = 3,
     num_hashes: int = 12,
     bands: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
     Band key = md5 of the band's minhash values (in hash-index order).
 
-    ``materialize`` snapshots the band table (``snapshot()``)
-    before the self-join. Without it the shingle→minhash→band subtree
+    The band table is snapshotted (``snapshot()``) before the
+    self-join. Without it the shingle→minhash→band subtree
     — the dominant cost — executes TWICE: AQE's stage planner does not
     reuse identical exchanges across self-join sides (measured: plan
     shows two full scans and zero ReusedExchange under
@@ -162,20 +161,16 @@ def minhash_lsh_candidates(
     fires). Materializing once is also the production shape — the band
     table IS the stored index (see :func:`minhash_band_table`); a real
     deployment writes it to a table and self-joins the stored copy.
-    Measured 1.8x on the sf0.1 bench. Pass ``materialize=False`` to
-    keep the plan fully lazy (e.g. under a caller-managed cache)."""
+    Measured 1.8x on the sf0.1 bench."""
     banded = minhash_band_table(df, id_col, text_col, n, num_hashes, bands)
-    return _candidates_from_bands(banded, id_col, materialize)
+    return _candidates_from_bands(banded, id_col)
 
 
-def _candidates_from_bands(
-    banded: DataFrame, id_col: str, materialize: bool = True
-) -> DataFrame:
+def _candidates_from_bands(banded: DataFrame, id_col: str) -> DataFrame:
     """Distinct candidate pairs from a band table via the bucket
-    self-join (see minhash_lsh_candidates for the materialize
-    rationale)."""
-    if materialize:
-        banded = banded.transform(snapshot)
+    self-join over its snapshot (see minhash_lsh_candidates for why
+    the band table is snapshotted)."""
+    banded = banded.transform(snapshot)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -352,7 +347,6 @@ def conv_minhash_lsh_candidates(
     n: int = 3,
     num_hashes: int = 12,
     bands: int = 3,
-    materialize: bool = True,
     block_size: int | None = None,
 ) -> DataFrame:
     """Conversation-level near-dup candidates (templated / replayed
@@ -365,7 +359,7 @@ def conv_minhash_lsh_candidates(
         tr, conv_col, idx_col, text_col, n, num_hashes, block_size
     )
     banded = _band_table_from_wide(wide, conv_col, num_hashes, bands)
-    return _candidates_from_bands(banded, conv_col, materialize)
+    return _candidates_from_bands(banded, conv_col)
 
 
 def simhash(

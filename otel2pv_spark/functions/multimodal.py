@@ -1,11 +1,13 @@
 """Multimodal column plumbing — image/audio/video as opaque binary
 columns with typed metadata.
 
-The container has no image/audio decode libraries, so the decode step
-itself is STUBBED (deterministic fake, clearly marked); everything
-Spark-side — binary column handling, metadata schema, Arrow batch shape
-through mapInPandas, partitioning — is real and tested. Swapping the
-fake for PIL/torchaudio is a one-function change at the marked point.
+No image/audio decode library is a dependency, so each decode kernel
+is a deterministic stub (md5 over the media bytes) that a SQL oracle
+reproduces; everything Spark-side — binary column handling, metadata
+schema, Arrow batch shape through mapInPandas, partitioning — is real
+and tested. A real PIL/torchaudio decode replaces the stub in the
+kernel body (``_fake_features`` for features, the md5 lines in
+``resize_media``/``sample_frames``/``media_phash``).
 
 Scale shape: media bytes travel in their own column so column pruning
 keeps them out of every stage that doesn't decode; decode runs in
@@ -49,16 +51,6 @@ def attach_fake_media(df: DataFrame, id_col="doc_id", text_col="text") -> DataFr
     )
 
 
-def decode_image(media_bytes: bytes, media_format: str):
-    """REAL decode entry point — intentionally unimplemented in this
-    container (no PIL/libvips). The pipeline never calls it unless
-    ``fake=False`` is requested."""
-    raise NotImplementedError(
-        "image decode requires an imaging library not present in this "
-        "environment; use extract_features(fake=True) (deterministic stub)"
-    )
-
-
 def _fake_features(media: bytes, width: int, height: int) -> list[float]:
     """Deterministic stand-in for a decoded-image feature vector:
     4 floats derived from the byte content + dims. Same signature and
@@ -76,7 +68,7 @@ def _fake_features(media: bytes, width: int, height: int) -> list[float]:
     ]
 
 
-def extract_features(df: DataFrame, id_col="doc_id", fake: bool = True) -> DataFrame:
+def extract_features(df: DataFrame, id_col="doc_id") -> DataFrame:
     """mapInPandas feature extraction over media batches. The Arrow
     batch is the unit of Python work; schema and partitioning are the
     production shape regardless of the stubbed kernel."""
@@ -84,17 +76,12 @@ def extract_features(df: DataFrame, id_col="doc_id", fake: bool = True) -> DataF
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake:
-                feats = [
-                    _fake_features(m, w, h)
-                    for m, w, h in zip(
-                        pdf["media"], pdf["media_width"], pdf["media_height"]
-                    )
-                ]
-            else:
-                feats = [
-                    decode_image(m, f) for m, f in zip(pdf["media"], pdf["media_format"])
-                ]
+            feats = [
+                _fake_features(m, w, h)
+                for m, w, h in zip(
+                    pdf["media"], pdf["media_width"], pdf["media_height"]
+                )
+            ]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -108,13 +95,12 @@ def extract_features(df: DataFrame, id_col="doc_id", fake: bool = True) -> DataF
 
 
 def resize_media(
-    df: DataFrame, target_w: int, target_h: int, id_col="doc_id", fake: bool = True
+    df: DataFrame, target_w: int, target_h: int, id_col="doc_id"
 ) -> DataFrame:
     """mapInPandas resize: same row count, new media bytes + updated
-    dims. The fake kernel derives output bytes deterministically from
+    dims. The stub kernel derives output bytes deterministically from
     (input bytes, target dims) — same signature, Arrow batch shape and
-    schema as a real PIL/libvips resize, which plugs in at the marked
-    point."""
+    schema as a real PIL/libvips resize, which replaces the md5 line."""
     out_schema = (
         f"{id_col} long, media binary, media_format string, "
         "media_width int, media_height int, media_n_bytes int"
@@ -122,17 +108,14 @@ def resize_media(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake:
-                # hex-of-bytes hashing so a SQL oracle can reproduce
-                # the fake output (see _fake_features)
-                resized = [
-                    hashlib.md5(
-                        (bytes(m).hex() + f"{target_w}x{target_h}").encode()
-                    ).digest()
-                    for m in pdf["media"]
-                ]
-            else:
-                resized = [decode_image(m, f) for m, f in zip(pdf["media"], pdf["media_format"])]
+            # hex-of-bytes hashing so a SQL oracle can reproduce the
+            # stub output (see _fake_features)
+            resized = [
+                hashlib.md5(
+                    (bytes(m).hex() + f"{target_w}x{target_h}").encode()
+                ).digest()
+                for m in pdf["media"]
+            ]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -149,12 +132,12 @@ def resize_media(
 
 
 def sample_frames(
-    df: DataFrame, n_frames: int, id_col="doc_id", fake: bool = True
+    df: DataFrame, n_frames: int, id_col="doc_id"
 ) -> DataFrame:
     """mapInPandas frame sampling — the one-to-many media op (a video
     row fans out to ``n_frames`` frame rows, each with its own bytes).
-    The fake kernel derives frame bytes from (video bytes, frame index);
-    a real ffmpeg/torchvision sampler plugs in at the marked point.
+    The stub kernel derives frame bytes from (video bytes, frame index);
+    a real ffmpeg/torchvision sampler replaces the md5 line.
     Output rows stay inside the input's partition (no shuffle)."""
     out_schema = f"{id_col} long, frame_idx int, frame binary, frame_n_bytes int"
 
@@ -163,12 +146,9 @@ def sample_frames(
             ids, idxs, frames = [], [], []
             for did, m in zip(pdf[id_col], pdf["media"]):
                 for i in range(n_frames):
-                    if fake:
-                        fb = hashlib.md5(
-                            (bytes(m).hex() + f"frame{i}").encode()
-                        ).digest()
-                    else:
-                        fb = decode_image(m, f"frame{i}")
+                    fb = hashlib.md5(
+                        (bytes(m).hex() + f"frame{i}").encode()
+                    ).digest()
                     ids.append(did)
                     idxs.append(i)
                     frames.append(fb)
@@ -187,22 +167,18 @@ def sample_frames(
 PHASH_BANDS = 4  # 64-bit hash as 4 x 16-bit band columns
 
 
-def media_phash(df: DataFrame, id_col="doc_id", fake: bool = True) -> DataFrame:
+def media_phash(df: DataFrame, id_col="doc_id") -> DataFrame:
     """Perceptual 64-bit media hash, stored as ``PHASH_BANDS`` 16-bit
     band columns (band0..band3) — the storage layout multi-index
     Hamming search needs, and sign-safe in every engine (a full 64-bit
     value can't live in a signed BIGINT; four 16-bit slices can).
 
-    The REAL kernel is a DCT pHash over the decoded image (a
-    mapInPandas batch over :func:`decode_image`, plugging in at the
-    same marked point as :func:`extract_features`); this container has
-    no decode libs, so the fake derives the 64 bits from
-    md5(hex(bytes)) in pure codegen — zero UDFs, and exactly
-    reproducible by a SQL oracle. The search structure downstream is
-    identical either way.
+    A real kernel is a DCT pHash over the decoded image (a mapInPandas
+    batch, like :func:`extract_features`); with no decode library, the
+    stub derives the 64 bits from md5(hex(bytes)) in pure codegen —
+    zero UDFs, and exactly reproducible by a SQL oracle. The search
+    structure downstream is identical either way.
     """
-    if not fake:
-        decode_image(b"", "phash")  # raises: real decode unavailable here
     h = F.md5(F.hex(F.col("media")))
     bands = [
         F.conv(F.substring(h, 1 + 4 * i, 4), 16, 10)

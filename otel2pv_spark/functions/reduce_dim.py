@@ -51,11 +51,11 @@ JL_SALT = "jl-v1"
 
 
 def _quantized(df: DataFrame, vec_col: str, q: int) -> DataFrame:
-    """round(x * q) as a bigint array, computed ONCE, JVM-side — both
-    Gram methods consume this same column, so they sum bit-identical
-    integers by construction (no numpy re-emulation of F.round's
-    HALF_UP decimal semantics, which floor(|x|+0.5) gets wrong for
-    doubles like 2^-15 - 2^-68 where the +0.5 add itself rounds up)."""
+    """round(x * q) as a bigint array, computed ONCE, JVM-side, so the
+    Gram kernel sums exactly the integers the SQL oracle derives (no
+    numpy re-emulation of F.round's HALF_UP decimal semantics, which
+    floor(|x|+0.5) gets wrong for doubles like 2^-15 - 2^-68 where the
+    +0.5 add itself rounds up)."""
     return df.select(
         F.transform(
             F.col(vec_col), lambda x: F.round(x.cast("double") * q).cast("bigint")
@@ -68,7 +68,6 @@ def covariance_moments(
     vec_col: str = "embedding",
     q: int = DEFAULT_Q,
     round_to: int = 8,
-    method: str = "arrow",
 ) -> DataFrame:
     """Upper-triangle covariance matrix of the embedding column.
 
@@ -81,25 +80,20 @@ def covariance_moments(
     TRUE one-pass / one-exchange: each (i, j) cell carries its own
     first moments (sum x_i, sum x_j) alongside the product sum, so no
     second scan and no join is ever needed; only per-batch/partition
-    x d(d+1)/2 partial rows shuffle.
+    x d(d+1)/2 partial rows shuffle. The sums are a per-Arrow-batch
+    integer Gram matrix, one numpy matmul in mapInPandas — the
+    construction Spark MLlib's RowMatrix uses (per-partition BLAS
+    gramian + tree merge), ~35x the throughput of a codegen explode
+    -> hash aggregate at d=64, since the d^2 inner loop runs in C.
 
-    ``method``:
-    - ``"arrow"`` (default): per-Arrow-batch integer Gram matrix via
-      one numpy matmul in mapInPandas — the construction Spark MLlib's
-      RowMatrix uses (per-partition BLAS gramian + tree merge), ~35x
-      the throughput of the expression path at d=64 since the d^2
-      inner loop runs in C instead of per-cell codegen structs.
-    - ``"sql"``: pure whole-stage-codegen explode -> hash aggregate,
-      zero Python. Identical output bit-for-bit (same quantized
-      integers feed the same final expression).
+    Null input is total: a null vector adds to no cell and is not
+    counted in ``n``; a null element counts as 0 and its row still
+    counts. That is SQL's explode/sum/count(1) semantics, so the
+    result equals the explode form bit for bit wherever a cell has at
+    least one non-null product (SQL's sum of no values is null, this
+    kernel's is 0). Vectors must share one length.
     """
-    dfq = _quantized(df, vec_col, q)
-    if method == "arrow":
-        sums = _gram_arrow(dfq)
-    elif method == "sql":
-        sums = _gram_sql(dfq)
-    else:
-        raise ValueError(f"unknown method: {method!r}")
+    sums = _gram_arrow(_quantized(df, vec_col, q))
     qd = float(q)
     mean_i = F.col("s_i").cast("double") / F.col("n") / qd
     mean_j = F.col("s_j").cast("double") / F.col("n") / qd
@@ -122,7 +116,9 @@ def _gram_arrow(dfq: DataFrame) -> DataFrame:
     """Partial integer Gram sums per Arrow batch, merged in one tiny
     map-side-combined aggregate: (i, j, s, s_i, s_j, n) per cell.
     Input is the already-quantized ``_qv`` bigint-array column — the
-    kernel only matmuls, it never rounds."""
+    kernel only matmuls, it never rounds. Null vectors are dropped and
+    null elements zeroed JVM-side first: pandas would otherwise hand
+    the kernel a float array whose NaN casts to an arbitrary int64."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -158,45 +154,16 @@ def _gram_arrow(dfq: DataFrame) -> DataFrame:
                 }
             )
 
-    partials = dfq.mapInPandas(kernel, schema=schema)
+    zero = F.lit(0).cast("bigint")
+    clean = dfq.filter(F.col("_qv").isNotNull()).select(
+        F.transform("_qv", lambda x: F.coalesce(x, zero)).alias("_qv")
+    )
+    partials = clean.mapInPandas(kernel, schema=schema)
     return partials.groupBy("i", "j").agg(
         F.sum("p").alias("s"),
         F.sum("a").alias("s_i"),
         F.sum("b").alias("s_j"),
         F.sum("c").alias("n"),
-    )
-
-
-def _gram_sql(dfq: DataFrame) -> DataFrame:
-    """Explode-into-aggregate Gram sums, zero Python in the loop.
-    Input is the already-quantized ``_qv`` column (materialized once
-    per row — referencing the transform expression inside the pair
-    lambdas would re-evaluate it per OUTER element)."""
-    qv = F.col("_qv")
-    cells = F.flatten(
-        F.transform(
-            qv,
-            lambda xi, i: F.transform(
-                F.slice(qv, i + 1, F.size(qv) - i),
-                lambda xj, dj: F.struct(
-                    i.alias("i"),
-                    (i + dj).alias("j"),
-                    (xi * xj).alias("p"),
-                    xi.alias("a"),
-                    xj.alias("b"),
-                ),
-            ),
-        )
-    )
-    return (
-        dfq.select(F.explode(cells).alias("c"))
-        .groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j"))
-        .agg(
-            F.sum("c.p").alias("s"),
-            F.sum("c.a").alias("s_i"),
-            F.sum("c.b").alias("s_j"),
-            F.count(F.lit(1)).alias("n"),
-        )
     )
 
 

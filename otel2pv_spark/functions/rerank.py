@@ -7,10 +7,10 @@ mapInPandas kernel; a final window over the ≤ m candidates per query
 picks the top-k. This is the standard retrieve-then-rerank shape a
 training-data / RAG pipeline needs next to the ANN ops.
 
-The cross-encoder model runtime is not present in this container, so
-the scoring kernel is stubbed behind ``fake=True`` with a
-deterministic md5-derived score both engines reproduce (the same
-contract as functions/multimodal.py's fake decode kernels) — the
+No cross-encoder model runtime is a dependency, so the scoring kernel
+is ``fake_ce_score``: a deterministic md5-derived score both engines
+reproduce (the same contract as functions/multimodal.py's stub decode
+kernels), and the one function a real model replaces — the
 Spark-side plumbing (candidate-join shape, broadcast query side, Arrow
 batch signature, bounded final top-k) is real and tested.
 
@@ -65,7 +65,6 @@ def crossencoder_rerank(
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fake: bool = True,
 ) -> DataFrame:
     """Rerank per-query candidates with a (stubbed) cross-encoder.
 
@@ -76,12 +75,6 @@ def crossencoder_rerank(
     query; ce_score rounded to 6 dp for display, ranked on the exact
     double (tie-broken by id) so both engines order identically.
     """
-    if not fake:
-        raise NotImplementedError(
-            "real cross-encoder scoring needs a model runtime not "
-            "present in this container; plug a scorer into the kernel "
-            "below and pass fake=True semantics through your own salt"
-        )
     spark = docs.sparkSession
     qdf = spark.createDataFrame(
         list(queries), "query_id string, query_text string"

@@ -298,13 +298,31 @@ def ivf_train(
     lazy plan re-reads the corpus once per iteration (iters is small;
     persist the input upstream if scans are the bottleneck). Returns
     (anchor_rank, vec) shaped exactly like ``make_anchors`` so the
-    trained centroids plug into ivf_assign/ivf_topk unchanged."""
-    cent = make_anchors(df, k, id_col, vec_col)
-    head = df.select(vec_col).head()
-    if head is None:
-        raise ValueError("ivf_train: empty corpus")
-    dim = len(head[0])
-    v = df.select(
+    trained centroids plug into ivf_assign/ivf_topk unchanged.
+
+    Total on bad input: anchors, assignment and means use only vectors
+    ``ivf_assign`` scores for real — non-null, every element finite and
+    non-null, non-zero norm, and of the corpus dimension, which is the
+    most common length among such vectors (ties → the shorter). Any
+    other vector is left out of training, so it can neither fail the
+    job nor poison a mean."""
+    # abs(x) < inf also drops NaN: Spark orders NaN above +inf
+    good = df.filter(
+        F.forall(vec_col, lambda x: x.isNotNull() & (F.abs(x) < float("inf")))
+        & F.exists(vec_col, lambda x: x != 0)
+    )
+    top = (
+        good.groupBy(F.size(vec_col).alias("dim"))
+        .count()
+        .orderBy(F.desc("count"), "dim")
+        .head()
+    )
+    if top is None:
+        raise ValueError("ivf_train: no usable vector in the corpus")
+    dim = top["dim"]
+    good = good.filter(F.size(vec_col) == dim)
+    cent = make_anchors(good, k, id_col, vec_col)
+    v = good.select(
         id_col, F.transform(vec_col, lambda x: x.cast("double")).alias(vec_col)
     )
     for _ in range(iters):

@@ -65,13 +65,13 @@ from ..operators.route import REJECT_SINK_PREFIX
 
 def _bucketed_ident(table: str, root: str) -> str:
     """Session-catalog identifier for a ``write_bucketed`` table — ONE
-    definition shared by write/append/register/read so the
-    sanitization can never drift between them (a mismatch silently
-    reads/writes a differently-named session table). The catalog ROOT
-    is hashed into the name: a table-name-only ident made two
-    concurrent keyed streams over different out_roots race on one
-    global identifier, cross-appending each other's state (review
-    finding) — per-root idents make them disjoint by construction."""
+    definition shared by write/register/read so the sanitization can
+    never drift between them (a mismatch silently reads/writes a
+    differently-named session table). The catalog ROOT is hashed into
+    the name: with a table-name-only ident, two Catalogs over
+    different roots in one session would share one global identifier
+    and read each other's table — per-root idents make them disjoint
+    by construction."""
     import hashlib
 
     h = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:8]
@@ -385,7 +385,6 @@ class _CatalogBase:
         self,
         spark: SparkSession,
         root: str,
-        fmt: str = "parquet",
         keep_snapshots: int = 0,
         stats_columns: tuple[str, ...] | list[str] | None = None,
     ):
@@ -414,7 +413,6 @@ class _CatalogBase:
         # root). abspath also makes path() stable if the caller later
         # chdirs.
         self.root = os.path.abspath(root)
-        self.fmt = fmt
         self.keep_snapshots = keep_snapshots
         self.stats_columns = tuple(stats_columns or ())
         os.makedirs(self.root, exist_ok=True)
@@ -652,7 +650,7 @@ class _CatalogBase:
         path = self.path(table + ".bucketed")
         shutil.rmtree(path, ignore_errors=True)
         w = (
-            df.write.format(self.fmt)
+            df.write.format("parquet")
             .mode("overwrite")
             .bucketBy(n_buckets, bucket_by)
         )
@@ -700,7 +698,7 @@ class _CatalogBase:
             ):
                 return ident
             self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        schema = self.spark.read.format(self.fmt).load(path).schema
+        schema = self.spark.read.parquet(path).schema
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -709,65 +707,12 @@ class _CatalogBase:
         )
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {ident} ({cols}) "
-            f"USING {self.fmt} "
+            "USING parquet "
             f"CLUSTERED BY ({bucket_by}) {sorted_sql}"
             f"INTO {int(n_buckets)} BUCKETS "
             f"LOCATION '{path}'"
         )
         return ident
-
-    def append_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_by: str,
-        n_buckets: int,
-        sort_by: tuple[str, ...] | None = None,
-    ) -> str:
-        """Append a batch to a ``write_bucketed`` table, preserving the
-        bucket layout (each new file lands in its hash bucket, sorted
-        within itself) — the accumulating-state shape: a keyed stream's
-        ``turns`` accumulator appends each trigger's novel rows and
-        every later equi-join / groupBy on the bucket key stays
-        exchange-free (per-bucket file sets merge-sort at read, no
-        re-shuffle). The spec MUST match the existing table's; Spark
-        rejects a mismatch loudly. Commit protocol is the Spark file
-        committer's (task-temp + job commit) rather than the Catalog
-        swap — an interrupted append can surface a PREFIX of the batch,
-        so appenders must be key-idempotent (the keyed stream's
-        anti-join re-derives exactly the missing keys on replay).
-        Iceberg analog: a fanout append into a bucket(N, key)
-        partition spec."""
-        ident = _bucketed_ident(table, self.root)
-        w = (
-            df.write.format(self.fmt)
-            .mode("append")
-            .bucketBy(int(n_buckets), bucket_by)
-        )
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.saveAsTable(ident)
-        return ident
-
-    def bucketed_exists(self, table: str) -> bool:
-        """True when the bucketed layout holds COMMITTED data files —
-        part files outside the committer's ``_temporary`` staging dir.
-        A bare isdir() would be wedged forever by a crash during the
-        first write (the dir exists with only _temporary inside: the
-        append path then fails schema inference on every restart,
-        review finding), while a crash during a LATER append keeps the
-        committed files and correctly resumes down the append path.
-        The session-catalog registration may still need
-        ``register_bucketed`` after a restart."""
-        base = self.path(table + ".bucketed")
-        if not os.path.isdir(base):
-            return False
-        for _root, dirs, files in os.walk(base):
-            if "_temporary" in dirs:
-                dirs.remove("_temporary")
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
 
     def read_bucketed(self, table: str) -> DataFrame:
         """Read a table written by ``write_bucketed`` WITH its bucket
@@ -1917,7 +1862,6 @@ class ManifestCatalog(_CatalogBase):
 def Catalog(
     spark: SparkSession,
     root: str,
-    fmt: str = "parquet",
     keep_snapshots: int = 0,
     strategy: str | None = None,
     stats_columns: tuple[str, ...] | list[str] | None = None,
@@ -1930,12 +1874,12 @@ def Catalog(
     strategy = strategy or os.environ.get("SPARK_GRAFT_CATALOG", "posix")
     if strategy == "manifest":
         return ManifestCatalog(
-            spark, root, fmt=fmt, keep_snapshots=keep_snapshots,
+            spark, root, keep_snapshots=keep_snapshots,
             stats_columns=stats_columns,
         )
     if strategy == "posix":
         return PosixCatalog(
-            spark, root, fmt=fmt, keep_snapshots=keep_snapshots,
+            spark, root, keep_snapshots=keep_snapshots,
             stats_columns=stats_columns,
         )
     raise ValueError(

@@ -123,7 +123,6 @@ def run_stream_pipeline_keyed(
     out_root: str,
     checkpoint: str,
     available_now: bool = False,
-    bucket_state: int | None = None,
 ):
     """The cross-batch micro-batch pipeline: row-for-row equal to the
     batch ``run()`` at EVERY batch boundary, even when a conversation's
@@ -147,22 +146,7 @@ def run_stream_pipeline_keyed(
     double-merging. Scale shape: the recompute scans
     only the touched conversations (semi-join; Iceberg conv-bucket
     pruning at the real target — the full-history read here is the
-    parquet stand-in's cost, not the design's).
-
-    ``bucket_state`` (r4 verdict next #5): maintain the ``turns``
-    accumulator as a conv_id-HASH-BUCKETED table (`Catalog.
-    write_bucketed`/`append_bucketed`, sorted by (conv_id, turn_idx))
-    instead of plain Catalog parquet. The recompute's
-    groupBys/windows on conv_id then run with ZERO Exchange off the
-    stored layout (asserted in test_streaming) — the conv_id shuffle
-    is paid once per trigger's novel rows at append time, never again
-    over the whole accumulated history each batch. This is the
-    Iceberg bucket(N, conv_id) write-distribution shape. Trade-off
-    (documented on append_bucketed): the bucketed append uses the
-    Spark file committer, not the Catalog atomic swap — an
-    interrupted append can surface a prefix of the batch, which the
-    per-key anti-join makes idempotent on replay (first version of a
-    key still wins exactly once)."""
+    parquet stand-in's cost, not the design's)."""
     import uuid as _uuid
 
     from ..plans import pipeline as pl
@@ -203,38 +187,16 @@ def run_stream_pipeline_keyed(
         if batch.isEmpty():
             return
         cat = Catalog(spark, out_root)
-        if bucket_state:
-            sort_cols = ("conv_id", "turn_idx")
-            if cat.bucketed_exists("turns"):
-                # re-attach (no-op when already registered here; fixes
-                # a stale same-name registration from another root)
-                cat.register_bucketed(
-                    "turns", "conv_id", bucket_state, sort_by=sort_cols
-                )
-                novel = batch.join(
-                    cat.read_bucketed("turns").select("conv_id", "turn_idx"),
-                    ["conv_id", "turn_idx"],
-                    "left_anti",
-                )
-                cat.append_bucketed(
-                    novel, "turns", "conv_id", bucket_state, sort_by=sort_cols
-                )
-            else:
-                cat.write_bucketed(
-                    batch, "turns", "conv_id", bucket_state, sort_by=sort_cols
-                )
-            turns = cat.read_bucketed("turns")
-        elif cat.exists("turns"):
+        if cat.exists("turns"):
             novel = batch.join(
                 cat.read("turns").select("conv_id", "turn_idx"),
                 ["conv_id", "turn_idx"],
                 "left_anti",
             )
             cat.append(novel, "turns")
-            turns = cat.read("turns")
         else:
             cat.write(batch, "turns")
-            turns = cat.read("turns")
+        turns = cat.read("turns")
         keys = batch.select("conv_id").distinct()
         pl.run_incremental(
             spark,

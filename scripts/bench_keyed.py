@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Keyed-stream throughput datapoint (r3 verdict #7).
+"""Keyed-stream throughput datapoint.
 
 The keyed cross-batch streaming twin (run_stream_pipeline_keyed) is
 correctness-asserted against the batch run() in test_streaming; this
@@ -7,20 +7,24 @@ script measures what that equality COSTS: drain the sf0.1 transcript
 table through K micro-batches that split every conversation
 mid-conversation (turn ranges per file, maxFilesPerTrigger=1), time the
 drain, and compare against the batch run() over the same input in the
-same session. Also reports the per-batch state growth: the `turns`
-accumulator table size after each batch (read back from the per-batch
-counts the process function logs) — the thing that grows with stream
-lifetime and that Iceberg conv-bucket pruning bounds per-batch work
-against at the real target.
+same session. Batch and stream runs alternate for ``ROUNDS`` rounds
+(batch first in even rounds, stream first in odd ones) and the table
+reports the min of each, so neither mode gets the warmer JIT. Every
+drain is checked against its round's batch run per conversation, on
+every ``OUTPUT_COLS`` column; a divergence aborts the run. Also
+reports the per-batch state growth of the `turns` accumulator — the
+thing that grows with stream lifetime and that Iceberg conv-bucket
+pruning bounds per-batch work against at the real target.
 
-Writes BENCH/STREAM.md and prints one JSON line. Run on a quiet guest:
-  SPARK_GRAFT_CPUS=16 python scripts/bench_keyed.py
+Writes BENCH/STREAM.md and prints one JSON line. Run on a quiet host:
+  SPARK_GRAFT_CPUS=4 BENCH_KEYED_ROUNDS=3 python scripts/bench_keyed.py
 """
 
 from __future__ import annotations
 
 import json
 import os
+import platform
 import shutil
 import sys
 import time
@@ -39,14 +43,25 @@ from otel2pv_spark.streaming import (  # noqa: E402
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+ROUNDS = int(os.environ.get("BENCH_KEYED_ROUNDS", "3"))
 # turn ranges per micro-batch file: every conversation splits across
 # ALL batches — the adversarial shape for a cross-batch keyed pipeline
 # (each batch touches every conversation and recomputes it over its
 # full accumulated history). The last slice is OPEN-ENDED so an input
 # with longer conversations can never silently lose turns from the
-# stream side (review finding: a hard cap only surfaced as a
-# 'twin diverged' assert after the full drain).
+# stream side (a hard cap only surfaced as a 'twin diverged' assert
+# after the full drain).
 SLICES = [(0, 3), (3, 5), (5, 7), (7, 9), (9, None)]
+
+
+def conv_fingerprints(df) -> dict:
+    """conv_id -> (rows, sum of row hashes over every OUTPUT_COLS
+    column): order-independent, one aggregate job."""
+    rows = df.groupBy("conv_id").agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*pipeline.OUTPUT_COLS).cast("decimal(38,0)")).alias("h"),
+    ).collect()
+    return {r["conv_id"]: (int(r["n"]), int(r["h"] or 0)) for r in rows}
 
 
 def main() -> None:
@@ -71,104 +86,103 @@ def main() -> None:
         )
         os.utime(f"{src}/part_{i}.parquet", (time.time() + i,) * 2)
 
-    # batch reference FIRST (also the warmup for codegen/JIT)
-    batch_out = os.path.join(work, "batch_out")
-    t0 = time.time()
-    pipeline.run(
-        spark, tr, pipeline.PipelineConfig(out_root=batch_out, run_id="ref")
-    )
-    batch_wall = time.time() - t0
+    def run_batch(r: int) -> float:
+        out = os.path.join(work, f"batch_out_{r}")
+        t0 = time.time()
+        pipeline.run(spark, tr, pipeline.PipelineConfig(out_root=out, run_id="ref"))
+        return time.time() - t0
 
-    stream_out = os.path.join(work, "stream_out")
-    t0 = time.time()
-    q = run_stream_pipeline_keyed(
-        read_transcripts_stream(spark, src, max_files_per_trigger=1),
-        datagen.tool_meta(spark), datagen.role_meta(spark),
-        stream_out, os.path.join(work, "ckpt"), available_now=True,
-    )
-    drained = q.awaitTermination(3600)
-    stream_wall = time.time() - t0
-    if not drained:
-        q.stop()
-        raise RuntimeError(
-            "keyed stream did not drain within 1h — refusing to record a "
-            "half-drained measurement"
+    def run_stream(r: int) -> float:
+        out = os.path.join(work, f"stream_out_{r}")
+        t0 = time.time()
+        q = run_stream_pipeline_keyed(
+            read_transcripts_stream(spark, src, max_files_per_trigger=1),
+            datagen.tool_meta(spark), datagen.role_meta(spark),
+            out, os.path.join(work, f"ckpt_{r}"), available_now=True,
         )
+        drained = q.awaitTermination(3600)
+        wall = time.time() - t0
+        if not drained:
+            q.stop()
+            raise RuntimeError(
+                "keyed stream did not drain within 1h — refusing to record "
+                "a half-drained measurement"
+            )
+        return wall
 
-    cat = Catalog(spark, stream_out)
+    batch_walls, stream_walls = [], []
+    for r in range(ROUNDS):
+        order = (run_batch, run_stream) if r % 2 == 0 else (run_stream, run_batch)
+        for fn in order:
+            (batch_walls if fn is run_batch else stream_walls).append(fn(r))
+        got = conv_fingerprints(
+            Catalog(spark, os.path.join(work, f"stream_out_{r}")).read(
+                "sequenced_events"
+            )
+        )
+        want = conv_fingerprints(
+            Catalog(spark, os.path.join(work, f"batch_out_{r}")).read(
+                "sequenced_events"
+            )
+        )
+        bad = sorted(c for c in got.keys() | want.keys() if got.get(c) != want.get(c))
+        if bad:
+            raise RuntimeError(
+                f"round {r}: stream != batch in {len(bad)} conversations, "
+                f"e.g. {bad[:5]}"
+            )
+
+    cat = Catalog(spark, os.path.join(work, "stream_out_0"))
     turns_rows = cat.read("turns").count()
     seq_rows = cat.read("sequenced_events").count()
-    bcat = Catalog(spark, batch_out)
-    assert seq_rows == bcat.read("sequenced_events").count(), "twin diverged"
     state_after = [sum(slice_rows[: i + 1]) for i in range(len(slice_rows))]
-
-    # bucketed-state mode (r4 verdict next #5): same drain, turns
-    # accumulator hash-bucketed on conv_id so the recompute runs
-    # exchange-free over the stored layout
-    bk_out = os.path.join(work, "stream_bk_out")
-    t0 = time.time()
-    qb = run_stream_pipeline_keyed(
-        read_transcripts_stream(spark, src, max_files_per_trigger=1),
-        datagen.tool_meta(spark), datagen.role_meta(spark),
-        bk_out, os.path.join(work, "ckpt_bk"), available_now=True,
-        bucket_state=32,
-    )
-    drained = qb.awaitTermination(3600)
-    bk_wall = time.time() - t0
-    if not drained:
-        qb.stop()
-        raise RuntimeError("bucketed keyed stream did not drain within 1h")
-    bkcat = Catalog(spark, bk_out)
-    assert (
-        bkcat.read("sequenced_events").count() == seq_rows
-    ), "bucketed twin diverged"
+    batch_wall, stream_wall = min(batch_walls), min(stream_walls)
+    master = spark.sparkContext.master
 
     res = {
         "sf_dir": SF_DIR,
+        "master": master,
+        "cpus": os.cpu_count(),
         "rows": n_rows,
         "n_batches": len(SLICES),
-        "batch_wall_sec": round(batch_wall, 2),
+        "rounds": ROUNDS,
+        "batch_wall_sec": [round(w, 2) for w in batch_walls],
+        "stream_wall_sec": [round(w, 2) for w in stream_walls],
         "batch_turns_per_sec": round(n_rows / batch_wall, 1),
-        "stream_wall_sec": round(stream_wall, 2),
         "stream_turns_per_sec": round(n_rows / stream_wall, 1),
         "stream_vs_batch": round(stream_wall / batch_wall, 2),
-        "stream_bucketed_wall_sec": round(bk_wall, 2),
-        "stream_bucketed_turns_per_sec": round(n_rows / bk_wall, 1),
-        "bucketed_vs_plain": round(bk_wall / stream_wall, 2),
         "turns_state_rows_final": turns_rows,
         "turns_state_rows_after_batch": state_after,
         "sequenced_rows": seq_rows,
+        "conversations_checked": len(got),
     }
+
+    def walls(ws):
+        return ", ".join(f"{w:.2f}" for w in ws)
 
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/STREAM.md", "w") as f:
         f.write(f"""# BENCH/STREAM — keyed cross-batch streaming cost
+
+Generated by `scripts/bench_keyed.py` on {master}, {os.cpu_count()} CPUs
+({platform.machine()}, Python {platform.python_version()}).
 
 `run_stream_pipeline_keyed` (the cross-batch twin proven row-for-row
 equal to the batch `run()` in test_streaming) drained the sf
 `{SF_DIR}` transcript table ({n_rows:,} turns) through
 {len(SLICES)} micro-batches that split EVERY conversation
 mid-conversation (turn ranges {SLICES}, maxFilesPerTrigger=1) — the
-adversarial shape where each batch touches every conversation. Same
-session, batch run first (doubles as codegen/JIT warmup).
+adversarial shape where each batch touches every conversation. One
+session; batch and stream runs alternate over {ROUNDS} rounds (batch
+first in even rounds, stream first in odd ones), and the table reports
+the min of each. Every drain equalled its round's batch run on every
+`OUTPUT_COLS` column of all {len(got):,} conversations
+(per-conversation row count and row-hash sum).
 
-| mode | wall sec | turns/sec |
-|---|---|---|
-| batch `run()` (one shot) | {batch_wall:.2f} | {n_rows / batch_wall:,.0f} |
-| keyed stream ({len(SLICES)} batches) | {stream_wall:.2f} | {n_rows / stream_wall:,.0f} |
-| keyed stream, bucketed state (bucket_state=32) | {bk_wall:.2f} | {n_rows / bk_wall:,.0f} |
-
-**Bucketed state** (`bucket_state=`): the `turns` accumulator is a
-conv_id-hash-bucketed table (appended per trigger, sorted by
-(conv_id, turn_idx)), so the per-batch recompute's conv_id
-joins/groupBys/windows read the stored layout exchange-free (zero-
-Exchange plan asserted in test_streaming) — the conv_id shuffle is
-paid once per trigger's NOVEL rows, never again over the whole
-accumulated history. Bucketed/plain wall ratio this run:
-**{bk_wall / stream_wall:.2f}x** (it ran second, so it gets the warmer
-JIT; the structural win grows with accumulated-history size — at this
-corpus the history is small, so expect flat-to-improved, not
-dramatic).
+| mode | wall sec per round | min wall sec | turns/sec (min) |
+|---|---|---|---|
+| batch `run()` (one shot) | {walls(batch_walls)} | {batch_wall:.2f} | {n_rows / batch_wall:,.0f} |
+| keyed stream ({len(SLICES)} batches) | {walls(stream_walls)} | {stream_wall:.2f} | {n_rows / stream_wall:,.0f} |
 
 Streaming paid **{stream_wall / batch_wall:.1f}x** the batch wall here
 — the expected price of this worst case: every batch re-derives every

@@ -53,28 +53,6 @@ def test_bucketed_join_is_shuffle_free(spark, cat):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_bucketed_exists_ignores_uncommitted_temporary(spark, cat, tmp_path):
-    """Review finding: a crash during the FIRST bucketed write leaves
-    the .bucketed dir holding only the committer's _temporary staging —
-    bucketed_exists must report False (so the writer path retries the
-    initial write) instead of wedging the append path on schema
-    inference; committed part files outside _temporary report True."""
-    import os
-
-    base = cat.path("crash.bucketed")
-    os.makedirs(os.path.join(base, "_temporary", "0"), exist_ok=True)
-    with open(os.path.join(base, "_temporary", "0", "part-0.parquet"), "wb") as f:
-        f.write(b"partial")
-    assert not cat.bucketed_exists("crash")
-
-    df = spark.range(0, 10).select(
-        (F.col("id") % 2).cast("string").alias("conv_id"), F.col("id").alias("v")
-    )
-    cat.write_bucketed(df, "crash", "conv_id", n_buckets=2)
-    assert cat.bucketed_exists("crash")
-    assert cat.read_bucketed("crash").count() == 10
-
-
 def test_bucketed_groupby_is_shuffle_free(spark, cat):
     df = spark.range(0, 300).select(
         (F.col("id") % 30).cast("string").alias("conv_id"),

@@ -193,15 +193,15 @@ class TestConvMinhash:
                 )
             )
         )
-        cand = dd.conv_minhash_lsh_candidates(tr, materialize=False)
-        plan = cand._jdf.queryExecution().optimizedPlan().toString()
+        wide = dd.conv_minhash_wide(tr)
+        plan = wide._jdf.queryExecution().optimizedPlan().toString()
         for line in plan.splitlines():
             if "collect_list" in line:
                 assert "windowspecdefinition" in line, line
         # bounded frame, not unbounded-preceding
         assert "unboundedpreceding" not in plan.lower().replace(" ", "").replace("$", "")
         # and it actually runs on the hot fixture
-        assert cand.count() >= 0
+        assert dd.conv_minhash_lsh_candidates(tr).count() >= 0
 
 
 def test_jaccard_restricted_by_candidates(spark, sf_dir):
@@ -323,11 +323,6 @@ def test_multimodal_features_deterministic_and_batched(spark, sf_dir):
     assert f1 == f2  # partitioning-invariant
     assert all(len(v) == mm.FEATURE_DIM for v in f1.values())
     assert all(0.0 <= v[0] <= 1.0 for v in f1.values())
-
-
-def test_multimodal_real_decode_is_gated(spark, sf_dir):
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"xx", "png")
 
 
 def test_media_column_pruned_for_metadata(spark, sf_dir):
@@ -977,21 +972,68 @@ def test_jl_project_golden(spark):
         assert got[vid] == exp
 
 
+def _gram_sql(dfq):
+    """Reference for ``reduce_dim._gram_arrow``: explode-into-aggregate
+    Gram sums, zero Python in the loop. Input is the already-quantized
+    ``_qv`` column (materialized once per row — referencing the
+    transform expression inside the pair lambdas would re-evaluate it
+    per OUTER element). SQL's null semantics make it total: a null
+    vector explodes to nothing, ``sum`` skips a null product and
+    ``count(1)`` still counts a null element's row."""
+    qv = F.col("_qv")
+    cells = F.flatten(
+        F.transform(
+            qv,
+            lambda xi, i: F.transform(
+                F.slice(qv, i + 1, F.size(qv) - i),
+                lambda xj, dj: F.struct(
+                    i.alias("i"),
+                    (i + dj).alias("j"),
+                    (xi * xj).alias("p"),
+                    xi.alias("a"),
+                    xj.alias("b"),
+                ),
+            ),
+        )
+    )
+    return (
+        dfq.select(F.explode(cells).alias("c"))
+        .groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j"))
+        .agg(
+            F.sum("c.p").alias("s"),
+            F.sum("c.a").alias("s_i"),
+            F.sum("c.b").alias("s_j"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+
+
 def test_covariance_methods_bit_identical(spark, sf_dir):
-    """The Arrow Gram kernel and the pure-SQL explode path sum the
-    same quantized integers — outputs must match bit-for-bit."""
+    """The Arrow Gram kernel sums the same quantized integers as the
+    SQL explode reference — bit-for-bit, also with a null vector (adds
+    to no cell, not counted) and a null element (counts as 0, its row
+    counts) in the input, neither of which may fail the job."""
     from otel2pv_spark.functions import reduce_dim as rd
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = {
-        (r.i, r.j): (r.n, r.mean_i, r.mean_j, r.cov)
-        for r in rd.covariance_moments(emb, method="arrow").collect()
-    }
-    b = {
-        (r.i, r.j): (r.n, r.mean_i, r.mean_j, r.cov)
-        for r in rd.covariance_moments(emb, method="sql").collect()
-    }
-    assert a == b
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    d = len(emb.head()["embedding"])
+    n_clean = emb.count()
+    null_elem = [0.5] + [None] + [0.25] * (d - 2)
+    for extra in ([], [(-1, None)], [(-2, null_elem)]):
+        df = emb.unionByName(spark.createDataFrame(extra, emb.schema))
+        dfq = rd._quantized(df, "embedding", rd.DEFAULT_Q)
+        got = {tuple(r) for r in rd._gram_arrow(dfq).collect()}
+        want = {
+            tuple(r)
+            for r in _gram_sql(dfq).select("i", "j", "s", "s_i", "s_j", "n").collect()
+        }
+        assert got == want
+        rows = rd.covariance_moments(df).collect()
+        assert len(rows) == d * (d + 1) // 2
+        n_rows = n_clean + sum(v is not None for _, v in extra)
+        assert {r.n for r in rows} == {n_rows}
 
 
 def test_top_ngrams_golden(spark):

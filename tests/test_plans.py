@@ -157,13 +157,12 @@ def test_covariance_moments_partial_agg_one_exchange(spark, sf_dir):
     from otel2pv_spark.functions import reduce_dim as rd
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for method in ("arrow", "sql"):
-        plan = _plan(rd.covariance_moments(emb, method=method))
-        ex = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
-        assert len(ex) == 1, plan
-        assert "embedding" not in ex[0], ex[0]
-        # partial aggregation before the exchange (map-side combine)
-        assert "partial_sum" in plan, plan
+    plan = _plan(rd.covariance_moments(emb))
+    ex = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
+    assert len(ex) == 1, plan
+    assert "embedding" not in ex[0], ex[0]
+    # partial aggregation before the exchange (map-side combine)
+    assert "partial_sum" in plan, plan
 
 
 def test_lsh_candidates_band_table_computed_once(spark, sf_dir):
@@ -171,14 +170,11 @@ def test_lsh_candidates_band_table_computed_once(spark, sf_dir):
     this Spark build: two full scans, zero ReusedExchange), so the
     band table must be SNAPSHOTTED before the band self-join — the
     candidate plan may not contain any parquet scan or shingle
-    recompute; both sides read the checkpointed rows. materialize=False
-    keeps the lazy double-scan shape (caller-managed caching)."""
+    recompute; both sides read the checkpointed rows."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = _plan(dd.minhash_lsh_candidates(docs))
     assert "Scan parquet" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan
-    lazy = _plan(dd.minhash_lsh_candidates(docs, materialize=False))
-    assert lazy.count("Scan parquet") == 2, lazy
 
 
 def test_ngram_jaccard_candidate_mode_bounded_by_candidates(spark, sf_dir):

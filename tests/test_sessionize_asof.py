@@ -274,6 +274,40 @@ def test_ivf_assign_vectorized_bit_identical(spark):
         assert {fast[i] for i in range(2000, 2007)} == {0}
 
 
+def test_ivf_train_total_on_bad_vectors(spark):
+    """Training skips every vector ivf_assign cannot score: the seven
+    bad edge vectors of the twin test, once with ids below the good
+    ids (so they would be the first-k anchors) and once above, must
+    neither fail the job nor move a centroid."""
+    import math
+
+    good = [
+        (i, [math.sin(i * 7 + j) * 0.37 + 0.1 + j for j in range(4)])
+        for i in range(60)
+    ]
+    good.append((1000, [0.3, -0.2, 1.5, 0.75]))
+    bad = [
+        None,
+        [],
+        [0.5, 0.25],                    # short
+        [0.5, 0.25, 1.0, 2.0, 3.0],     # long
+        [0.0, 0.0, 0.0, 0.0],           # zero norm
+        [0.5, float("nan"), 1.0, 2.0],  # NaN element
+        [0.5, None, 1.0, 2.0],          # null element
+    ]
+    edges = [(-10 + i, v) for i, v in enumerate(bad)] + [
+        (2000 + i, v) for i, v in enumerate(bad)
+    ]
+    for typ in ("float", "double"):
+        schema = f"vec_id long, embedding array<{typ}>"
+        clean = spark.createDataFrame(good, schema)
+        dirty = spark.createDataFrame(good + edges, schema)
+        want = sorted(map(tuple, sim.ivf_train(clean, k=5, iters=2).collect()))
+        got = sorted(map(tuple, sim.ivf_train(dirty, k=5, iters=2).collect()))
+        assert got == want
+        assert len(want) == 5
+
+
 def test_semantic_dedup_derived_k_matches_explicit(spark):
     # centroids=None derives k from the corpus count and trains; must
     # equal the explicit ivf_train(semdedup_k(n)) composition row-for-row

@@ -1217,80 +1217,6 @@ def test_stream_keyed_pipeline_matches_batch_run_with_split_convs(spark, tmp_pat
     assert _rows(read_table(spark, out, "sequenced_events"), cols) == before
 
 
-def test_stream_keyed_bucketed_state_matches_and_is_shuffle_free(
-    spark, tmp_path
-):
-    """bucket_state=N: the turns accumulator lives as a conv_id-hash-
-    bucketed table appended per trigger. Must (1) equal the batch run()
-    row-for-row like the plain mode, and (2) leave the stored layout
-    such that a groupBy/self-join on conv_id over the FULL accumulated
-    state plans ZERO Exchange — the pay-the-shuffle-once contract."""
-    from conftest import read_table
-    from otel2pv_spark.sources.catalog import Catalog
-    from otel2pv_spark.streaming import run_stream_pipeline_keyed
-
-    tr = datagen.transcripts_from_events(spark, SF)
-    src = str(tmp_path / "bk_src")
-    os.makedirs(src, exist_ok=True)
-    for i, (lo, hi) in enumerate([(0, 4), (4, 8), (8, 12)]):
-        tr.filter(
-            (F.col("turn_idx") >= lo) & (F.col("turn_idx") < hi)
-        ).toPandas().to_parquet(
-            f"{src}/part_{i}.parquet", index=False,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-        os.utime(f"{src}/part_{i}.parquet", (time.time() + i,) * 2)
-
-    out = str(tmp_path / "bk_out")
-    q = run_stream_pipeline_keyed(
-        read_transcripts_stream(spark, src, max_files_per_trigger=1),
-        datagen.tool_meta(spark), datagen.role_meta(spark),
-        out, str(tmp_path / "bk_ckpt"), available_now=True,
-        bucket_state=4,
-    )
-    q.awaitTermination(600)
-
-    batch_out = str(tmp_path / "bk_batch_out")
-    pipeline.run(
-        spark, tr, pipeline.PipelineConfig(out_root=batch_out, run_id="ref")
-    )
-    cols = [
-        "conv_id", "turn_idx", "sink", "event_id", "previous_event_ids",
-        "verified", "sequenceable", "is_duplicate", "text",
-    ]
-
-    def _rows(df, cs):
-        return sorted(
-            tuple(tuple(v) if isinstance(v, list) else v for v in
-                  (r[c] for c in cs))
-            for r in df.select(*cs).collect()
-        )
-
-    got = read_table(spark, out, "sequenced_events")
-    want = read_table(spark, batch_out, "sequenced_events")
-    assert _rows(got, cols) == _rows(want, cols)
-
-    # accumulated state is complete (3 appends, every key exactly once)
-    cat = Catalog(spark, out)
-    turns = cat.read_bucketed("turns")
-    assert turns.count() == tr.count()
-    assert (
-        turns.groupBy("conv_id", "turn_idx").count().filter("count > 1").count()
-        == 0
-    )
-
-    def _plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # zero-Exchange contract over the STORED layout: the recompute's
-    # per-conversation aggregation shape needs no shuffle at all
-    agg = turns.groupBy("conv_id").agg(F.count("*").alias("n"))
-    assert "Exchange" not in _plan(agg), _plan(agg)
-    # control: plain parquet over the same files re-introduces it
-    plain = spark.read.parquet(cat.path("turns.bucketed"))
-    assert "Exchange" in _plan(plain.groupBy("conv_id").agg(F.count("*")))
-
-
 def test_stream_keyed_pipeline_dedups_in_batch_duplicates(spark, tmp_path):
     """Producer-retry duplicates landing in the SAME micro-batch must
     collapse (first by (ts, text)) — otherwise the turns table carries
