@@ -305,21 +305,19 @@ def ivf_train(
     non-null, non-zero norm, and of the corpus dimension, which is the
     most common length among such vectors (ties → the shorter). Any
     other vector is left out of training, so it can neither fail the
-    job nor poison a mean."""
+    job nor poison a mean. The length is a vote, not the first vector
+    by id, because a stray short or long vector is otherwise usable
+    and may hold the lowest id: letting it set ``dim`` would drop the
+    whole corpus. The vote is one extra aggregate scan."""
     # abs(x) < inf also drops NaN: Spark orders NaN above +inf
     good = df.filter(
         F.forall(vec_col, lambda x: x.isNotNull() & (F.abs(x) < float("inf")))
         & F.exists(vec_col, lambda x: x != 0)
     )
-    top = (
-        good.groupBy(F.size(vec_col).alias("dim"))
-        .count()
-        .orderBy(F.desc("count"), "dim")
-        .head()
-    )
-    if top is None:
+    # deterministic mode: on a tie the smaller length; null if no row
+    dim = good.select(F.mode(F.size(vec_col), True)).head()[0]
+    if dim is None:
         raise ValueError("ivf_train: no usable vector in the corpus")
-    dim = top["dim"]
     good = good.filter(F.size(vec_col) == dim)
     cent = make_anchors(good, k, id_col, vec_col)
     v = good.select(

@@ -17,7 +17,7 @@ thing that grows with stream lifetime and that Iceberg conv-bucket
 pruning bounds per-batch work against at the real target.
 
 Writes BENCH/STREAM.md and prints one JSON line. Run on a quiet host:
-  SPARK_GRAFT_CPUS=4 BENCH_KEYED_ROUNDS=3 python scripts/bench_keyed.py
+  SPARK_GRAFT_CPUS=4 python scripts/bench_keyed.py
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ from otel2pv_spark.streaming import (  # noqa: E402
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-ROUNDS = int(os.environ.get("BENCH_KEYED_ROUNDS", "3"))
+ROUNDS = 3
 # turn ranges per micro-batch file: every conversation splits across
 # ALL batches — the adversarial shape for a cross-batch keyed pipeline
 # (each batch touches every conversation and recomputes it over its
