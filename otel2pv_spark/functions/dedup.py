@@ -121,26 +121,6 @@ def _minhash_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 12,
-) -> DataFrame:
-    """(id, hash_index, minhash) — long form of the wide signature."""
-    wide = _minhash_wide(df, id_col, text_col, n, num_hashes)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(i).alias("i"), F.col(f"mh_{i}").alias("minhash"))
-            for i in range(num_hashes)
-        ]
-    )
-    return wide.select(id_col, F.explode(pairs).alias("s")).select(
-        id_col, "s.i", "s.minhash"
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",

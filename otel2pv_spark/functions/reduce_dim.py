@@ -91,7 +91,9 @@ def covariance_moments(
     counts. That is SQL's explode/sum/count(1) semantics, so the
     result equals the explode form bit for bit wherever a cell has at
     least one non-null product (SQL's sum of no values is null, this
-    kernel's is 0). Vectors must share one length.
+    kernel's is 0). Vectors of different lengths are allowed: each row
+    adds only to the cells its own length spans, so ``n`` is per cell,
+    as SQL's count(1) over the explode.
     """
     sums = _gram_arrow(_quantized(df, vec_col, q))
     qd = float(q)
@@ -136,23 +138,26 @@ def _gram_arrow(dfq: DataFrame) -> DataFrame:
 
     def kernel(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            qm = np.stack(pdf["_qv"].to_numpy()).astype(np.int64)
-            n, d = qm.shape
-            g = qm.T @ qm  # exact int64 Gram
-            s1 = qm.sum(axis=0)
-            iu, ju = np.triu_indices(d)
-            yield pd.DataFrame(
-                {
-                    "i": iu.astype(np.int32),
-                    "j": ju.astype(np.int32),
-                    "p": g[iu, ju],
-                    "a": s1[iu],
-                    "b": s1[ju],
-                    "c": np.full(len(iu), n, dtype=np.int64),
-                }
-            )
+            vecs = pdf["_qv"].to_numpy()
+            lens = pdf["_qv"].map(len).to_numpy()
+            # one Gram per vector length: a row adds only to the cells
+            # its own length spans, and n stays per cell
+            for d in np.unique(lens):
+                rows = vecs[lens == d]
+                qm = np.stack(rows).astype(np.int64)
+                g = qm.T @ qm  # exact int64 Gram
+                s1 = qm.sum(axis=0)
+                iu, ju = np.triu_indices(d)
+                yield pd.DataFrame(
+                    {
+                        "i": iu.astype(np.int32),
+                        "j": ju.astype(np.int32),
+                        "p": g[iu, ju],
+                        "a": s1[iu],
+                        "b": s1[ju],
+                        "c": np.full(len(iu), len(rows), dtype=np.int64),
+                    }
+                )
 
     zero = F.lit(0).cast("bigint")
     clean = dfq.filter(F.col("_qv").isNotNull()).select(

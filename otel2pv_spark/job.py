@@ -137,8 +137,7 @@ def validate_observability_config(raw) -> dict:
           "observability": {"rollup_width": "1 hour", "width_sec": 3600,
                             "trail": 4, "nsigma": 3, "gap_sec": 7200,
                             "funnel_steps": ["view","click","purchase"],
-                            "burst_type": "error", "burst_len": 3,
-                            "n_buckets": 8},
+                            "burst_type": "error", "burst_len": 3},
           "spark": {...}
         }
     """
@@ -150,6 +149,13 @@ def validate_observability_config(raw) -> dict:
     if not raw.get("out_root"):
         raise ConfigError("out_root is required")
     o = raw.get("observability", {})
+    if "n_buckets" in o:
+        # events commit as a plain Catalog table; fail loudly on the
+        # removed bucketed-layout key instead of silently ignoring it
+        raise ConfigError(
+            "observability.n_buckets was removed (the events layout is a"
+            " plain Catalog table)"
+        )
     steps = o.get("funnel_steps")
     if steps is not None and (
         not isinstance(steps, (list, tuple)) or not steps
@@ -190,7 +196,6 @@ def to_observability_config(raw: dict):
         funnel_steps=tuple(o.get("funnel_steps", ("view", "click", "purchase"))),
         burst_type=o.get("burst_type", "error"),
         burst_len=_cfg_int(o, "burst_len", 3),
-        n_buckets=_cfg_int(o, "n_buckets", 8),
     )
 
 
@@ -495,9 +500,10 @@ def main(argv: list[str] | None = None) -> dict:
         transcripts = datagen.transcripts_from_events(spark, inp["events_dir"])
     elif inp.get("format", "parquet") != "parquet":
         # jsonl/csv arrive through the decode gate: undecodable rows
-        # land in {out_root}/source_rejects with the raw record, the
-        # decoded remainder feeds the normal DAG
+        # land in the source_rejects Catalog table with the raw record,
+        # the decoded remainder feeds the normal DAG
         from .sources import formats
+        from .sources.catalog import Catalog
 
         transcripts, src_rejects = formats.read_with_dlq(
             spark,
@@ -506,9 +512,7 @@ def main(argv: list[str] | None = None) -> dict:
             schema=formats.TRANSCRIPT_SCHEMA,
             key_col="conv_id",
         )
-        src_rejects.write.mode("overwrite").parquet(
-            f"{raw['out_root']}/source_rejects"
-        )
+        Catalog(spark, raw["out_root"]).write(src_rejects, "source_rejects")
     else:
         transcripts = spark.read.parquet(inp["transcripts_path"])
     incr = raw.get("incremental")

@@ -23,32 +23,6 @@ def metrics(routed: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def lineage_from_col(
-    df: DataFrame, run_id: str, stage: str, pid_col: str = "src_partition_id"
-) -> DataFrame:
-    """Lineage keyed by a MATERIALIZED partition-id column (stamped at
-    scan time by the single-pass plan) instead of the runtime
-    ``spark_partition_id()`` — so provenance survives the round trip
-    through the written sink tables and maps each output row back to
-    the input split that produced it."""
-    return (
-        df.groupBy(F.col(pid_col).alias("partition_id"))
-        .agg(
-            F.count("*").alias("rows"),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "rows",
-            "min_conv_id",
-            "max_conv_id",
-        )
-    )
-
-
 def lineage(df: DataFrame, run_id: str, stage: str) -> DataFrame:
     return (
         df.groupBy(F.spark_partition_id().alias("partition_id"))

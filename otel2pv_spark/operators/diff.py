@@ -11,8 +11,7 @@ inverse of ``Catalog.replace_keys`` (which WRITES keyed changes;
 this READS them back out).
 
 Scale shape: ONE full-outer hash equi-join on the key columns — both
-sides shuffle on the key (or neither, on a `write_bucketed` layout:
-storage-partitioned join, zero Exchange), AQE skew-split applies, and
+sides shuffle on the key, AQE skew-split applies, and
 the per-column comparison is pure codegen (null-safe equality into an
 array of changed names). Nothing is collected; output is bounded by
 the number of changed keys, not table size.
@@ -139,8 +138,8 @@ def apply_changes(
     rejected (applying it would silently strip every value column).
 
     Scale shape: one left-anti join on the key (drop deleted/updated
-    base rows) + one union with the change set — both key-partitioned,
-    zero-Exchange on a bucketed layout; the change set is bounded by
+    base rows) + one union with the change set — both key-partitioned;
+    the change set is bounded by
     changed keys, not table size. Columns produced are the keys + the
     diff's compare columns (the after-image schema).
     """

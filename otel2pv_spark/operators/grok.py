@@ -66,11 +66,8 @@ GROK_LIBRARY: dict[str, str] = {
 
 _REF = re.compile(r"%\{(\w+)(?::([A-Za-z_]\w*))?(?::(int|float))?\}")
 
-# grok type suffix → (Spark cast type, DuckDB cast type)
-GROK_CASTS: dict[str, tuple[str, str]] = {
-    "int": ("long", "BIGINT"),
-    "float": ("double", "DOUBLE"),
-}
+# grok type suffix → Spark cast type
+GROK_CASTS: dict[str, str] = {"int": "long", "float": "double"}
 
 
 def _expand(pattern: str, depth: int = 0) -> str:
@@ -148,23 +145,7 @@ def grok_rules(
                 kind="regex",
                 source=source,
                 group=i + 1,
-                dtype=GROK_CASTS[typ][0] if typ else None,
+                dtype=GROK_CASTS[typ] if typ else None,
             )
         )
     return rules
-
-
-def grok_oracle_exprs(expr: str, text_sql: str = "text") -> list[str]:
-    """The DuckDB-side projection for the same grok expression — one
-    ``regexp_extract(text, pattern, group)`` per field (RE2 semantics
-    match the portable subset), with TRY_CAST for typed fields. Used to
-    build oracle SQL that is independent of the Spark implementation."""
-    regex, fields = compile_grok(expr)
-    lit = regex.replace("'", "''")
-    exprs = []
-    for i, (fld, typ) in enumerate(fields):
-        e = f"regexp_extract({text_sql}, '{lit}', {i + 1})"
-        if typ:
-            e = f"TRY_CAST(nullif({e}, '') AS {GROK_CASTS[typ][1]})"
-        exprs.append(f"{e} AS {fld}")
-    return exprs

@@ -4,12 +4,10 @@ Each row's ``sink`` column selects its destination table; rows with an
 unknown/null sink are an error in the reference ("routing key not
 found", server.go:150-153) → routed to the rejects table here.
 
-Scale shape: ONE pass materializes the routed DataFrame (cache or
-single shuffle write partitioned by sink), then per-sink writes are
-metadata-only filters. We use ``partitionBy("sink")`` on write so a
-single job writes every sink directory — no N-pass re-scan of the
-input, no driver loop over data (the loop is over sink *names* only,
-to move directories into per-sink tables)."""
+Scale shape: the single-pass plan assigns every row a sink (reserved
+reject sinks included), and ``Catalog.commit_fanout_split`` writes all
+sink partitions in ONE job — no N-pass re-scan of the input, no driver
+loop over data."""
 
 from __future__ import annotations
 
@@ -46,31 +44,3 @@ def assign_reject_sinks(
         .when(bad_route, F.lit(REJECT_ROUTE_SINK))
         .otherwise(F.col("sink")),
     )
-
-
-def route(df: DataFrame, known_sinks: list[str]) -> tuple[DataFrame, DataFrame]:
-    """Split into (routable, rejects) on sink validity."""
-    ok = F.col("sink").isin(known_sinks)
-    routable = df.filter(ok)
-    rejects = df.filter(~ok | F.col("sink").isNull()).withColumn(
-        "reject_reason", F.lit("unknown_routing_key")
-    )
-    return routable, rejects
-
-
-def write_fanout(
-    routed: DataFrame,
-    base_path: str,
-    mode: str = "overwrite",
-) -> None:
-    """Single-job fan-out write: dynamic partition on ``sink`` writes
-    every sink's rows under ``base_path/sink=<name>/`` in one pass —
-    the Spark-native equivalent of one producer per routing key."""
-    routed.write.mode(mode).partitionBy("sink").parquet(base_path)
-
-
-def sink_counts(routed: DataFrame) -> DataFrame:
-    """Per-sink aggregate counts — the primary correctness anchor
-    (BASELINE.json: 'matching the reference's per-sink aggregate
-    counts'). Map-side partial aggregation ⇒ one tiny shuffle."""
-    return routed.groupBy("sink").agg(F.count("*").alias("rows")).orderBy("sink")

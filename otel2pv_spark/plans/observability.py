@@ -2,21 +2,21 @@
 counterpart of ``plans/pipeline.py`` (transcripts) and
 ``plans/curation.py`` (documents):
 
-    bucket-by-user layout → hourly rollup → gap-filled spike flags →
+    committed event layout → hourly rollup → gap-filled spike flags →
     gap-closed sessions → first-reach funnel → error-burst runs →
     committed tables + manifest resume.
 
-The layout stage is the scale decision: the event log is written ONCE
-hash-bucketed and sorted on (user_id, ts) via ``Catalog.write_bucketed``,
-and every per-user stage after it — sessionization, funnel, burst
-detection — reads that layout and runs with ZERO Exchange (asserted in
-tests): the user shuffle is paid once at write time, not once per
-consumer. The rollup keys on (window, event_type) instead; its map-side
-partial aggregation means that shuffle carries only aggregated buckets,
-so it reads the same bucketed table without needing its layout. The
-anomaly stage never touches events at all — it runs over the COMMITTED
-rollup table (aggregate grain), gap-filled so sparse keys are z-tested
-against their silent hours (``rollup_fill_gaps``).
+The layout stage commits the input events once as the ``obs_events``
+Catalog table, through the same atomic commit as every other step, and
+every later stage reads that snapshot: a resumed run computes from the
+events the first attempt committed, not from a re-read of a source
+that may have moved on. The per-user stages (sessionization, funnel,
+burst detection) each shuffle on user_id; the rollup keys on (window,
+event_type) and its map-side partial aggregation means that shuffle
+carries only aggregated buckets. The anomaly stage never touches
+events at all — it runs over the COMMITTED rollup table (aggregate
+grain), gap-filled so sparse keys are z-tested against their silent
+hours (``rollup_fill_gaps``).
 
 Each stage commits atomically through ``Catalog``/``RunManifest`` and a
 re-run with the same run_id skips committed steps (the pipeline's
@@ -25,20 +25,10 @@ individual operators are oracle-checked by their own driver queries
 (events_rollup_hourly, rollup_anomalies_filled, sessionize,
 funnel_reach, error_bursts); this module is the job-level composition,
 covered by pytest like pipeline.run / run_curation.
-
-Caveat (parquet stand-in): bucket metadata lives in the session
-catalog, so resuming in a NEW session re-attaches the committed files
-via ``Catalog.register_bucketed`` (CREATE TABLE ... CLUSTERED BY over
-the existing location) — the shuffle-free property survives restarts;
-Iceberg's bucket transform makes the layout durable without the
-re-attach. The registered table name embeds a hash of ``out_root``,
-so two jobs sharing one Spark session can never read each other's
-layout through a stale catalog entry.
 """
 
 from __future__ import annotations
 
-import hashlib
 import time
 import uuid
 from dataclasses import dataclass
@@ -52,12 +42,6 @@ from ..operators import profile as prof_op
 from ..operators import sessionize as session_op
 from ..sources.catalog import Catalog
 from ..sources.manifest import RunManifest
-
-def events_table(out_root: str) -> str:
-    """Session-catalog table name for the bucketed layout, namespaced
-    by out_root so concurrent jobs in one session cannot collide."""
-    h = hashlib.md5(out_root.encode()).hexdigest()[:8]
-    return f"obs_events_{h}"
 
 
 @dataclass
@@ -73,31 +57,13 @@ class ObsConfig:
     funnel_steps: tuple[str, ...] = ("view", "click", "purchase")
     burst_type: str = "error"
     burst_len: int = 3
-    n_buckets: int = 8
-
-
-def _bucketed_events(
-    spark: SparkSession, cat: Catalog, tbl: str, cfg: "ObsConfig"
-) -> DataFrame:
-    """Read the committed user-bucketed layout, re-attaching it to the
-    session catalog if this is a resumed run in a fresh session (the
-    files are committed; only the session metadata was lost)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return cat.read_bucketed(tbl)
-    except AnalysisException:
-        cat.register_bucketed(
-            tbl, "user_id", cfg.n_buckets,
-            sort_by=("user_id", "ts", "event_id"),
-        )
-        return cat.read_bucketed(tbl)
 
 
 def run_observability(
     spark: SparkSession, events: DataFrame, cfg: ObsConfig
 ) -> dict:
-    """Execute + persist: `obs_rollup` (hourly counts/users/value),
+    """Execute + persist: `obs_events` (the committed input snapshot),
+    `obs_rollup` (hourly counts/users/value),
     `obs_anomalies` (gap-filled trailing z-test flags), `obs_sessions`
     (per-session rollup), `obs_funnel` (per-user first-reach orders),
     `obs_bursts` (>= burst_len consecutive burst_type events per user).
@@ -107,21 +73,14 @@ def run_observability(
     man = RunManifest(cfg.out_root, run_id)
     t0 = time.time()
 
-    tbl = events_table(cfg.out_root)
     if not man.is_committed("layout"):
-        ident = cat.write_bucketed(
-            events,
-            tbl,
-            bucket_by="user_id",
-            n_buckets=cfg.n_buckets,
-            sort_by=("user_id", "ts", "event_id"),
-        )
-        man.commit("layout", {"ident": ident, "n_buckets": cfg.n_buckets})
-    bev = _bucketed_events(spark, cat, tbl, cfg)
+        cat.write(events, "obs_events")
+        man.commit("layout", {"path": cat.path("obs_events")})
+    ev = cat.read("obs_events")
 
     if not man.is_committed("rollup"):
         cat.write(
-            agg_op.rollup_time_windows(bev, width=cfg.rollup_width),
+            agg_op.rollup_time_windows(ev, width=cfg.rollup_width),
             "obs_rollup",
         )
         man.commit("rollup", {"path": cat.path("obs_rollup")})
@@ -143,7 +102,7 @@ def run_observability(
     if not man.is_committed("sessions"):
         cat.write(
             session_op.session_stats(
-                session_op.sessionize(bev, gap_sec=cfg.gap_sec)
+                session_op.sessionize(ev, gap_sec=cfg.gap_sec)
             ),
             "obs_sessions",
         )
@@ -152,7 +111,7 @@ def run_observability(
     if not man.is_committed("funnel"):
         steps = [F.col("event_type") == s for s in cfg.funnel_steps]
         cat.write(
-            pat_op.funnel(bev, steps, by="user_id", order_col="ts"),
+            pat_op.funnel(ev, steps, by="user_id", order_col="ts"),
             "obs_funnel",
         )
         man.commit("funnel", {"path": cat.path("obs_funnel")})
@@ -160,7 +119,7 @@ def run_observability(
     if not man.is_committed("bursts"):
         cat.write(
             pat_op.match_runs(
-                bev,
+                ev,
                 F.col("event_type") == cfg.burst_type,
                 min_len=cfg.burst_len,
                 by="user_id",
@@ -172,7 +131,7 @@ def run_observability(
 
     return {
         "run_id": run_id,
-        "n_events": bev.count(),
+        "n_events": ev.count(),
         "n_anomalies": cat.read("obs_anomalies").filter("anomaly").count(),
         "n_sessions": cat.read("obs_sessions").count(),
         "n_bursts": cat.read("obs_bursts").count(),

@@ -63,22 +63,6 @@ from pyspark.sql import functions as F
 from ..operators.route import REJECT_SINK_PREFIX
 
 
-def _bucketed_ident(table: str, root: str) -> str:
-    """Session-catalog identifier for a ``write_bucketed`` table — ONE
-    definition shared by write/register/read so the sanitization can
-    never drift between them (a mismatch silently reads/writes a
-    differently-named session table). The catalog ROOT is hashed into
-    the name: with a table-name-only ident, two Catalogs over
-    different roots in one session would share one global identifier
-    and read each other's table — per-root idents make them disjoint
-    by construction."""
-    import hashlib
-
-    h = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:8]
-    safe = "".join(ch if ch.isalnum() else "_" for ch in table)
-    return f"o2pv_{h}_{safe}"
-
-
 def _has_parquet(d: str) -> bool:
     return any(
         f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
@@ -421,7 +405,7 @@ class _CatalogBase:
         """Logical path of the table under the catalog root. For the
         posix strategy this is the physical data directory; for the
         manifest strategy it is informational (data lives in staged
-        dirs under ``_data/``) and the anchor for bucketed layouts."""
+        dirs under ``_data/``)."""
         return os.path.join(self.root, table)
 
     # ------------------------------------------------------ shared ops
@@ -614,112 +598,6 @@ class _CatalogBase:
 
     def _table_file_stats(self, table: str) -> tuple[int, int]:
         raise NotImplementedError  # pragma: no cover - abstract
-
-    # ----------------------------------------------------------- bucketing
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_by: str,
-        n_buckets: int = 32,
-        sort_by: tuple[str, ...] | None = None,
-    ) -> str:
-        """Write ``table`` hash-bucketed on ``bucket_by`` (optionally
-        sorted within buckets) and register it in the session catalog —
-        the layout that makes every later equi-join / groupBy on the
-        bucket key SHUFFLE-FREE: two tables bucketed on the same key
-        with the same bucket count sort-merge-join with zero Exchange
-        on either side (asserted in tests), and with ``sort_by`` on the
-        join key the per-task sort disappears too.
-
-        This is how the 10^12-turn deployment co-locates the sequenced
-        table with per-conversation side tables (tree edges, verify
-        output, incremental deltas): pay the conv_id shuffle ONCE at
-        write time, never again across runs. Iceberg analog: a
-        ``bucket(N, conv_id)`` partition transform + sorted data files
-        with storage-partitioned joins; the parquet stand-in uses the
-        session-catalog bucketed-table support (metadata lives in the
-        session catalog, so a NEW session must re-register — Iceberg
-        makes it durable). Strategy-independent: the bucketed layout
-        is Spark-committer-managed at ``<root>/<table>.bucketed``.
-
-        Returns the registered table identifier.
-        """
-        ident = _bucketed_ident(table, self.root)
-        self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        path = self.path(table + ".bucketed")
-        shutil.rmtree(path, ignore_errors=True)
-        w = (
-            df.write.format("parquet")
-            .mode("overwrite")
-            .bucketBy(n_buckets, bucket_by)
-        )
-        if sort_by:
-            w = w.sortBy(*sort_by)
-        w.option("path", path).saveAsTable(ident)
-        return ident
-
-    def register_bucketed(
-        self,
-        table: str,
-        bucket_by: str,
-        n_buckets: int,
-        sort_by: tuple[str, ...] | None = None,
-    ) -> str:
-        """Re-attach a committed ``write_bucketed`` layout in a FRESH
-        session: the parquet stand-in keeps bucket metadata in the
-        session catalog, so a new session (e.g. a crash-resumed job)
-        must recreate the table entry over the already-committed files
-        — the data files carry their bucket ids, only the metadata was
-        lost. CREATE TABLE ... CLUSTERED BY over the existing location
-        restores the layout contract, so downstream joins/groupBys on
-        the bucket key stay shuffle-free across restarts (Iceberg's
-        bucket transform makes this durable without the re-attach).
-        No-op if the table is already registered AT THIS LOCATION; a
-        stale registration left by another Catalog root in the same
-        session (the ident is derived from the table name alone) is
-        dropped and re-created — silently reading another root's state
-        table would be state corruption, not a layout detail."""
-        ident = _bucketed_ident(table, self.root)
-        path = self.path(table + ".bucketed")
-        if self.spark.catalog.tableExists(ident):
-            loc = next(
-                (
-                    r["data_type"]
-                    for r in self.spark.sql(
-                        f"DESCRIBE FORMATTED {ident}"
-                    ).collect()
-                    if r["col_name"] == "Location"
-                ),
-                None,
-            )
-            if loc is not None and loc.removeprefix("file:") == os.path.abspath(
-                path
-            ):
-                return ident
-            self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        schema = self.spark.read.parquet(path).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        sorted_sql = (
-            f"SORTED BY ({', '.join(sort_by)}) " if sort_by else ""
-        )
-        self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {ident} ({cols}) "
-            "USING parquet "
-            f"CLUSTERED BY ({bucket_by}) {sorted_sql}"
-            f"INTO {int(n_buckets)} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-        return ident
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        """Read a table written by ``write_bucketed`` WITH its bucket
-        metadata (a plain parquet read of the same files would lose the
-        layout and reintroduce the shuffle)."""
-        ident = _bucketed_ident(table, self.root)
-        return self.spark.table(ident)
 
 
 # Iceberg's safe primitive widenings (spec §Schema Evolution): stored as

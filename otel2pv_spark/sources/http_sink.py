@@ -16,7 +16,6 @@ ships plain strings, never Python objects.
 
 from __future__ import annotations
 
-import json
 import time
 import urllib.error
 import urllib.request
@@ -106,11 +105,3 @@ def write_http(
             )
 
     jsonified.foreachPartition(send_partition)
-
-
-def parse_http_batches(batches: list[bytes]) -> list[dict]:
-    """Helper for receivers/tests: decode the posted JSON-array bodies."""
-    out: list[dict] = []
-    for b in batches:
-        out.extend(json.loads(b))
-    return out

@@ -3,6 +3,7 @@ the DLQ with the raw record; good rows arrive schema-enforced."""
 
 from __future__ import annotations
 
+from conftest import read_table
 from otel2pv_spark.sources import formats
 
 
@@ -82,6 +83,6 @@ def test_pipeline_job_reads_jsonl_source(spark, tmp_path):
     }))
     res = job.main(["--config", str(cfgp)])
     assert res["rows"] > 0
-    rej = spark.read.parquet(str(tmp_path / "out" / "source_rejects")).collect()
+    rej = read_table(spark, tmp_path / "out", "source_rejects").collect()
     assert len(rej) == 1 and rej[0]["reject_reason"] == "decode_error"
     assert rej[0]["raw_record"] == "garbled non-json line"

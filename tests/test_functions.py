@@ -1011,8 +1011,9 @@ def _gram_sql(dfq):
 def test_covariance_methods_bit_identical(spark, sf_dir):
     """The Arrow Gram kernel sums the same quantized integers as the
     SQL explode reference — bit-for-bit, also with a null vector (adds
-    to no cell, not counted) and a null element (counts as 0, its row
-    counts) in the input, neither of which may fail the job."""
+    to no cell, not counted), a null element (counts as 0, its row
+    counts) and a shorter or longer vector (adds to the cells its own
+    length spans) in the input, none of which may fail the job."""
     from otel2pv_spark.functions import reduce_dim as rd
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1021,8 +1022,10 @@ def test_covariance_methods_bit_identical(spark, sf_dir):
     d = len(emb.head()["embedding"])
     n_clean = emb.count()
     null_elem = [0.5] + [None] + [0.25] * (d - 2)
-    for extra in ([], [(-1, None)], [(-2, null_elem)]):
-        df = emb.unionByName(spark.createDataFrame(extra, emb.schema))
+    ragged = [[(-3, [0.25] * (d - 1))], [(-4, [0.125 * k for k in range(d + 1)])]]
+    for extra in [[], [(-1, None)], [(-2, null_elem)], *ragged]:
+        # one partition: the extra row shares an Arrow batch with the rest
+        df = emb.unionByName(spark.createDataFrame(extra, emb.schema)).coalesce(1)
         dfq = rd._quantized(df, "embedding", rd.DEFAULT_Q)
         got = {tuple(r) for r in rd._gram_arrow(dfq).collect()}
         want = {
@@ -1031,6 +1034,10 @@ def test_covariance_methods_bit_identical(spark, sf_dir):
         }
         assert got == want
         rows = rd.covariance_moments(df).collect()
+        # n is per cell, as SQL's count(1) over the explode
+        assert {(r.i, r.j): r.n for r in rows} == {(w[0], w[1]): w[5] for w in want}
+        if extra in ragged:
+            continue
         assert len(rows) == d * (d + 1) // 2
         n_rows = n_clean + sum(v is not None for _, v in extra)
         assert {r.n for r in rows} == {n_rows}

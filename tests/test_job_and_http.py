@@ -260,7 +260,7 @@ def test_observability_job_end_to_end(spark, tmp_path):
         "input": {"events_path": "/root/testdata/sf0.001/events.parquet"},
         "out_root": str(tmp_path / "obs_out"),
         "run_id": "oj1",
-        "observability": {"burst_len": 2, "n_buckets": 4},
+        "observability": {"burst_len": 2},
         "spark": {"master": "local[4]", "shuffle_partitions": 8},
     }))
     res = job.main(["--config", str(cfgp)])
@@ -282,6 +282,11 @@ def test_observability_job_config_validation(tmp_path):
         job.validate_observability_config({
             "job": "observability", "input": {"events_path": "e"},
             "out_root": "x", "observability": {"funnel_steps": []},
+        })
+    with pytest.raises(job.ConfigError, match="n_buckets was removed"):
+        job.validate_observability_config({
+            "job": "observability", "input": {"events_path": "e"},
+            "out_root": "x", "observability": {"n_buckets": 8},
         })
 
 

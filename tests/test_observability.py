@@ -1,20 +1,18 @@
 """Job-level tests for plans/observability.py: committed tables match
-direct operator recomputes, per-user stages run shuffle-free off the
-bucketed layout, and the manifest makes re-runs no-ops."""
+direct operator recomputes, the job registers nothing in the session
+catalog, and the manifest makes re-runs and resumes converge."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from conftest import table_mtime_fingerprint
 from otel2pv_spark import datagen
 from otel2pv_spark.operators import aggregate as agg_op
-from otel2pv_spark.operators import pattern as pat_op
 from otel2pv_spark.operators import sessionize as session_op
 from otel2pv_spark.plans import observability as obs
 from otel2pv_spark.sources.catalog import Catalog
+from otel2pv_spark.sources.manifest import RunManifest
 
 
 def _rows(df, cols):
@@ -24,7 +22,11 @@ def _rows(df, cols):
 def test_run_observability_end_to_end(spark, tmp_path, sf_dir):
     ev = datagen.load_events(spark, sf_dir)
     cfg = obs.ObsConfig(out_root=str(tmp_path / "obs"), run_id="obs1")
+    tables_before = {t.name for t in spark.catalog.listTables()}
     res = obs.run_observability(spark, ev, cfg)
+    # every output, the events layout included, is a Catalog table
+    # under out_root: the session catalog gains nothing
+    assert {t.name for t in spark.catalog.listTables()} == tables_before
 
     assert set(res["committed"]) == {
         "layout", "rollup", "anomalies", "sessions", "funnel", "bursts",
@@ -58,42 +60,6 @@ def test_run_observability_end_to_end(spark, tmp_path, sf_dir):
     assert res2["n_sessions"] == res["n_sessions"]
 
 
-def test_per_user_stages_shuffle_free_on_bucketed_layout(spark, tmp_path, sf_dir):
-    """The point of the layout stage: sessionize / funnel / bursts over
-    the bucketed table must contain NO hash-partitioning Exchange —
-    the user shuffle was paid once at write time."""
-    ev = datagen.load_events(spark, sf_dir)
-    out = str(tmp_path / "obs2")
-    cat = Catalog(spark, out)
-    tbl = obs.events_table(out)
-    cat.write_bucketed(
-        ev, tbl, bucket_by="user_id", n_buckets=8,
-        sort_by=("user_id", "ts", "event_id"),
-    )
-    bev = cat.read_bucketed(tbl)
-
-    plans = {
-        "sessionize": session_op.sessionize(bev, gap_sec=7200),
-        "bursts": pat_op.match_runs(
-            bev, F.col("event_type") == "error", min_len=3,
-            by="user_id", order_col="ts",
-        ),
-        "funnel": pat_op.funnel(
-            bev, [F.col("event_type") == s for s in ("view", "click")],
-            by="user_id", order_col="ts",
-        ),
-    }
-    for name, df in plans.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, name
-
-    # contrast: the same plan over a PLAIN parquet read does shuffle
-    plain = session_op.sessionize(ev, gap_sec=7200)
-    assert "Exchange hashpartitioning" in (
-        plain._jdf.queryExecution().executedPlan().toString()
-    )
-
-
 def test_resume_skips_committed_steps_mid_run(spark, tmp_path, sf_dir):
     """Crash-resume: pre-commit two steps in the manifest, run, and the
     job must not rewrite them (their outputs keep their mtimes)."""
@@ -109,33 +75,31 @@ def test_resume_skips_committed_steps_mid_run(spark, tmp_path, sf_dir):
     assert res2["committed"] == res1["committed"]
 
 
-def test_fresh_session_reattaches_bucketed_layout(spark, tmp_path, sf_dir):
-    """Crash-resume in a NEW session: the session catalog forgot the
-    bucketed table; _bucketed_events re-attaches the committed files
-    via register_bucketed and the layout stays shuffle-free."""
+def test_layout_only_manifest_resumes_to_from_scratch_tables(
+    spark, tmp_path, sf_dir
+):
+    """Crash right after the layout step: only ``layout`` is in the
+    manifest. The resumed run reads the committed events snapshot (its
+    own input is empty here) and its five tables equal a from-scratch
+    run's."""
     ev = datagen.load_events(spark, sf_dir)
+    scratch = obs.ObsConfig(out_root=str(tmp_path / "full"), run_id="full")
+    obs.run_observability(spark, ev, scratch)
+
     out = str(tmp_path / "obs4")
+    Catalog(spark, out).write(ev, "obs_events")
+    RunManifest(out, "obs4").commit("layout")
     cfg = obs.ObsConfig(out_root=out, run_id="obs4")
-    cat = Catalog(spark, out)
-    tbl = obs.events_table(out)
-    ident = cat.write_bucketed(
-        ev, tbl, bucket_by="user_id", n_buckets=cfg.n_buckets,
-        sort_by=("user_id", "ts", "event_id"),
-    )
-    spark.sql(f"DROP TABLE {ident}")  # simulate a fresh session
+    res = obs.run_observability(spark, ev.limit(0), cfg)
+    assert res["n_events"] == ev.count()
 
-    bev = obs._bucketed_events(spark, cat, tbl, cfg)
-    assert bev.count() == ev.count()
-    plan = (
-        session_op.sessionize(bev, gap_sec=7200)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange hashpartitioning" not in plan
-
-
-def test_events_table_namespaced_by_out_root(tmp_path):
-    assert obs.events_table("/a") != obs.events_table("/b")
-    assert obs.events_table("/a") == obs.events_table("/a")
+    for t in ("obs_rollup", "obs_anomalies", "obs_sessions", "obs_funnel",
+              "obs_bursts"):
+        want = Catalog(spark, scratch.out_root).read(t)
+        got = Catalog(spark, out).read(t)
+        assert sorted(map(repr, got.collect())) == sorted(
+            map(repr, want.collect())
+        ), t
 
 
 def test_burn_rate_alerts_multi_window_golden(spark):
