@@ -1,9 +1,9 @@
 """Streaming pipeline — the live-queue analog of the batch DAG.
 
-Two modes, mirroring the reference's architecture (file:line into
-/root/reference):
+The module holds three kinds of streaming code, mirroring the
+reference's architecture (file:line cites the reference source):
 
-1. **Micro-batch incremental pipeline** (``run_stream_pipeline``):
+1. **Micro-batch pipelines.** ``run_stream_pipeline`` (append mode):
    ``readStream`` over a growing transcript directory →
    ``foreachBatch`` running the batch DAG's single-pass plan (parse →
    verify → sequence → enrich → route) → per-sink append. This is the
@@ -12,11 +12,11 @@ Two modes, mirroring the reference's architecture (file:line into
    delivery: source offsets + checkpointLocation give the
    ack-after-downstream-success semantics (Server/consumers.go:638-651)
    — a batch is only committed to the offset log after its
-   foreachBatch writes return.
-   Assumption (documented): a conversation's turns arrive within one
-   micro-batch (file = bundle of whole conversations), the analog of
-   the Sequencer receiving the whole tree as one message
-   (sequencer.go:812-832). Cross-batch conversations need mode 2.
+   foreachBatch writes return. It assumes a conversation's turns
+   arrive within one micro-batch (file = bundle of whole
+   conversations), as the Sequencer receives the whole tree as one
+   message (sequencer.go:812-832); ``run_stream_pipeline_keyed`` does
+   not.
 
 2. **Stateful group-and-verify** (``stateful_group_verify``):
    ``applyInPandasWithState`` keyed by conv_id — the actor-per-tree
@@ -31,6 +31,13 @@ Two modes, mirroring the reference's architecture (file:line into
    already-emitted conversation start a NEW state instance, matching
    the mop-up re-enqueue (groupandverify.go:456-474).
 
+3. **Live twins of batch operators**: ``stream_*`` transforms return
+   a streaming DataFrame; the foreachBatch sinks (dedup, anomaly,
+   counter rate, burn rate, rate limit) commit state (``state_root``)
+   and outputs (``out_root``) through the Catalog, under the table
+   names each docstring lists. ``run_stream_pipeline`` is the one raw
+   writer left.
+
 Scale shape: state is hash-partitioned by conv_id across executors
 (same as the batch shuffle); per-conv state is bounded by conversation
 length; RocksDB state store + changelog checkpointing are the
@@ -39,6 +46,8 @@ production knobs (config, not code).
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -49,6 +58,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..snapshot import snapshot
+from ..sources.catalog import Catalog
 from ..plans.pipeline import (
     OUTPUT_COLS,
     REJECT_COLS,
@@ -68,15 +78,45 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
+def _read_file_stream(
+    spark: SparkSession, schema: T.StructType, path: str, max_files: int | None
+) -> DataFrame:
+    """File-source stream over a parquet directory: new files are the
+    arriving messages, source offsets are the acks (S1/S2 analog)."""
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    return reader.parquet(path)
+
+
+def _start(stream: DataFrame, process, checkpoint: str, available_now: bool):
+    """Start ``process`` as the query's foreachBatch sink in append
+    output mode; ``available_now`` drains the input present at start,
+    then stops."""
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _append_log(cat, df: DataFrame, table: str) -> None:
+    """Append a per-batch delta to a log table. The first commit lands
+    even when empty, so the table is readable; later empty deltas
+    commit nothing (an empty append still adds a file). Pass a
+    snapshot: the emptiness probe runs the plan once more otherwise."""
+    if not cat.exists(table) or not df.isEmpty():
+        cat.append(df, table)
+
+
 def read_transcripts_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream over a transcript directory (S1/S2 analog:
-    new files are the arriving messages; source offsets are the acks)."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    """File-source stream over a transcript directory."""
+    return _read_file_stream(spark, TRANSCRIPT_SCHEMA, path, max_files_per_trigger)
 
 
 def run_stream_pipeline(
@@ -90,7 +130,8 @@ def run_stream_pipeline(
     """foreachBatch micro-batch pipeline: each micro-batch runs the
     batch DAG itself (``build_single_pass`` with the default config),
     persisted once and written as its two filters — routable rows per
-    sink, and rejects."""
+    sink, and rejects. The package's one raw writer (``Catalog.append``
+    refuses the ``sink`` partitioning): a replayed batch appends twice."""
     cfg = PipelineConfig()
     is_reject = F.col("reject_reason").isNotNull()
 
@@ -106,14 +147,7 @@ def run_stream_pipeline(
         finally:
             sp.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process, checkpoint, available_now)
 
 
 def run_stream_pipeline_keyed(
@@ -150,7 +184,6 @@ def run_stream_pipeline_keyed(
     import uuid as _uuid
 
     from ..plans import pipeline as pl
-    from ..sources.catalog import Catalog
 
     # per-START identity mixed into each batch's run-manifest id:
     # batch_id alone is NOT a global identity — a reset/relocated
@@ -209,14 +242,7 @@ def run_stream_pipeline_keyed(
             role_meta=role_meta,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process, checkpoint, available_now)
 
 
 def stream_windowed_metrics(
@@ -300,59 +326,13 @@ DOC_STREAM_SCHEMA = T.StructType(
 def read_docs_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
-
-
-def _append_alerts(df: DataFrame, path: str) -> None:
-    """Append alert rows, keeping the table READABLE when empty: an
-    append of an empty DataFrame emits only _SUCCESS (no part file),
-    so a healthy stream would leave a directory schema inference
-    cannot read. Seed the schema with an unpartitioned limit(0)
-    overwrite instead (the same empty-write trap Catalog.write
-    guards, sources/catalog.py) and skip the no-op append. The input
-    is snapshot()-ed first: the emptiness probe would otherwise
-    execute the full (uncached) alert pipeline once, and the append a
-    second time — doubling the hot per-batch path."""
-    import os as _os
-
-    df = df.transform(snapshot)
-    if df.isEmpty():
-        if not _os.path.isdir(path):
-            df.limit(0).write.mode("overwrite").parquet(path)
-        return
-    df.write.mode("append").parquet(path)
-
-
-def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a foreachBatch state table, returning None when it does not
-    exist YET — a missing path, or a directory created but with no
-    committed files (the crash window between mkdir and file commit
-    surfaces as UNABLE_TO_INFER_SCHEMA). Any OTHER read failure
-    (transient FS error, corrupt footer, permissions) raises and aborts
-    the batch: a state silently read as empty would re-admit known
-    duplicates / recompute baselines from nothing, so absence must be
-    distinguished from unreadability (fail closed)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
+    """File-source stream over a document directory."""
+    return _read_file_stream(spark, DOC_STREAM_SCHEMA, path, max_files_per_trigger)
 
 
 def run_stream_dedup(
     doc_stream: DataFrame,
-    index_path: str,
+    state_root: str,
     out_root: str,
     checkpoint: str,
     id_col: str = "doc_id",
@@ -361,26 +341,29 @@ def run_stream_dedup(
 ):
     """Continuous near-dup gate: each micro-batch of new documents is
     LSH-probed against the STORED band index
-    (:func:`..functions.dedup.minhash_band_table`); novel docs append
-    to ``{out_root}/clean`` and their bands append to the index, dups
-    route to ``{out_root}/dup_rejects`` with the matched pair. The
-    streaming form of ``minhash_lsh_candidates_incremental`` — the
-    corpus is never rescanned; per-batch work is batch-size × bucket
-    occupancy.
+    (:func:`..functions.dedup.minhash_band_table`); novel docs and
+    their bands are appended, dups are routed out with the matched
+    pair. The streaming form of ``minhash_lsh_candidates_incremental``
+    — the corpus is never rescanned; per-batch work is batch-size ×
+    bucket occupancy.
+
+    Tables, all append logs: ``state_root``/``band_index`` (seed it
+    with ``Catalog.write`` to gate against an existing corpus);
+    ``out_root``/``clean`` (the novel docs) and
+    ``out_root``/``dup_rejects`` (``id_col``, ``matched_id``).
 
     Drop rule (matches the batch cluster canonical rule "keep the min
     member"): a new doc drops if it band-matches any indexed doc, or a
     smaller-id doc of the same batch. Source offsets + checkpoint give
-    at-least-once appends; on the real target the two appends become
+    at-least-once appends; on the real target the three appends become
     one Iceberg transaction (catalog.py mapping) for exactly-once."""
     from ..functions import dedup as dd
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        state = Catalog(spark, state_root)
+        out = Catalog(spark, out_root)
         batch = batch.transform(snapshot)  # stabilize: read twice below
-        # absence vs unreadability: see _read_state (fail closed)
-        idx = _read_state(spark, index_path)
-        have_index = idx is not None
 
         # band the batch ONCE: the same table feeds candidate probing
         # AND the index append (the shingle+minhash pass is the
@@ -388,8 +371,11 @@ def run_stream_dedup(
         new_bands = dd.minhash_band_table(
             batch, id_col=id_col, text_col=text_col
         ).transform(snapshot)
-        if not have_index:
-            idx = new_bands.limit(0)  # empty index, same schema
+        idx = (
+            state.read("band_index")
+            if state.exists("band_index")
+            else new_bands.limit(0)  # empty index, same schema
+        )
         cand = dd.minhash_lsh_candidates_incremental(
             batch, idx, id_col=id_col, text_col=text_col, new_bands=new_bands
         )
@@ -411,33 +397,28 @@ def run_stream_dedup(
                 .alias("matched_id"),
             )
         )
-        first_match = dup.groupBy("_dup").agg(F.min("matched_id").alias("matched_id"))
-
-        kept = batch.join(
-            first_match.select(F.col("_dup").alias(id_col)), id_col, "left_anti"
-        ).transform(snapshot)  # one materialization feeds both appends
-        dropped = batch.join(
-            first_match.withColumnRenamed("_dup", id_col), id_col
+        # one materialization feeds the three appends and their probes
+        first_match = (
+            dup.groupBy("_dup")
+            .agg(F.min("matched_id").alias("matched_id"))
+            .transform(snapshot)
         )
+        dup_ids = first_match.select(F.col("_dup").alias(id_col))
 
-        kept.write.mode("append").parquet(f"{out_root}/clean")
+        _append_log(out, batch.join(dup_ids, id_col, "left_anti"), "clean")
         # index append reuses the batch's bands (no re-hash): keep only
         # the surviving docs' rows
-        new_bands.join(
-            first_match.select(F.col("_dup").alias(id_col)), id_col, "left_anti"
-        ).write.mode("append").parquet(index_path)
-        dropped.select(id_col, "matched_id").write.mode("append").parquet(
-            f"{out_root}/dup_rejects"
+        _append_log(
+            state, new_bands.join(dup_ids, id_col, "left_anti"), "band_index"
+        )
+        _append_log(
+            out,
+            batch.join(first_match.withColumnRenamed("_dup", id_col), id_col)
+            .select(id_col, "matched_id"),
+            "dup_rejects",
         )
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(doc_stream, process, checkpoint, available_now)
 
 
 # ------------------------------------------------------- stateful mode
@@ -586,10 +567,7 @@ def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over the raw event log."""
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return _read_file_stream(spark, EVENT_STREAM_SCHEMA, path, max_files_per_trigger)
 
 
 def stream_rollup(
@@ -686,8 +664,8 @@ def stream_hll_state(
 
 def run_stream_anomaly(
     event_stream: DataFrame,
-    state_path: str,
-    alerts_path: str,
+    state_root: str,
+    out_root: str,
     checkpoint: str,
     width: str = "1 day",
     key: str = "event_type",
@@ -717,6 +695,11 @@ def run_stream_anomaly(
     append-mode windows finalize in watermark order), so the batch
     prunes the stored rollup to |keys| x trail rows before the union —
     the anomaly window never sees the full history, let alone events.
+
+    Tables, both append logs: ``state_root``/``rollup`` (``key``,
+    ``window_start_us``, ``n_events``) and ``out_root``/``alerts``
+    (the ``anomaly_flags`` rows of alerting windows).
+
     At-least-once caveat: a replayed batch would re-append state rows
     (double-counting the baseline); on the real target the state
     append is an Iceberg MERGE on (key, window) for exactly-once —
@@ -738,9 +721,8 @@ def run_stream_anomaly(
         ).transform(snapshot)
         if delta.isEmpty():
             return
-        state = _read_state(spark, state_path)
-        if state is None:
-            state = delta.limit(0)
+        cat = Catalog(spark, state_root)
+        state = cat.read("rollup") if cat.exists("rollup") else delta.limit(0)
         # the newest `trail` windows per key are the only state rows a
         # NEW window's trailing baseline can use
         w_recent = Window.partitionBy(key).orderBy(
@@ -760,18 +742,11 @@ def run_stream_anomaly(
             delta.select(key, "window_start_us"),
             [key, "window_start_us"],
             "left_semi",
-        )
-        _append_alerts(alerts, alerts_path)
-        delta.write.mode("append").parquet(state_path)
+        ).transform(snapshot)
+        _append_log(Catalog(spark, out_root), alerts, "alerts")
+        cat.append(delta, "rollup")
 
-    writer = (
-        roll.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(roll, process, checkpoint, available_now)
 
 
 def run_stream_counter_rate(
@@ -801,26 +776,34 @@ def run_stream_counter_rate(
     2. rows at or before their series' stored sample are LATE under
        the PromQL scrape-order contract (a counter's samples arrive in
        order per series; a late sample would lag against the wrong
-       neighbor) — routed to ``{out_root}/late``, never silently
+       neighbor) — routed to the ``late`` log, never silently
        mis-lagged;
     3. union state rows with the fresh rows and run the batch
        ``counter_rate`` unchanged: a state row has no predecessor in
        the union so it emits NO delta of its own, but it IS the lag
        donor for the series' first fresh sample — the cross-batch
        delta falls out of the operator's own null-prev rule;
-    4. append the per-window increments to ``{out_root}/increase``
-       (sums are mergeable; ``read_counter_rates`` folds the log), and
-       REPLACE the state with the new per-series last samples.
+    4. append the per-window increments to the ``increase`` log (sums
+       are mergeable; ``read_counter_rates`` folds the log), and
+       REPLACE the state with the new per-series last samples, tagged
+       with the batch identity.
+
+    Tables: ``state_root``/``series_last`` (replaced per batch: each
+    series' last sample plus ``_batch``); ``out_root``/``late`` and
+    ``out_root``/``increase`` (append logs).
 
     State is one row per live series — the minimum any reset-aware
     rate can hold — and per-batch cost is batch-size + |series|,
-    independent of stream age. At-least-once caveat: a replayed batch
-    re-appends its increments; on the real target the increase append
-    is an Iceberg MERGE at (keys, window) grain (the rollup_merge
-    mapping) for exactly-once.
+    independent of stream age. ``_batch`` pairs the batch id with the
+    query id in ``<checkpoint>/metadata``, which survives restarts (a
+    bare batch id restarts at 0 under a new checkpoint): a batch
+    replayed after its state replace finds itself there and returns
+    instead of routing its own samples to ``late``. A crash before the
+    replace re-appends that batch's late rows and increments; on the
+    real target the increase append is an Iceberg MERGE at (keys,
+    window) grain (the rollup_merge mapping) for exactly-once.
     """
     from ..operators.aggregate import counter_rate
-    from ..sources.catalog import Catalog
 
     cols = [*series_cols, ts_col, tiebreak_col, value_col]
 
@@ -831,12 +814,17 @@ def run_stream_counter_rate(
         ).transform(snapshot)
         if batch.isEmpty():
             return
+        with open(os.path.join(checkpoint, "metadata")) as fh:
+            tag = f"{json.load(fh)['id']}:{batch_id}"
         cat = Catalog(spark, state_root)
-        state = (
-            cat.read("series_last")
-            if cat.exists("series_last")
-            else batch.select(*cols).limit(0)
-        )
+        out = Catalog(spark, out_root)
+        if cat.exists("series_last"):
+            stored = cat.read("series_last")
+            if not stored.filter(F.col("_batch") == tag).isEmpty():
+                return
+            state = stored.select(*cols)
+        else:
+            state = batch.select(*cols).limit(0)
 
         st = state.select(
             *[F.col(c).alias(f"_s_{c}") for c in series_cols],
@@ -854,13 +842,11 @@ def run_stream_counter_rate(
             )
         )
         joined = joined.withColumn("_late", is_late).transform(snapshot)
-        joined.filter("_late").select(*cols).write.mode("append").parquet(
-            f"{out_root}/late"
-        )
+        _append_log(out, joined.filter("_late").select(*cols), "late")
         fresh = joined.filter(~F.col("_late")).select(*cols)
 
         union = state.unionByName(fresh).transform(snapshot)
-        counter_rate(
+        increase = counter_rate(
             union,
             series_cols=series_cols,
             ts_col=ts_col,
@@ -868,7 +854,8 @@ def run_stream_counter_rate(
             tiebreak_col=tiebreak_col,
             width=width,
             keys=keys,
-        ).write.mode("append").parquet(f"{out_root}/increase")
+        ).transform(snapshot)
+        _append_log(out, increase, "increase")
 
         new_state = (
             union.groupBy(*[F.col(c) for c in series_cols])
@@ -878,26 +865,21 @@ def run_stream_counter_rate(
                 F.col(f"_m.{ts_col}").alias(ts_col),
                 F.col(f"_m.{tiebreak_col}").alias(tiebreak_col),
                 F.col(f"_m.{value_col}").alias(value_col),
+                F.lit(tag).alias("_batch"),
             )
         )
         cat.write(new_state, "series_last")
 
-    writer = (
-        event_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(event_stream, process, checkpoint, available_now)
 
 
 def read_counter_rates(
     spark: SparkSession, out_root: str, keys: tuple[str, ...] = ("event_type",)
 ) -> DataFrame:
-    """Fold the mergeable increase log to final per-window rates —
-    identical output columns to the batch ``counter_rate``."""
-    inc = spark.read.parquet(f"{out_root}/increase")
+    """Fold ``run_stream_counter_rate``'s mergeable ``increase`` log
+    under ``out_root`` to final per-window rates — identical output
+    columns to the batch ``counter_rate``."""
+    inc = Catalog(spark, out_root).read("increase")
     return inc.groupBy(
         "window_start_us", "window_end_us", *[F.col(k) for k in keys]
     ).agg(
@@ -1006,7 +988,7 @@ def stream_exact_dedup(
 def run_stream_burn_rate(
     event_stream: DataFrame,
     state_root: str,
-    alerts_path: str,
+    out_root: str,
     checkpoint: str,
     error_col: str = "is_error",
     budget_ppm: int = 1000,
@@ -1055,13 +1037,17 @@ def run_stream_burn_rate(
        same decisions. The alert append is the one remaining
        at-least-once surface (duplicate alert ROWS, never wrong
        ones); the real target makes it an Iceberg MERGE on
-       (key, window) for exactly-once."""
+       (key, window) for exactly-once.
+
+    Tables: ``state_root``/``short_rollup`` (replaced per batch:
+    ``window_start_us``, ``key_col``, ``errors``, ``total``) and
+    ``out_root``/``alerts`` (append log of
+    ``burn_rate_from_short`` rows)."""
     from ..operators.aggregate import (
         _validate_aligned_widths,
         _win,
         burn_rate_from_short,
     )
-    from ..sources.catalog import Catalog
 
     long_us = _validate_aligned_widths(short_width, long_width)
 
@@ -1128,8 +1114,8 @@ def run_stream_burn_rate(
             delta.select(key_col, "window_start_us"),
             [key_col, "window_start_us"],
             "left_semi",
-        )
-        _append_alerts(alerts, alerts_path)
+        ).transform(snapshot)
+        _append_log(Catalog(spark, out_root), alerts, "alerts")
         # retained state: only long windows >= one long_width behind
         # the newest delta window can still be touched (watermark
         # order); dedup on (key, window) makes a batch replay
@@ -1153,14 +1139,7 @@ def run_stream_burn_rate(
         )
         cat.write(new_state, "short_rollup")
 
-    writer = (
-        short.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(short, process, checkpoint, available_now)
 
 
 def run_stream_rate_limit(
@@ -1210,11 +1189,12 @@ def run_stream_rate_limit(
     the prune guards against (prunes nothing) instead of NULLing the
     compare and wiping the admission log.
 
-    Kept rows append to ``{out_root}/kept``; the census log appends
-    per-batch (key, window, n_total, n_kept, n_dropped) deltas that
-    SUM to the batch operator's census (counts are mergeable)."""
+    Tables: ``state_root``/``admitted`` (the log above, replaced per
+    batch); append logs ``out_root``/``kept`` (admitted rows with their
+    ``sample_rank``) and ``out_root``/``census`` (per-batch (key,
+    window, n_total, n_kept, n_dropped) deltas that SUM to the batch
+    operator's census — counts are mergeable)."""
     from ..operators.aggregate import _width_us, _win
-    from ..sources.catalog import Catalog
 
     if max_per_window < 1:
         raise ValueError(
@@ -1267,10 +1247,15 @@ def run_stream_rate_limit(
             .drop("_sk", "_sw", "_base0")
             .transform(snapshot)
         )
+        out = Catalog(spark, out_root)
         kept = ranked.filter(F.col("_rn") + F.col("_base") <= max_per_window)
-        kept.withColumn(
-            "sample_rank", (F.col("_rn") + F.col("_base")).cast("int")
-        ).drop("_rn", "_base").write.mode("append").parquet(f"{out_root}/kept")
+        _append_log(
+            out,
+            kept.withColumn(
+                "sample_rank", (F.col("_rn") + F.col("_base")).cast("int")
+            ).drop("_rn", "_base"),
+            "kept",
+        )
         census_delta = (
             ranked.groupBy(key_col, "window_start_us", "_base")
             .agg(F.count("*").alias("n_total"))
@@ -1288,7 +1273,7 @@ def run_stream_rate_limit(
             .withColumn("n_dropped", F.col("n_total") - F.col("n_kept"))
             .transform(snapshot)
         )
-        census_delta.write.mode("append").parquet(f"{out_root}/census")
+        _append_log(out, census_delta, "census")
         # replace this batch's own log rows (replay reconverges) and
         # prune grains past the 2 x width horizon behind the newest
         # window this batch touched (prune-less-never-more: a batch of
@@ -1321,11 +1306,4 @@ def run_stream_rate_limit(
         )
         cat.write(new_state, "admitted")
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process, checkpoint, available_now)

@@ -150,8 +150,10 @@ def test_stream_dedup_gate(spark, tmp_path):
     corpus = spark.read.parquet(f"{SF}/../sf0.01/documents.parquet").select(
         "doc_id", "text"
     ).filter(F.col("doc_id") < 100)
-    index_path = str(tmp_path / "band_index")
-    dd.minhash_band_table(corpus).write.parquet(index_path)
+    from otel2pv_spark.sources.catalog import Catalog
+
+    state = str(tmp_path / "dedup_state")
+    Catalog(spark, state).write(dd.minhash_band_table(corpus), "band_index")
 
     texts = {r["doc_id"]: r["text"] for r in corpus.limit(5).collect()}
     src = str(tmp_path / "docs_src")
@@ -175,20 +177,22 @@ def test_stream_dedup_gate(spark, tmp_path):
     out = str(tmp_path / "dedup_out")
     q = run_stream_dedup(
         read_docs_stream(spark, src, max_files_per_trigger=1),
-        index_path, out, str(tmp_path / "dd_ckpt"), available_now=True,
+        state, out, str(tmp_path / "dd_ckpt"), available_now=True,
     )
     q.awaitTermination(300)
 
-    kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/clean").collect()}
+    kept = {r["doc_id"] for r in read_table(spark, out, "clean").collect()}
     dropped = {
         r["doc_id"]: r["matched_id"]
-        for r in spark.read.parquet(f"{out}/dup_rejects").collect()
+        for r in read_table(spark, out, "dup_rejects").collect()
     }
     assert kept == {1000, 1001, 2002}
     assert dropped[1002] == 0 and dropped[2001] == 1
     assert dropped[2000] == 1000  # matched the batch-1 KEPT doc via the index
     # index grew by exactly the kept docs' bands (3 bands each)
-    idx_ids = {r["doc_id"] for r in spark.read.parquet(index_path).collect()}
+    idx_ids = {
+        r["doc_id"] for r in read_table(spark, state, "band_index").collect()
+    }
     assert {1000, 1001, 2002} <= idx_ids and 1002 not in idx_ids
 
 
@@ -487,7 +491,7 @@ def test_stream_anomaly_alerts_match_batch(spark, tmp_path):
 
     src = str(tmp_path / "an_src")
     state = str(tmp_path / "an_state")
-    alerts = str(tmp_path / "an_alerts")
+    out = str(tmp_path / "an_out")
     ckpt = str(tmp_path / "an_ckpt")
     os.makedirs(src, exist_ok=True)
 
@@ -518,7 +522,7 @@ def test_stream_anomaly_alerts_match_batch(spark, tmp_path):
 
     q = sp.run_stream_anomaly(
         sp.read_events_stream(spark, src, max_files_per_trigger=1),
-        state_path=state, alerts_path=alerts, checkpoint=ckpt,
+        state_root=state, out_root=out, checkpoint=ckpt,
         width="1 hour", trail=3, nsigma=3, watermark_delay="30 minutes",
         available_now=True,
     )
@@ -526,11 +530,11 @@ def test_stream_anomaly_alerts_match_batch(spark, tmp_path):
 
     got = {
         (r.event_type, r.window_start_us)
-        for r in spark.read.parquet(alerts).collect()
+        for r in read_table(spark, out, "alerts").collect()
     }
     state_windows = {
         (r.event_type, r.window_start_us)
-        for r in spark.read.parquet(state).collect()
+        for r in read_table(spark, state, "rollup").collect()
     }
     # batch recompute over the SAME finalized windows
     ev = spark.read.parquet(src)
@@ -680,23 +684,6 @@ def test_stream_correlate_matches_batch(spark, tmp_path):
     assert matched == want
 
 
-def test_read_state_distinguishes_absent_and_empty_dir(spark, tmp_path):
-    """_read_state: missing path and created-but-empty dir both mean
-    'no state yet' (None); a real table reads through."""
-    from otel2pv_spark.streaming.stream_pipeline import _read_state
-
-    missing = str(tmp_path / "nope")
-    assert _read_state(spark, missing) is None
-
-    empty = str(tmp_path / "emptydir")
-    os.makedirs(empty)  # the crash window between mkdir and commit
-    assert _read_state(spark, empty) is None
-
-    real = str(tmp_path / "real")
-    spark.range(3).write.parquet(real)
-    assert _read_state(spark, real).count() == 3
-
-
 def test_stream_exact_dedup_drops_redeliveries(spark, tmp_path):
     """Replays of already-seen event_ids arriving in later micro-batches
     (inside the watermark horizon) are dropped; distinct events all
@@ -742,21 +729,42 @@ def test_stream_exact_dedup_drops_redeliveries(spark, tmp_path):
     assert got == [1, 2, 3]
 
 
+def _write_counter_files(src, batches, first=0):
+    """One event file per micro-batch, ``f<first>``, ``f<first+1>``, …
+    (distinct mtimes order them)."""
+    os.makedirs(src, exist_ok=True)
+    for i, chunk in enumerate(batches, start=first):
+        pd.DataFrame(
+            [{"event_id": e, "ts": pd.Timestamp(t), "user_id": u,
+              "event_type": k, "value": v, "props": ""}
+             for e, t, u, k, v in chunk]
+        ).to_parquet(f"{src}/f{i}.parquet", index=False,
+                     coerce_timestamps="us", allow_truncated_timestamps=True)
+        os.utime(f"{src}/f{i}.parquet", (time.time() + i,) * 2)
+
+
+def _run_counter_rate(spark, src, state, out, ckpt):
+    from otel2pv_spark.streaming import stream_pipeline as sp
+
+    q = sp.run_stream_counter_rate(
+        sp.read_events_stream(spark, src, max_files_per_trigger=1),
+        state_root=state, out_root=out, checkpoint=ckpt,
+        width="1 hour", available_now=True,
+    )
+    q.awaitTermination(300)
+    return q
+
+
 def test_stream_counter_rate_equals_batch(spark, tmp_path):
     """run_stream_counter_rate over three micro-batches == the batch
     counter_rate over the full input (cross-batch deltas included —
     the state row donates the lag), with late rows routed out."""
-    import pandas as pd
-
     from otel2pv_spark.operators import aggregate as agg_op
     from otel2pv_spark.streaming import stream_pipeline as sp
 
-    src = str(tmp_path / "cr_src")
-    out = str(tmp_path / "cr_out")
-    state = str(tmp_path / "cr_state")
-    ckpt = str(tmp_path / "cr_ckpt")
-    os.makedirs(src, exist_ok=True)
-
+    src, state, out, ckpt = (
+        str(tmp_path / d) for d in ("src", "state", "out", "ckpt")
+    )
     # two series; user 7 resets (12.5 -> 3.0) ACROSS the batch split,
     # so the delta only exists if state donates the lag
     rows = [
@@ -769,22 +777,8 @@ def test_stream_counter_rate_equals_batch(spark, tmp_path):
         # --- batch 3 ---
         (6, "2026-01-01 11:30:00", 7, "bytes", 5.5),
     ]
-    splits = [rows[:3], rows[3:5], rows[5:]]
-    for i, chunk in enumerate(splits):
-        pd.DataFrame(
-            [{"event_id": e, "ts": pd.Timestamp(t), "user_id": u,
-              "event_type": k, "value": v, "props": ""}
-             for e, t, u, k, v in chunk]
-        ).to_parquet(f"{src}/f{i}.parquet", index=False,
-                     coerce_timestamps="us", allow_truncated_timestamps=True)
-        os.utime(f"{src}/f{i}.parquet", (time.time() + i,) * 2)
-
-    q = sp.run_stream_counter_rate(
-        sp.read_events_stream(spark, src, max_files_per_trigger=1),
-        state_root=state, out_root=out, checkpoint=ckpt,
-        width="1 hour", available_now=True,
-    )
-    q.awaitTermination(300)
+    _write_counter_files(src, [rows[:3], rows[3:5], rows[5:]])
+    _run_counter_rate(spark, src, state, out, ckpt)
 
     batch_df = spark.createDataFrame(
         [(e, t, u, k, v) for e, t, u, k, v in rows],
@@ -805,52 +799,114 @@ def test_stream_counter_rate_equals_batch(spark, tmp_path):
            if w == pd.Timestamp("2026-01-01 10:00:00").value // 1000]
     assert ten == [(5_500_000, 2)]
     # state holds exactly the two series' last samples
-    from otel2pv_spark.sources.catalog import Catalog
-
-    st = Catalog(spark, state).read("series_last").collect()
+    st = read_table(spark, state, "series_last").collect()
     assert {(r.user_id, r.event_id) for r in st} == {(7, 6), (9, 5)}
 
 
 def test_stream_counter_rate_routes_late_rows(spark, tmp_path):
     """A sample at/behind its series' stored last sample is parked in
     /late, not lagged against the wrong neighbor."""
-    import pandas as pd
-
     from otel2pv_spark.streaming import stream_pipeline as sp
 
-    src = str(tmp_path / "crl_src")
-    out = str(tmp_path / "crl_out")
-    state = str(tmp_path / "crl_state")
-    ckpt = str(tmp_path / "crl_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    batches = [
+    src, state, out, ckpt = (
+        str(tmp_path / d) for d in ("src", "state", "out", "ckpt")
+    )
+    _write_counter_files(src, [
         [(1, "2026-01-01 10:00:00", 7, "bytes", 10.0),
          (2, "2026-01-01 10:10:00", 7, "bytes", 12.0)],
         [(3, "2026-01-01 10:05:00", 7, "bytes", 11.0),   # LATE
          (4, "2026-01-01 10:20:00", 7, "bytes", 13.0)],  # fresh
-    ]
-    for i, chunk in enumerate(batches):
-        pd.DataFrame(
-            [{"event_id": e, "ts": pd.Timestamp(t), "user_id": u,
-              "event_type": k, "value": v, "props": ""}
-             for e, t, u, k, v in chunk]
-        ).to_parquet(f"{src}/f{i}.parquet", index=False,
-                     coerce_timestamps="us", allow_truncated_timestamps=True)
-        os.utime(f"{src}/f{i}.parquet", (time.time() + i,) * 2)
+    ])
+    _run_counter_rate(spark, src, state, out, ckpt)
 
-    q = sp.run_stream_counter_rate(
-        sp.read_events_stream(spark, src, max_files_per_trigger=1),
-        state_root=state, out_root=out, checkpoint=ckpt,
-        width="1 hour", available_now=True,
-    )
-    q.awaitTermination(300)
-
-    late = spark.read.parquet(f"{out}/late").collect()
+    late = read_table(spark, out, "late").collect()
     assert [r.event_id for r in late] == [3]
     got = sp.read_counter_rates(spark, out).collect()
     # 2.0 (batch 1) + 1.0 (13 - 12 across batches; late row excluded)
     assert [(r.increase_micro, r.n_deltas) for r in got] == [(3_000_000, 2)]
+
+
+def test_stream_counter_rate_replay_after_state_commit(spark, tmp_path):
+    """A batch replayed after its state replace committed (its
+    commit-log entry lost) finds its own batch identity in the state
+    and commits nothing more: its in-order samples are not routed to
+    ``late`` and its increments are not appended twice."""
+    from otel2pv_spark.streaming import stream_pipeline as sp
+
+    src, state, out, ckpt = (
+        str(tmp_path / d) for d in ("src", "state", "out", "ckpt")
+    )
+    _write_counter_files(src, [
+        [(1, "2026-01-01 10:00:00", 7, "bytes", 10.0),
+         (2, "2026-01-01 10:10:00", 7, "bytes", 12.0)],
+        [(3, "2026-01-01 10:20:00", 7, "bytes", 13.0),
+         (4, "2026-01-01 10:30:00", 7, "bytes", 15.0)],
+    ])
+    _run_counter_rate(spark, src, state, out, ckpt)
+    before = sorted(map(tuple, sp.read_counter_rates(spark, out).collect()))
+    assert [(r[3], r[4]) for r in before] == [(5_000_000, 3)]
+
+    for f in ("1", ".1.crc"):
+        p = os.path.join(ckpt, "commits", f)
+        if os.path.exists(p):
+            os.remove(p)
+    q = _run_counter_rate(spark, src, state, out, ckpt)
+    assert q.lastProgress is not None  # the replayed batch ran
+
+    assert read_table(spark, out, "late").count() == 0
+    assert sorted(map(tuple, sp.read_counter_rates(spark, out).collect())) == before
+
+
+def test_stream_state_absent_vs_unreadable(spark, tmp_path):
+    """Sink state read through the Catalog: a state directory created
+    but never committed (the crash window before a first commit)
+    starts fresh; a committed state table with a corrupt data file
+    fails the query instead of being read as empty."""
+    import glob
+
+    from pyspark.errors import StreamingQueryException
+
+    from conftest import table_parquet_globs
+    from otel2pv_spark.sources.catalog import Catalog
+    from otel2pv_spark.streaming import stream_pipeline as sp
+
+    src, state, out, ckpt = (
+        str(tmp_path / d) for d in ("src", "state", "out", "ckpt")
+    )
+    cat = Catalog(spark, state)
+    if cat.strategy == "posix":
+        os.makedirs(cat.path("series_last"))
+    else:
+        os.makedirs(os.path.join(state, "_meta", "series_last"))
+        os.makedirs(os.path.join(state, "_data", "series_last", "s-crashed"))
+    _write_counter_files(src, [
+        [(1, "2026-01-01 10:00:00", 7, "bytes", 10.0),
+         (2, "2026-01-01 10:10:00", 7, "bytes", 12.0)],
+    ])
+    _run_counter_rate(spark, src, state, out, ckpt)
+    assert [(r.user_id, r.event_id) for r in cat.read("series_last").collect()] == [
+        (7, 2)
+    ]
+    assert [r.increase_micro for r in sp.read_counter_rates(spark, out).collect()] == [
+        2_000_000
+    ]
+
+    files = [
+        f for g in table_parquet_globs(state, "series_last")
+        for f in glob.glob(g, recursive=True)
+    ]
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    _write_counter_files(
+        src, [[(3, "2026-01-01 10:20:00", 7, "bytes", 13.0)]], first=1
+    )
+    with pytest.raises(StreamingQueryException):
+        _run_counter_rate(spark, src, state, out, ckpt)
+    assert [r.increase_micro for r in sp.read_counter_rates(spark, out).collect()] == [
+        2_000_000
+    ]
 
 
 def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
@@ -866,7 +922,7 @@ def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
 
     src = str(tmp_path / "br_src")
     state = str(tmp_path / "br_state")
-    alerts = str(tmp_path / "br_alerts")
+    out = str(tmp_path / "br_out")
     ckpt = str(tmp_path / "br_ckpt")
     os.makedirs(src, exist_ok=True)
 
@@ -903,7 +959,7 @@ def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
         "is_error", F.col("event_type") == "error"
     )
     q = sp.run_stream_burn_rate(
-        stream, state_root=state, alerts_path=alerts, checkpoint=ckpt,
+        stream, state_root=state, out_root=out, checkpoint=ckpt,
         error_col="is_error", budget_ppm=100_000,
         short_factor=3, long_factor=2, key_col="svc",
         watermark_delay="30 minutes", available_now=True,
@@ -912,7 +968,7 @@ def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
 
     got = {
         (r.svc, r.window_start_us)
-        for r in spark.read.parquet(alerts).collect()
+        for r in read_table(spark, out, "alerts").collect()
     }
     state_windows = {
         (r.svc, r.window_start_us)
@@ -949,7 +1005,7 @@ def test_stream_burn_rate_state_retention_bounded(spark, tmp_path):
 
     src = str(tmp_path / "brr_src")
     state = str(tmp_path / "brr_state")
-    alerts = str(tmp_path / "brr_alerts")
+    out = str(tmp_path / "brr_out")
     ckpt = str(tmp_path / "brr_ckpt")
     os.makedirs(src, exist_ok=True)
 
@@ -982,7 +1038,7 @@ def test_stream_burn_rate_state_retention_bounded(spark, tmp_path):
         "is_error", F.col("event_type") == "error"
     )
     q = sp.run_stream_burn_rate(
-        stream, state_root=state, alerts_path=alerts, checkpoint=ckpt,
+        stream, state_root=state, out_root=out, checkpoint=ckpt,
         error_col="is_error", budget_ppm=100_000,
         short_factor=3, long_factor=2, key_col="svc",
         watermark_delay="30 minutes", available_now=True,
@@ -1001,7 +1057,7 @@ def test_stream_burn_rate_state_retention_bounded(spark, tmp_path):
 
 def test_stream_burn_rate_empty_alerts_readable(spark, tmp_path):
     """A healthy stream (nothing burns) must leave a READABLE empty
-    alerts table — the empty-append trap writes only _SUCCESS."""
+    alerts table: the first alerts commit lands even when empty."""
     import pandas as pd
 
     from otel2pv_spark.streaming import stream_pipeline as sp
@@ -1024,15 +1080,15 @@ def test_stream_burn_rate_empty_alerts_readable(spark, tmp_path):
     stream = sp.read_events_stream(spark, src).withColumn(
         "svc", F.lit("api")
     ).withColumn("is_error", F.col("event_type") == "error")
-    alerts = str(tmp_path / "bre_alerts")
+    out = str(tmp_path / "bre_out")
     q = sp.run_stream_burn_rate(
-        stream, state_root=str(tmp_path / "bre_state"), alerts_path=alerts,
+        stream, state_root=str(tmp_path / "bre_state"), out_root=out,
         checkpoint=str(tmp_path / "bre_ckpt"), error_col="is_error",
         budget_ppm=100_000, short_factor=3, long_factor=2, key_col="svc",
         watermark_delay="30 minutes", available_now=True,
     )
     q.awaitTermination(300)
-    got = spark.read.parquet(alerts)  # must not raise
+    got = read_table(spark, out, "alerts")  # must not raise
     assert got.count() == 0
     assert set(got.columns) == {
         "window_start_us", "svc", "errors", "total", "l_errors", "l_total"}
@@ -1070,13 +1126,13 @@ def test_stream_rate_limit_census_sums_to_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    kept = spark.read.parquet(f"{out}/kept")
+    kept = read_table(spark, out, "kept")
     assert kept.count() == 5  # 4 from batch 1 + only 1 from batch 2
     ranks = sorted(r.sample_rank for r in kept.collect())
     assert ranks == [1, 2, 3, 4, 5]
 
     census = (
-        spark.read.parquet(f"{out}/census")
+        read_table(spark, out, "census")
         .groupBy("event_type", "window_start_us")
         .agg(F.sum("n_total").alias("n_total"),
              F.sum("n_kept").alias("n_kept"),
@@ -1135,7 +1191,7 @@ def test_stream_rate_limit_all_null_ts_batch_keeps_state(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    kept = spark.read.parquet(f"{out}/kept")
+    kept = read_table(spark, out, "kept")
     # 3 from batch 1; null-ts rows are window-filtered in BOTH twins
     # (defined semantics); batch 3's hour-0 rows must ALL be dropped —
     # before the null-horizon guard the log was wiped and they slipped in
