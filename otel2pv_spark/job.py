@@ -23,7 +23,7 @@ Config schema (all optional except input/out_root)::
       "sequence": {"out_col": "previous_event_ids", "array_mode": true,
                    "id_map_col": null, "gap_reset": true,
                    "hot_block_size": null,
-                   "tree_mode": false, "tree_buckets": null},
+                   "tree_mode": false},
       "group_applies": [["job_name", "event_type", "error"], ...],
       "spark":   {"master": "local[16]", "shuffle_partitions": 32,
                   "extra": {"spark.foo": "bar"}},
@@ -72,6 +72,11 @@ def validate_config(raw) -> dict:
         raise ConfigError(
             f"parse has no settable keys (got {raw['parse']!r});"
             " parse.use_pandas was removed"
+        )
+    if "tree_buckets" in raw.get("sequence", {}):
+        raise ConfigError(
+            "sequence.tree_buckets was removed: the tree kernel uses 8"
+            " buckets per shuffle partition"
         )
     ga = raw.get("group_applies", [])
     if not all(isinstance(g, (list, tuple)) and len(g) == 3 for g in ga):
@@ -413,7 +418,6 @@ def to_pipeline_config(raw: dict) -> PipelineConfig:
         group_applies=[tuple(g) for g in raw.get("group_applies", [])],
         hot_block_size=seq.get("hot_block_size"),
         tree_mode=bool(seq.get("tree_mode", False)),
-        tree_buckets=seq.get("tree_buckets"),
         run_id=raw.get("run_id"),
     )
 

@@ -98,10 +98,6 @@ class PipelineConfig:
     # sequencer.go:491-538) instead of the window fast path — for
     # carriers whose turns form real trees (tool-call subtrees)
     tree_mode: bool = False
-    # kernel bucket count (None = shuffle.partitions × 8): conversations
-    # hash into buckets so one Arrow batch amortizes the per-group
-    # Python invocation cost across thousands of small conversations
-    tree_buckets: int | None = None
     run_id: str | None = None
     # manifest-level data skipping (opt-in; manifest strategy only):
     # columns whose per-entry [min, max] each sink commit records, so
@@ -203,11 +199,12 @@ def _apply_tree_sequence(parsed: DataFrame, cfg: PipelineConfig) -> DataFrame:
         ).alias("app_json"),
         F.col("turn_idx").cast("long").alias("arrival_pos"),
     )
-    buckets = cfg.tree_buckets
-    if buckets is None:
-        buckets = 8 * int(
-            parsed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    # conversations hash into 8 kernel buckets per shuffle partition, so
+    # one Arrow batch amortizes the per-group Python invocation cost
+    # across thousands of small conversations
+    buckets = 8 * int(
+        parsed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     kcfg = tree_seq_op.TreeSequencerConfig(seq_id_map_field=cfg.seq_id_map_col)
     links = (
         tree_seq_op.sequence_tree(nodes, cfg=kcfg, buckets=buckets)

@@ -9,21 +9,18 @@ the lost blocks. That is acceptable in this sandbox's single-JVM
 local mode (there is no executor to lose independently of the driver)
 but NOT on the 1000-executor target. Every lineage cut in the repo
 therefore routes through :func:`snapshot`, which picks the mechanism
-from configuration:
+from the session conf ``spark.otel2pv.snapshot.reliable``:
 
-- default (``reliable=False``): ``localCheckpoint`` — fast, no
-  distributed filesystem needed; the sandbox/test mode.
-- reliable (``reliable=True``, or session conf
-  ``spark.otel2pv.snapshot.reliable=true``, or env
-  ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``): ``df.checkpoint()`` against
-  a REAL checkpoint directory (HDFS / object store on a cluster),
-  so a lost executor's blocks are re-read from the checkpoint files
-  instead of aborting PageRank / connected-components / k-means / PQ
-  / BPE mid-iteration.
+- unset or false: ``localCheckpoint`` — fast, no distributed
+  filesystem needed; the sandbox/test mode.
+- true: ``df.checkpoint()`` against a REAL checkpoint directory
+  (HDFS / object store on a cluster), so a lost executor's blocks are
+  re-read from the checkpoint files instead of aborting PageRank /
+  connected-components / k-means / PQ / BPE mid-iteration.
 
 The checkpoint directory resolves from session conf
-``spark.otel2pv.snapshot.dir``, else env ``SPARK_GRAFT_CHECKPOINT_DIR``,
-else ``$TMPDIR/otel2pv_ckpt-<app-id>``; on a cluster pass an HDFS/S3A
+``spark.otel2pv.snapshot.dir``, else
+``$TMPDIR/otel2pv_ckpt-<app-id>``; on a cluster pass an HDFS/S3A
 URI (the tmp default is only meaningful in local mode). Old checkpoint
 files are reclaimed by Spark's context cleaner when
 ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; otherwise
@@ -44,13 +41,8 @@ _TRUTHY = {"1", "true", "yes", "on"}
 
 
 def _reliable_configured(spark) -> bool:
-    conf = spark.conf.get("spark.otel2pv.snapshot.reliable", None)
-    if conf is not None:
-        return conf.strip().lower() in _TRUTHY
-    return (
-        os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "").strip().lower()
-        in _TRUTHY
-    )
+    conf = spark.conf.get("spark.otel2pv.snapshot.reliable", "")
+    return conf.strip().lower() in _TRUTHY
 
 
 def _ensure_checkpoint_dir(spark) -> None:
@@ -61,30 +53,22 @@ def _ensure_checkpoint_dir(spark) -> None:
         current = None
     if current:
         return
-    ckdir = spark.conf.get("spark.otel2pv.snapshot.dir", None) or os.environ.get(
-        "SPARK_GRAFT_CHECKPOINT_DIR"
+    ckdir = spark.conf.get("spark.otel2pv.snapshot.dir", None) or os.path.join(
+        tempfile.gettempdir(), f"otel2pv_ckpt-{sc.applicationId}"
     )
-    if not ckdir:
-        ckdir = os.path.join(
-            tempfile.gettempdir(), f"otel2pv_ckpt-{sc.applicationId}"
-        )
     sc.setCheckpointDir(ckdir)
 
 
-def snapshot(
-    df: DataFrame, eager: bool = True, reliable: bool | None = None
-) -> DataFrame:
+def snapshot(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and cut its lineage.
 
-    ``reliable=None`` (every production call site) defers to session
-    conf / env so ONE switch flips the whole engine — all iterative
-    state (graph rounds, CC edges, k-means centroids, BPE merges),
-    every reused scan, and the streaming per-batch stabilizers — to
-    fault-tolerant ``checkpoint()`` without touching operator code.
+    The session conf ``spark.otel2pv.snapshot.reliable`` is the one
+    switch: it flips the whole engine — all iterative state (graph
+    rounds, CC edges, k-means centroids, BPE merges), every reused
+    scan, and the streaming per-batch stabilizers — to fault-tolerant
+    ``checkpoint()`` without touching operator code.
     """
-    if reliable is None:
-        reliable = _reliable_configured(df.sparkSession)
-    if reliable:
+    if _reliable_configured(df.sparkSession):
         _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

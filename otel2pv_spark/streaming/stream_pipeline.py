@@ -38,6 +38,13 @@ reference's architecture (file:line cites the reference source):
    names each docstring lists. ``run_stream_pipeline`` is the one raw
    writer left.
 
+Replay rule: a micro-batch replayed after a crash (its commit-log
+entry lost) is recognised by ``_batch_tag``, the query id with the
+batch id. Each stateful consumer writes that tag into its last commit
+of the batch and returns early when ``_replayed`` finds it there.
+Output appends that land before that commit stay at-least-once; each
+docstring names them.
+
 Scale shape: state is hash-partitioned by conv_id across executors
 (same as the batch shuffle); per-conv state is bounded by conversation
 length; RocksDB state store + changelog checkpointing are the
@@ -112,6 +119,24 @@ def _append_log(cat, df: DataFrame, table: str) -> None:
         cat.append(df, table)
 
 
+def _batch_tag(checkpoint: str, batch_id: int) -> str:
+    """A micro-batch's identity across restarts: ``<query id>:<batch
+    id>``, the query id read from ``<checkpoint>/metadata``. A bare
+    batch id is no identity: it restarts at 0 under a new checkpoint,
+    which also gets a new query id."""
+    with open(os.path.join(checkpoint, "metadata")) as fh:
+        return f"{json.load(fh)['id']}:{batch_id}"
+
+
+def _replayed(cat, table: str, tag: str) -> bool:
+    """True when ``table`` holds a ``_batch == tag`` row: the batch
+    ``tag`` names already made its last commit, and this run of it is
+    a replay (its commit-log entry was lost) that must commit nothing."""
+    return cat.exists(table) and not (
+        cat.read(table).filter(F.col("_batch") == tag).isEmpty()
+    )
+
+
 def read_transcripts_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -172,29 +197,17 @@ def run_stream_pipeline_keyed(
     Spark shape for exactly-once-by-key sinks over at-least-once
     micro-batches.
 
-    Crash safety: turns append is an atomic Catalog commit; the
-    per-batch recompute runs under a ``run_incremental`` manifest
-    (``incr-sb<start-uid>-<batch_id>`` — the start uid keeps manifests
-    from a reset checkpoint or a second stream from aliasing), so a
-    replayed batch re-derives the same state instead of
-    double-merging. Scale shape: the recompute scans
-    only the touched conversations (semi-join; Iceberg conv-bucket
-    pruning at the real target — the full-history read here is the
-    parquet stand-in's cost, not the design's)."""
-    import uuid as _uuid
-
+    Crash safety: turns append is an atomic Catalog commit that a
+    replay's anti-join leaves unchanged; the per-batch recompute runs
+    under a ``run_incremental`` manifest named by the batch identity
+    (``incr-sb<query id>-<batch id>``, ``_batch_tag``), so a batch
+    replayed from the same checkpoint resumes its manifest instead of
+    re-merging, and a reset checkpoint or a second stream (a new query
+    id) never aliases it. No output is at-least-once. Scale shape: the
+    recompute scans only the touched conversations (semi-join; Iceberg
+    conv-bucket pruning at the real target — the full-history read
+    here is the parquet stand-in's cost, not the design's)."""
     from ..plans import pipeline as pl
-
-    # per-START identity mixed into each batch's run-manifest id:
-    # batch_id alone is NOT a global identity — a reset/relocated
-    # checkpoint (or a second stream into the same out_root) restarts
-    # ids at 0 with different contents, and a bare sb<id> manifest
-    # would make run_incremental skip the merge entirely (silent sink
-    # divergence). With the start uid, a query RESTART from the same
-    # checkpoint re-runs its replayed batch under a fresh manifest —
-    # replace_keys is idempotent, so that reconverges; only the
-    # redundant work is repeated, never correctness.
-    start_uid = _uuid.uuid4().hex[:8]
 
     def process(batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -219,6 +232,7 @@ def run_stream_pipeline_keyed(
         )
         if batch.isEmpty():
             return
+        run_id = "sb" + _batch_tag(checkpoint, batch_id).replace(":", "-")
         cat = Catalog(spark, out_root)
         if cat.exists("turns"):
             novel = batch.join(
@@ -234,9 +248,7 @@ def run_stream_pipeline_keyed(
         pl.run_incremental(
             spark,
             turns,
-            pl.PipelineConfig(
-                out_root=out_root, run_id=f"sb{start_uid}-{batch_id}"
-            ),
+            pl.PipelineConfig(out_root=out_root, run_id=run_id),
             keys,
             tool_meta=tool_meta,
             role_meta=role_meta,
@@ -354,9 +366,15 @@ def run_stream_dedup(
 
     Drop rule (matches the batch cluster canonical rule "keep the min
     member"): a new doc drops if it band-matches any indexed doc, or a
-    smaller-id doc of the same batch. Source offsets + checkpoint give
-    at-least-once appends; on the real target the three appends become
-    one Iceberg transaction (catalog.py mapping) for exactly-once."""
+    smaller-id doc of the same batch.
+
+    The one consumer without a replay guard: its only state is
+    ``band_index``, which users seed with ``Catalog.write``. A replayed
+    batch re-appends identical rows to all three logs (at-least-once)
+    but never makes a different decision: its survivors are then in
+    the index, and a doc never matches its own id. On the real target
+    the three appends become one Iceberg transaction (catalog.py
+    mapping) for exactly-once."""
     from ..functions import dedup as dd
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -697,13 +715,15 @@ def run_stream_anomaly(
     the anomaly window never sees the full history, let alone events.
 
     Tables, both append logs: ``state_root``/``rollup`` (``key``,
-    ``window_start_us``, ``n_events``) and ``out_root``/``alerts``
-    (the ``anomaly_flags`` rows of alerting windows).
+    ``window_start_us``, ``n_events``, ``_batch``) and
+    ``out_root``/``alerts`` (the ``anomaly_flags`` rows of alerting
+    windows).
 
-    At-least-once caveat: a replayed batch would re-append state rows
-    (double-counting the baseline); on the real target the state
-    append is an Iceberg MERGE on (key, window) for exactly-once —
-    same mapping as the catalog commit paths.
+    Replay: the rollup append is the batch's last commit and carries
+    its ``_batch_tag``; a batch replayed after it returns at once, so
+    the baseline never double-counts. The alerts append lands before
+    it and is the one at-least-once surface (a replay between the two
+    re-appends the same alert rows).
     """
     from pyspark.sql import Window
 
@@ -721,8 +741,15 @@ def run_stream_anomaly(
         ).transform(snapshot)
         if delta.isEmpty():
             return
+        tag = _batch_tag(checkpoint, batch_id)
         cat = Catalog(spark, state_root)
-        state = cat.read("rollup") if cat.exists("rollup") else delta.limit(0)
+        if _replayed(cat, "rollup", tag):
+            return
+        state = (
+            cat.read("rollup").drop("_batch")
+            if cat.exists("rollup")
+            else delta.limit(0)
+        )
         # the newest `trail` windows per key are the only state rows a
         # NEW window's trailing baseline can use
         w_recent = Window.partitionBy(key).orderBy(
@@ -744,7 +771,7 @@ def run_stream_anomaly(
             "left_semi",
         ).transform(snapshot)
         _append_log(Catalog(spark, out_root), alerts, "alerts")
-        cat.append(delta, "rollup")
+        cat.append(delta.withColumn("_batch", F.lit(tag)), "rollup")
 
     return _start(roll, process, checkpoint, available_now)
 
@@ -786,7 +813,7 @@ def run_stream_counter_rate(
     4. append the per-window increments to the ``increase`` log (sums
        are mergeable; ``read_counter_rates`` folds the log), and
        REPLACE the state with the new per-series last samples, tagged
-       with the batch identity.
+       with the batch's ``_batch_tag``.
 
     Tables: ``state_root``/``series_last`` (replaced per batch: each
     series' last sample plus ``_batch``); ``out_root``/``late`` and
@@ -794,14 +821,13 @@ def run_stream_counter_rate(
 
     State is one row per live series — the minimum any reset-aware
     rate can hold — and per-batch cost is batch-size + |series|,
-    independent of stream age. ``_batch`` pairs the batch id with the
-    query id in ``<checkpoint>/metadata``, which survives restarts (a
-    bare batch id restarts at 0 under a new checkpoint): a batch
-    replayed after its state replace finds itself there and returns
-    instead of routing its own samples to ``late``. A crash before the
-    replace re-appends that batch's late rows and increments; on the
-    real target the increase append is an Iceberg MERGE at (keys,
-    window) grain (the rollup_merge mapping) for exactly-once.
+    independent of stream age. A batch replayed after its state
+    replace finds its tag there and returns instead of routing its own
+    samples to ``late``. The ``late`` and ``increase`` appends land
+    before the replace and are the at-least-once surface (a crash
+    between them re-appends the batch's rows); on the real target the
+    increase append is an Iceberg MERGE at (keys, window) grain (the
+    rollup_merge mapping) for exactly-once.
     """
     from ..operators.aggregate import counter_rate
 
@@ -814,17 +840,16 @@ def run_stream_counter_rate(
         ).transform(snapshot)
         if batch.isEmpty():
             return
-        with open(os.path.join(checkpoint, "metadata")) as fh:
-            tag = f"{json.load(fh)['id']}:{batch_id}"
+        tag = _batch_tag(checkpoint, batch_id)
         cat = Catalog(spark, state_root)
+        if _replayed(cat, "series_last", tag):
+            return
         out = Catalog(spark, out_root)
-        if cat.exists("series_last"):
-            stored = cat.read("series_last")
-            if not stored.filter(F.col("_batch") == tag).isEmpty():
-                return
-            state = stored.select(*cols)
-        else:
-            state = batch.select(*cols).limit(0)
+        state = (
+            cat.read("series_last").select(*cols)
+            if cat.exists("series_last")
+            else batch.select(*cols).limit(0)
+        )
 
         st = state.select(
             *[F.col(c).alias(f"_s_{c}") for c in series_cols],
@@ -1033,15 +1058,19 @@ def run_stream_burn_rate(
        so state stays bounded by ~2 long windows x |keys| x
        (long/short) rows however old the stream is. The replace
        dedups on (key, window) — and the alert INPUT dedups the same
-       way, so a replayed batch reconverges to the same state and the
-       same decisions. The alert append is the one remaining
-       at-least-once surface (duplicate alert ROWS, never wrong
-       ones); the real target makes it an Iceberg MERGE on
-       (key, window) for exactly-once.
+       way, so a second query over the same roots, which re-finalizes
+       windows the state holds, reconverges to the same state and the
+       same decisions.
+
+    Replay: the state replace is the batch's last commit and carries
+    its ``_batch_tag``; a batch replayed after it returns at once. The
+    alert append lands before it and is the one at-least-once surface
+    (duplicate alert ROWS, never wrong ones); the real target makes it
+    an Iceberg MERGE on (key, window) for exactly-once.
 
     Tables: ``state_root``/``short_rollup`` (replaced per batch:
-    ``window_start_us``, ``key_col``, ``errors``, ``total``) and
-    ``out_root``/``alerts`` (append log of
+    ``window_start_us``, ``key_col``, ``errors``, ``total``,
+    ``_batch``) and ``out_root``/``alerts`` (append log of
     ``burn_rate_from_short`` rows)."""
     from ..operators.aggregate import (
         _validate_aligned_widths,
@@ -1073,9 +1102,12 @@ def run_stream_burn_rate(
         delta = batch.transform(snapshot)
         if delta.isEmpty():
             return
+        tag = _batch_tag(checkpoint, batch_id)
         cat = Catalog(spark, state_root)
+        if _replayed(cat, "short_rollup", tag):
+            return
         state = (
-            cat.read("short_rollup")
+            cat.read("short_rollup").drop("_batch")
             if cat.exists("short_rollup")
             else delta.limit(0)
         )
@@ -1097,12 +1129,10 @@ def run_stream_burn_rate(
             )
             .drop("_sl")
         )
-        # dedup on (key, window) BEFORE totalling: on a replayed batch
-        # the pruned state already contains this delta's windows (the
-        # state replace committed, the checkpoint didn't), and a
-        # doubled short would shift the long-window ratio enough to
-        # flip an alert near the threshold — the replay must
-        # reconverge on the ALERT input too, not just the state
+        # dedup on (key, window) BEFORE totalling: under a second
+        # query over the same roots the pruned state already holds
+        # this delta's windows, and a doubled short would shift the
+        # long-window ratio enough to flip an alert near the threshold
         hist = (
             pruned.unionByName(with_ws(delta))
             .dropDuplicates([key_col, "window_start_us"])
@@ -1118,8 +1148,8 @@ def run_stream_burn_rate(
         _append_log(Catalog(spark, out_root), alerts, "alerts")
         # retained state: only long windows >= one long_width behind
         # the newest delta window can still be touched (watermark
-        # order); dedup on (key, window) makes a batch replay
-        # reconverge instead of double-count
+        # order); dedup on (key, window) makes a second query over the
+        # same roots reconverge instead of double-count
         horizon = (
             delta.agg(F.max("window_start_us").alias("_m"))
             .select((F.col("_m") - 2 * long_us).alias("_h"))
@@ -1136,6 +1166,7 @@ def run_stream_burn_rate(
                 | (F.col("window_start_us") >= F.col("_h"))
             )
             .drop("_h")
+            .withColumn("_batch", F.lit(tag))
         )
         cat.write(new_state, "short_rollup")
 
@@ -1167,27 +1198,27 @@ def run_stream_rate_limit(
     filled — the standard throttle trade-off, documented rather than
     hidden.
 
-    State = an IDEMPOTENT admission log: one row per (key, window,
-    batch_id) holding that batch's admitted count, replaced atomically
-    per batch (Catalog swap). A grain's carried-in quota (_base) sums
-    the log EXCLUDING the current batch_id, so a replayed micro-batch
-    recomputes the same _base, re-derives the same decisions, and
-    REPLACES its own log rows instead of double-counting (the same
-    reconverge-on-replay contract as run_stream_burn_rate; the kept /
-    census appends remain the at-least-once surface — duplicate ROWS
-    on replay, never different ones — an Iceberg MERGE at the real
-    target). The log is pruned to windows within 2 x width of the
-    newest window the stream has admitted into (older windows are
+    State = an admission log: one row per (key, window, ``_batch``)
+    holding that batch's admitted count, replaced atomically per batch
+    (Catalog swap). A grain's carried-in quota (_base) sums the log. The
+    replace is the batch's last commit and ``_batch`` is its
+    ``_batch_tag``: a batch replayed after it returns at once, and one
+    replayed before it finds none of its own rows in the log, so it
+    recomputes the same _base and the same decisions. The kept / census
+    appends land before the replace and are the at-least-once surface —
+    duplicate ROWS on replay, never different ones — an Iceberg MERGE at
+    the real target. The log is pruned to windows within 2 x width of
+    the newest window the stream has admitted into (older windows are
     watermark-passed and can never fill further; a straggler past the
-    horizon gets a fresh quota — the documented staleness trade-off),
-    so state stays bounded by live grains x touching batches. NULL
-    KEYS match their state rows null-safely — a NULL key is one grain,
-    capped like any other, exactly as the batch operator's groupBy
-    treats it. NULL event times are window-filtered by Spark's time
-    window in BOTH twins (defined semantics); an all-null-timestamp
-    batch therefore yields an empty census and a NULL horizon, which
-    the prune guards against (prunes nothing) instead of NULLing the
-    compare and wiping the admission log.
+    horizon gets a fresh quota — the documented staleness trade-off), so
+    state stays bounded by live grains x touching batches. NULL KEYS
+    match their state rows null-safely — a NULL key is one grain, capped
+    like any other, exactly as the batch operator's groupBy treats it.
+    NULL event times are window-filtered by Spark's time window in BOTH
+    twins (defined semantics); an all-null-timestamp batch therefore
+    yields an empty census and a NULL horizon, which the prune guards
+    against (prunes nothing) instead of NULLing the compare and wiping
+    the admission log.
 
     Tables: ``state_root``/``admitted`` (the log above, replaced per
     batch); append logs ``out_root``/``kept`` (admitted rows with their
@@ -1212,19 +1243,19 @@ def run_stream_rate_limit(
         ).transform(snapshot)
         if batch.isEmpty():
             return
+        tag = _batch_tag(checkpoint, batch_id)
         cat = Catalog(spark, state_root)
+        if _replayed(cat, "admitted", tag):
+            return
         state = (
             cat.read("admitted")
             if cat.exists("admitted")
             else batch.select(key_col, "window_start_us").limit(0)
-            .withColumn("batch_id", F.lit(0).cast("bigint"))
+            .withColumn("_batch", F.lit(None).cast("string"))
             .withColumn("n_kept", F.lit(0).cast("bigint"))
         )
-        # carried-in quota per grain: the log EXCLUDING this batch_id —
-        # a replay recomputes the same _base it saw the first time
         base = (
-            state.filter(F.col("batch_id") != batch_id)
-            .groupBy(
+            state.groupBy(
                 F.col(key_col).alias("_sk"),
                 F.col("window_start_us").alias("_sw"),
             )
@@ -1274,21 +1305,20 @@ def run_stream_rate_limit(
             .transform(snapshot)
         )
         _append_log(out, census_delta, "census")
-        # replace this batch's own log rows (replay reconverges) and
-        # prune grains past the 2 x width horizon behind the newest
-        # window this batch touched (prune-less-never-more: a batch of
-        # only-old windows computes a lower horizon and prunes nothing)
+        # add this batch's log rows and prune grains past the 2 x width
+        # horizon behind the newest window this batch touched
+        # (prune-less-never-more: a batch of only-old windows computes
+        # a lower horizon and prunes nothing)
         horizon = (
             census_delta.agg(F.max("window_start_us").alias("_m"))
             .select((F.col("_m") - 2 * width_us).alias("_h"))
         )
         new_state = (
-            state.filter(F.col("batch_id") != batch_id)
-            .unionByName(
+            state.unionByName(
                 census_delta.select(
                     key_col,
                     "window_start_us",
-                    F.lit(batch_id).cast("bigint").alias("batch_id"),
+                    F.lit(tag).alias("_batch"),
                     F.col("n_kept"),
                 )
             )

@@ -1,10 +1,14 @@
-"""Static guard: table commits go through ``sources/catalog.py``.
+"""Static guards on the commit and replay protocols.
 
 The Catalog owns every commit mechanic (atomic replace, append
 snapshots, empty-table guards). A ``DataFrameWriter`` terminal call
-anywhere else is a second, hand-written commit protocol. This scan
-fails on any ``.parquet``/``.save``/``.json``/``.csv`` call on a
+anywhere else is a second, hand-written commit protocol. The first
+scan fails on any ``.parquet``/``.save``/``.json``/``.csv`` call on a
 ``.write`` chain outside the Catalog module.
+
+A foreachBatch ``batch_id`` restarts at 0 under a new checkpoint, so
+it identifies nothing on its own. The second scan fails on any use of
+it in ``streaming/`` other than as an argument to ``_batch_tag``.
 """
 
 from __future__ import annotations
@@ -77,3 +81,51 @@ def test_no_raw_table_writes_outside_catalog():
     # every allowlist entry is still needed
     assert {(f[0], f[1]) for f in found} == set(ALLOWED)
 
+
+def _foreach_batch_fns(tree: ast.AST) -> list[ast.FunctionDef]:
+    """Functions handed to ``_start`` or ``foreachBatch`` as the sink."""
+    names = set()
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        f = call.func
+        if isinstance(f, ast.Name) and f.id == "_start" and len(call.args) > 1:
+            arg = call.args[1]
+        elif isinstance(f, ast.Attribute) and f.attr == "foreachBatch" and call.args:
+            arg = call.args[0]
+        else:
+            continue
+        if isinstance(arg, ast.Name):
+            names.add(arg.id)
+    return [
+        fn for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name in names
+    ]
+
+
+def test_batch_id_only_feeds_batch_tag():
+    stray, n_fns = [], 0
+    stream_dir = os.path.join(PKG, "streaming")
+    for name in sorted(os.listdir(stream_dir)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(stream_dir, name)) as fh:
+            tree = ast.parse(fh.read())
+        for fn in _foreach_batch_fns(tree):
+            n_fns += 1
+            bid = fn.args.args[1].arg
+            tagged = {
+                id(a)
+                for c in ast.walk(fn)
+                if isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Name)
+                and c.func.id == "_batch_tag"
+                for a in c.args
+            }
+            stray += [
+                (name, fn.lineno, n.lineno)
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Name) and n.id == bid and id(n) not in tagged
+            ]
+    assert n_fns >= 7, f"found only {n_fns} foreachBatch functions"
+    assert not stray, f"batch_id used outside _batch_tag: {stray}"

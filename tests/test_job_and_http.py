@@ -138,16 +138,15 @@ def test_http_sink_raises_after_exhausted_retries(spark):
 
 
 def test_config_tree_mode_mapping():
-    from otel2pv_spark.job import to_pipeline_config
-
-    cfg = to_pipeline_config(
-        {
-            "input": {"events_dir": "x"},
-            "out_root": "/tmp/x",
-            "sequence": {"tree_mode": True, "tree_buckets": 64},
-        }
-    )
-    assert cfg.tree_mode is True and cfg.tree_buckets == 64
+    raw = {
+        "input": {"events_dir": "x"},
+        "out_root": "/tmp/x",
+        "sequence": {"tree_mode": True},
+    }
+    assert job.to_pipeline_config(job.validate_config(raw)).tree_mode is True
+    raw["sequence"]["tree_buckets"] = 64
+    with pytest.raises(job.ConfigError, match="sequence.tree_buckets"):
+        job.validate_config(raw)
 
 
 def test_job_incremental_end_to_end(spark, sf_dir, tmp_path):

@@ -185,7 +185,7 @@ def test_dup_conflict_parity_window_vs_tree(spark):
     results = {}
     for mode, cfg in (
         ("window", pipeline.PipelineConfig()),
-        ("tree", pipeline.PipelineConfig(tree_mode=True, tree_buckets=4)),
+        ("tree", pipeline.PipelineConfig(tree_mode=True)),
     ):
         out = pipeline.build_single_pass(tr, tool_meta, role_meta, cfg)
         results[mode] = {

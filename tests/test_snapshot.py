@@ -61,21 +61,6 @@ def test_snapshot_reliable_writes_checkpoint_files(spark, tmp_path, reliable_mod
     assert found, "reliable snapshot must persist blocks under the checkpoint dir"
 
 
-def test_snapshot_explicit_flag_overrides_conf(spark, tmp_path):
-    """reliable=True wins over an unset/false conf: the plan is
-    re-rooted AND the checkpoint dir gains files."""
-    assert spark.conf.get("spark.otel2pv.snapshot.reliable", "false") != "true"
-    spark.conf.set("spark.otel2pv.snapshot.dir", str(tmp_path / "ck2"))
-    try:
-        df = snapshot(spark.range(3), reliable=True)
-        assert df.count() == 3
-        assert _lineage_cut(df)
-        ckroot = _fs_path(spark.sparkContext.getCheckpointDir())
-        assert ckroot and os.path.isdir(ckroot)
-    finally:
-        spark.conf.unset("spark.otel2pv.snapshot.dir")
-
-
 def test_pagerank_and_cc_green_in_reliable_mode(spark, reliable_mode):
     """The VERDICT done-criterion: the iterative operators whose rounds
     cut lineage run with reliable checkpoints and produce the same

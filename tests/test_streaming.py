@@ -520,14 +520,17 @@ def test_stream_anomaly_alerts_match_batch(spark, tmp_path):
                  coerce_timestamps="us", allow_truncated_timestamps=True)
     os.utime(f"{src}/zz_future.parquet", (time.time() + 100,) * 2)
 
-    q = sp.run_stream_anomaly(
-        sp.read_events_stream(spark, src, max_files_per_trigger=1),
-        state_root=state, out_root=out, checkpoint=ckpt,
-        width="1 hour", trail=3, nsigma=3, watermark_delay="30 minutes",
-        available_now=True,
-    )
-    q.awaitTermination(300)
+    def run():
+        q = sp.run_stream_anomaly(
+            sp.read_events_stream(spark, src, max_files_per_trigger=1),
+            state_root=state, out_root=out, checkpoint=ckpt,
+            width="1 hour", trail=3, nsigma=3, watermark_delay="30 minutes",
+            available_now=True,
+        )
+        q.awaitTermination(300)
+        return q
 
+    run()
     got = {
         (r.event_type, r.window_start_us)
         for r in read_table(spark, out, "alerts").collect()
@@ -555,6 +558,17 @@ def test_stream_anomaly_alerts_match_batch(spark, tmp_path):
     assert got == {("click", spike_us)}
     # multiple micro-batches actually ran (state accumulated per batch)
     assert len(state_windows) >= 5
+
+    # a batch replayed after its rollup commit commits nothing more
+    n_rollup = read_table(spark, state, "rollup").count()
+    _replay_last_batch(ckpt)
+    assert run().lastProgress is not None  # the replayed batch ran
+    assert read_table(spark, state, "rollup").count() == n_rollup
+    assert {
+        (r.event_type, r.window_start_us)
+        for r in read_table(spark, out, "alerts").collect()
+    } == got
+    assert read_table(spark, out, "alerts").count() == len(got)
 
 
 def _write_correlate_fixture(tmp_path):
@@ -743,6 +757,18 @@ def _write_counter_files(src, batches, first=0):
         os.utime(f"{src}/f{i}.parquet", (time.time() + i,) * 2)
 
 
+def _replay_last_batch(ckpt):
+    """Drop the commit-log entry of the query's last batch, so the next
+    start over ``ckpt`` replays it: the crash window after the batch's
+    foreachBatch commits, before its commit-log write."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        p = os.path.join(commits, f)
+        if os.path.exists(p):
+            os.remove(p)
+
+
 def _run_counter_rate(spark, src, state, out, ckpt):
     from otel2pv_spark.streaming import stream_pipeline as sp
 
@@ -846,10 +872,7 @@ def test_stream_counter_rate_replay_after_state_commit(spark, tmp_path):
     before = sorted(map(tuple, sp.read_counter_rates(spark, out).collect()))
     assert [(r[3], r[4]) for r in before] == [(5_000_000, 3)]
 
-    for f in ("1", ".1.crc"):
-        p = os.path.join(ckpt, "commits", f)
-        if os.path.exists(p):
-            os.remove(p)
+    _replay_last_batch(ckpt)
     q = _run_counter_rate(spark, src, state, out, ckpt)
     assert q.lastProgress is not None  # the replayed batch ran
 
@@ -953,23 +976,23 @@ def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
                  coerce_timestamps="us", allow_truncated_timestamps=True)
     os.utime(f"{src}/zz_future.parquet", (time.time() + 100,) * 2)
 
-    stream = sp.read_events_stream(
-        spark, src, max_files_per_trigger=1
-    ).withColumn("svc", F.lit("api")).withColumn(
-        "is_error", F.col("event_type") == "error"
-    )
-    q = sp.run_stream_burn_rate(
-        stream, state_root=state, out_root=out, checkpoint=ckpt,
-        error_col="is_error", budget_ppm=100_000,
-        short_factor=3, long_factor=2, key_col="svc",
-        watermark_delay="30 minutes", available_now=True,
-    )
-    q.awaitTermination(300)
+    def run():
+        """Drain ``src``; the sorted alert rows."""
+        stream = sp.read_events_stream(
+            spark, src, max_files_per_trigger=1
+        ).withColumn("svc", F.lit("api")).withColumn(
+            "is_error", F.col("event_type") == "error"
+        )
+        q = sp.run_stream_burn_rate(
+            stream, state_root=state, out_root=out, checkpoint=ckpt,
+            error_col="is_error", budget_ppm=100_000,
+            short_factor=3, long_factor=2, key_col="svc",
+            watermark_delay="30 minutes", available_now=True,
+        )
+        q.awaitTermination(300)
+        return sorted(read_table(spark, out, "alerts").collect())
 
-    got = {
-        (r.svc, r.window_start_us)
-        for r in read_table(spark, out, "alerts").collect()
-    }
+    got = {(r.svc, r.window_start_us) for r in run()}
     state_windows = {
         (r.svc, r.window_start_us)
         for r in read_table(spark, state, "short_rollup").collect()
@@ -993,6 +1016,29 @@ def test_stream_burn_rate_alerts_match_batch(spark, tmp_path):
     day1 = pd.Timestamp("2026-01-01 00:00:00").value // 1000
     assert got == {("api", day1 + h * 3600 * 1_000_000) for h in range(4)}
     assert len(state_windows) >= 6  # every fixture hour finalized
+
+    # replay: one more burning hour (Jan 6, 00:00), finalized by the
+    # last batch of a second run; that batch replayed after its state
+    # replace commits nothing more
+    for i, (ts, n_err, n_ok) in enumerate(
+        [("2026-01-06 00:01", 3, 7), ("2026-01-08 00:00", 0, 1)]
+    ):
+        pd.DataFrame([
+            {"event_id": 20_000 + 100 * i + j,
+             "ts": pd.Timestamp(ts) + pd.Timedelta(minutes=5 * j),
+             "user_id": 1, "event_type": "error" if j < n_err else "ok",
+             "value": 1.0, "props": ""}
+            for j in range(n_err + n_ok)
+        ]).to_parquet(f"{src}/zz_more{i}.parquet", index=False,
+                      coerce_timestamps="us", allow_truncated_timestamps=True)
+        os.utime(f"{src}/zz_more{i}.parquet", (time.time() + 200 + i,) * 2)
+
+    alerts = run()
+    jan6 = pd.Timestamp("2026-01-06 00:00:00").value // 1000
+    assert {(r.svc, r.window_start_us) for r in alerts} == got | {("api", jan6)}
+    assert len(alerts) == len(got) + 1
+    _replay_last_batch(ckpt)
+    assert run() == alerts
 
 
 def test_stream_burn_rate_state_retention_bounded(spark, tmp_path):
@@ -1199,6 +1245,26 @@ def test_stream_rate_limit_all_null_ts_batch_keeps_state(spark, tmp_path):
     assert sorted(r.event_id for r in kept.collect()) == [0, 1, 2]
     assert kept.filter(F.col("ts").isNull()).count() == 0
 
+    # a second query (new checkpoint, so its batch ids restart at 0)
+    # over the same roots still sees the first query's admissions
+    src_b = str(tmp_path / "rln_src_b")
+    os.makedirs(src_b)
+    pd.DataFrame(
+        [{"event_id": 10 + i, "ts": pd.Timestamp(f"2026-01-01 00:1{i}:00"),
+          "user_id": 1, "event_type": "hot", "value": 1.0, "props": ""}
+         for i in range(2)]
+    ).to_parquet(f"{src_b}/b0.parquet", index=False, coerce_timestamps="us",
+                 allow_truncated_timestamps=True)
+    q = sp.run_stream_rate_limit(
+        sp.read_events_stream(spark, src_b),
+        state_root=str(tmp_path / "rln_state"), out_root=out,
+        checkpoint=str(tmp_path / "rln_ckpt_b"),
+        max_per_window=3, available_now=True,
+    )
+    q.awaitTermination(300)
+    kept = read_table(spark, out, "kept")
+    assert sorted(r.event_id for r in kept.collect()) == [0, 1, 2]
+
 
 def test_stream_keyed_pipeline_matches_batch_run_with_split_convs(spark, tmp_path):
     """The full-DAG streaming parity gate: conversations split
@@ -1225,12 +1291,16 @@ def test_stream_keyed_pipeline_matches_batch_run_with_split_convs(spark, tmp_pat
     out = str(tmp_path / "keyed_out")
     from otel2pv_spark.streaming import run_stream_pipeline_keyed
 
-    q = run_stream_pipeline_keyed(
-        read_transcripts_stream(spark, src, max_files_per_trigger=1),
-        datagen.tool_meta(spark), datagen.role_meta(spark),
-        out, str(tmp_path / "keyed_ckpt"), available_now=True,
-    )
-    q.awaitTermination(600)
+    def run():
+        q = run_stream_pipeline_keyed(
+            read_transcripts_stream(spark, src, max_files_per_trigger=1),
+            datagen.tool_meta(spark), datagen.role_meta(spark),
+            out, str(tmp_path / "keyed_ckpt"), available_now=True,
+        )
+        q.awaitTermination(600)
+        return q
+
+    run()
 
     batch_out = str(tmp_path / "batch_out")
     pipeline.run(
@@ -1264,13 +1334,25 @@ def test_stream_keyed_pipeline_matches_batch_run_with_split_convs(spark, tmp_pat
 
     # replay: same checkpoint, no new files -> nothing changes
     before = _rows(got, cols)
-    q2 = run_stream_pipeline_keyed(
-        read_transcripts_stream(spark, src, max_files_per_trigger=1),
-        datagen.tool_meta(spark), datagen.role_meta(spark),
-        out, str(tmp_path / "keyed_ckpt"), available_now=True,
-    )
-    q2.awaitTermination(300)
+    run()
     assert _rows(read_table(spark, out, "sequenced_events"), cols) == before
+
+    # replay after the merge: the last batch resumes its own run
+    # manifest, so no manifest is added and the sinks are unchanged
+    def manifests():
+        return sorted(
+            f for f in os.listdir(os.path.join(out, "_manifest"))
+            if f.startswith("incr-sb") and f.endswith(".json")
+        )
+
+    assert len(manifests()) == 3  # one per batch
+    _replay_last_batch(str(tmp_path / "keyed_ckpt"))
+    assert run().lastProgress is not None  # the replayed batch ran
+    assert len(manifests()) == 3
+    assert _rows(read_table(spark, out, "sequenced_events"), cols) == before
+    assert _rows(read_table(spark, out, "rejects"), rej_cols) == _rows(
+        read_table(spark, batch_out, "rejects"), rej_cols
+    )
 
 
 def test_stream_keyed_pipeline_dedups_in_batch_duplicates(spark, tmp_path):
