@@ -323,9 +323,8 @@ def validate_maintenance_config(raw) -> dict:
         }
 
     Per table: optional compaction (bin-pack small files), optional
-    snapshot expiry (keep newest N previous versions; the manifest
-    strategy also GCs unreferenced staged dirs). Works under either
-    catalog strategy.
+    snapshot expiry (keep newest N previous versions and GC the staged
+    dirs no retained manifest references).
 
     History preservation: maintenance PRESERVES existing snapshot
     history by default — each table's catalog handle is given a

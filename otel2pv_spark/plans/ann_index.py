@@ -74,8 +74,7 @@ def run_index(spark: SparkSession, vectors: DataFrame, cfg: AnnIndexConfig) -> d
     on restart — each step reads its inputs from the COMMITTED tables,
     so a resume never depends on driver state)."""
     run_id = cfg.run_id or uuid.uuid4().hex[:12]
-    # cluster in stats_columns: under the manifest strategy every
-    # committed cell entry records min = max = its cell id (read off
+    # cluster in stats_columns: every committed cell entry records min = max = its cell id (read off
     # the leaf name, zero extra jobs), so serving's probed-cell `in`
     # predicate prunes entries before the scan is even built
     cat = Catalog(spark, cfg.out_root, stats_columns=("cluster",))
@@ -170,8 +169,7 @@ def query_index(
     probed = sorted({r["cluster"] for r in probe_rows})
     probes_local = spark.createDataFrame(probe_rows, probes_df.schema)
     # read(where=in): manifest-level entry pruning (only probed cell
-    # files enter the scan) + the literal isin filter, which Spark's
-    # hive-partition pruning also applies under the posix strategy
+    # files enter the scan) + the exact isin filter on what survives
     codes = cat.read("codes", where=("cluster", "in", probed))
     vectors = cat.read("vectors", where=("cluster", "in", probed)).select(
         cfg.id_col, cfg.vec_col

@@ -99,7 +99,7 @@ class PipelineConfig:
     # carriers whose turns form real trees (tool-call subtrees)
     tree_mode: bool = False
     run_id: str | None = None
-    # manifest-level data skipping (opt-in; manifest strategy only):
+    # manifest-level data skipping (opt-in):
     # columns whose per-entry [min, max] each sink commit records, so
     # later selective reads via Catalog.read(where=...) prune whole
     # entries before the scan is planned (catalog.py stats docs). Off

@@ -156,7 +156,10 @@ def run_stream_pipeline(
     batch DAG itself (``build_single_pass`` with the default config),
     persisted once and written as its two filters — routable rows per
     sink, and rejects. The package's one raw writer (``Catalog.append``
-    refuses the ``sink`` partitioning): a replayed batch appends twice."""
+    refuses the ``sink`` partitioning): a replayed batch appends twice.
+    Its output is plain parquet, not Catalog tables — read
+    ``<out_root>/sequenced_events`` and ``<out_root>/rejects`` with
+    ``spark.read.parquet``."""
     cfg = PipelineConfig()
     is_reject = F.col("reject_reason").isNotNull()
 

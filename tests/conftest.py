@@ -24,35 +24,26 @@ def sf_dir():
 
 
 def read_table(spark, root, tbl):
-    """Read a catalog table strategy-agnostically (tests must not
-    assume the posix physical layout — the manifest strategy keeps
-    data in staged dirs named by the manifest)."""
+    """Read a catalog table (data lives in staged dirs named by the
+    manifest, never under ``root/tbl``)."""
     from otel2pv_spark.sources.catalog import Catalog
 
     return Catalog(spark, str(root)).read(tbl)
 
 
 def table_mtime_fingerprint(spark, root, tbl):
-    """Data-file mtimes of a committed table, strategy-agnostic — the
-    'was this table rewritten?' probe for resume tests."""
+    """Data-file mtimes of a committed table — the 'was this table
+    rewritten?' probe for resume tests."""
     from otel2pv_spark.sources.catalog import Catalog
 
     cat = Catalog(spark, str(root))
-    if cat.strategy == "posix":
-        base = cat.path(tbl)
-        out = {}
-        for dp, _dirs, fs in os.walk(base):
-            for f in fs:
-                p = os.path.join(dp, f)
-                out[os.path.relpath(p, base)] = os.path.getmtime(p)
-        return out
     man = cat._load_manifest(tbl)
     out = {}
     for e in man["entries"]:
         # entries store root-RELATIVE paths (portable catalog); walking
         # them raw resolves against the process CWD and silently yields
-        # {} — which made every "not rewritten" assertion vacuous under
-        # the manifest strategy (ADVICE r3).
+        # {} — which made every "not rewritten" assertion vacuous
+        # (ADVICE r3).
         for dp, _dirs, fs in os.walk(cat._abs(e["path"])):
             for f in fs:
                 p = os.path.join(dp, f)
@@ -63,14 +54,11 @@ def table_mtime_fingerprint(spark, root, tbl):
 
 def table_parquet_globs(root, tbl):
     """Physical parquet globs of a committed table resolved WITHOUT
-    Spark (for independent DuckDB verification), strategy-agnostic:
-    posix reads the table dir; manifest resolves the pointer + manifest
-    JSON exactly as a non-Spark consumer of the table format would."""
+    Spark (for independent DuckDB verification): the pointer + manifest
+    JSON, exactly as a non-Spark consumer of the table format would."""
     import json
 
     root = str(root)
-    if os.environ.get("SPARK_GRAFT_CATALOG", "posix") != "manifest":
-        return [f"{root}/{tbl}/**/*.parquet"]
     meta = os.path.join(root, "_meta", tbl)
     with open(os.path.join(meta, "VERSION")) as fh:
         v = int(fh.read().strip())

@@ -81,64 +81,49 @@ def test_index_resume_skips_committed_steps(spark, sf_dir, tmp_path):
 
 
 def test_serving_prunes_to_probed_cells(spark, sf_dir, tmp_path):
-    """Under the manifest strategy the probed-cell `in` read plans a
-    scan over STRICTLY fewer files than the full table — the
-    entry-pruning contract that makes 10^12-vector serving feasible
-    (measured via inputFiles, the catalog data-skipping test pattern;
-    the posix strategy gets the same effect from Spark's own hive
-    partition pruning, which inputFiles cannot observe)."""
-    import os
-
+    """The probed-cell `in` read plans a scan over STRICTLY fewer
+    files than the full table — the entry-pruning contract that makes
+    10^12-vector serving feasible (measured via inputFiles, the catalog
+    data-skipping test pattern)."""
     from otel2pv_spark.sources.catalog import Catalog
 
     emb = _emb(spark, sf_dir)
     cfg = aidx.AnnIndexConfig(out_root=str(tmp_path / "aidx3"), run_id="a3")
-    old = os.environ.get("SPARK_GRAFT_CATALOG")
-    os.environ["SPARK_GRAFT_CATALOG"] = "manifest"
-    try:
-        aidx.run_index(spark, emb, cfg)
-        cat = Catalog(
-            spark, cfg.out_root, strategy="manifest",
-            stats_columns=("cluster",),
-        )
-        # every committed cell entry carries min = max = its cell id
-        # plus its row count (count-star fuel)
-        man = cat._load_manifest("codes")
-        assert all("stats" in e and "rows" in e for e in man["entries"])
-        assert sum(e["rows"] for e in man["entries"]) == emb.count()
-        assert cat.count_rows("codes") == emb.count()
+    aidx.run_index(spark, emb, cfg)
+    cat = Catalog(spark, cfg.out_root, stats_columns=("cluster",))
+    # every committed cell entry carries min = max = its cell id
+    # plus its row count (count-star fuel)
+    man = cat._load_manifest("codes")
+    assert all("stats" in e and "rows" in e for e in man["entries"])
+    assert sum(e["rows"] for e in man["entries"]) == emb.count()
+    assert cat.count_rows("codes") == emb.count()
 
-        queries = emb.filter(F.col("vec_id") < 2)
-        probed = sorted(
-            r["cluster"]
-            for r in sim.ivf_probe_cells(
-                queries, cat.read("centroids"), cfg.nprobe
-            ).select("cluster").distinct().collect()
-        )
-        # with nprobe=2 and two query points, < all 4 cells probed
-        assert 0 < len(probed) < cfg.k_cells
-        full = set(cat.read("codes").inputFiles())
-        pruned = set(
-            cat.read("codes", where=("cluster", "in", probed)).inputFiles()
-        )
-        assert pruned and pruned < full
+    queries = emb.filter(F.col("vec_id") < 2)
+    probed = sorted(
+        r["cluster"]
+        for r in sim.ivf_probe_cells(
+            queries, cat.read("centroids"), cfg.nprobe
+        ).select("cluster").distinct().collect()
+    )
+    # with nprobe=2 and two query points, < all 4 cells probed
+    assert 0 < len(probed) < cfg.k_cells
+    full = set(cat.read("codes").inputFiles())
+    pruned = set(
+        cat.read("codes", where=("cluster", "in", probed)).inputFiles()
+    )
+    assert pruned and pruned < full
 
-        # and the served result is identical to serving without the
-        # prune (pruning is a read optimization, never semantics)
-        served = aidx.query_index(spark, cfg, queries)
-        codes_all = cat.read("codes")
-        vec_all = cat.read("vectors").select("vec_id", "embedding")
-        unpruned = sim.pq_refine_topk_from_index(
-            codes_all, vec_all, queries, cat.read("codebooks"),
-            k=cfg.final_k, refine_r=cfg.refine_r,
-            centroids=cat.read("centroids"), nprobe=cfg.nprobe,
-        )
-        assert _results(served) == _results(unpruned)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_CATALOG", None)
-        else:
-            os.environ["SPARK_GRAFT_CATALOG"] = old
+    # and the served result is identical to serving without the
+    # prune (pruning is a read optimization, never semantics)
+    served = aidx.query_index(spark, cfg, queries)
+    codes_all = cat.read("codes")
+    vec_all = cat.read("vectors").select("vec_id", "embedding")
+    unpruned = sim.pq_refine_topk_from_index(
+        codes_all, vec_all, queries, cat.read("codebooks"),
+        k=cfg.final_k, refine_r=cfg.refine_r,
+        centroids=cat.read("centroids"), nprobe=cfg.nprobe,
+    )
+    assert _results(served) == _results(unpruned)
 
 
 def test_from_codes_requires_cluster_column(spark):

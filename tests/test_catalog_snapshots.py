@@ -1,9 +1,7 @@
 """Snapshot history / time-travel on the Catalog (the parquet stand-in
 for Iceberg's snapshot log): versioned commits, VERSION AS OF reads,
-rollback, and the expire_snapshots maintenance action — every semantic
-test runs under BOTH strategies (posix directory-swap and the
-object-store-safe manifest/pointer strategy), which is the strongest
-evidence the two are interchangeable."""
+rollback, and the expire_snapshots maintenance action, plus the
+manifest commit protocol's object-store contract and stats pruning."""
 
 from __future__ import annotations
 
@@ -21,20 +19,15 @@ def _df(spark, tag: str, n: int = 5):
     )
 
 
-@pytest.fixture(params=["posix", "manifest"])
-def mkcat(request, spark, tmp_path):
-    """Catalog factory bound to one strategy; the test body is
-    strategy-blind unless it asserts physical layout."""
+@pytest.fixture
+def mkcat(spark, tmp_path):
+    """Catalog factory rooted in the test's tmp dir."""
 
     def make(keep_snapshots: int = 0, sub: str = "cat"):
         return Catalog(
-            spark,
-            str(tmp_path / sub),
-            keep_snapshots=keep_snapshots,
-            strategy=request.param,
+            spark, str(tmp_path / sub), keep_snapshots=keep_snapshots
         )
 
-    make.strategy = request.param
     return make
 
 
@@ -107,15 +100,9 @@ class TestSnapshots:
         cat.write(_df(spark, "a"), "t")
         cat.write(_df(spark, "b"), "t")
         assert not cat.exists("t.v1")
-        if mkcat.strategy == "posix":
-            # the archive lives under _snapshots/, away from table paths
-            assert os.path.isdir(
-                os.path.join(str(tmp_path / "cat"), "_snapshots", "t")
-            )
-        else:
-            # manifests under _meta/, immutable data under _data/
-            assert os.path.isdir(os.path.join(str(tmp_path / "cat"), "_meta", "t"))
-            assert os.path.isdir(os.path.join(str(tmp_path / "cat"), "_data", "t"))
+        # manifests under _meta/, immutable data under _data/
+        assert os.path.isdir(os.path.join(str(tmp_path / "cat"), "_meta", "t"))
+        assert os.path.isdir(os.path.join(str(tmp_path / "cat"), "_data", "t"))
 
 
 class TestSnapshotDiff:
@@ -246,18 +233,16 @@ class TestSnapshotDiff:
 
 
 class TestAppendEvolve:
-    def test_append_same_schema(self, spark, mkcat, tmp_path):
+    def test_append_same_schema(self, spark, mkcat):
         cat = mkcat()
         cat.write(_df(spark, "a", 3), "t")
         cat.append(_df(spark, "b", 2), "t")
         got = sorted((r.id, r.tag) for r in cat.read("t").collect())
         assert [t for _, t in got].count("a") == 3
         assert [t for _, t in got].count("b") == 2
-        if mkcat.strategy == "posix":
-            # unevolved: no merge marker, cheap reads
-            assert not os.path.exists(
-                str(tmp_path / "cat" / "t" / "_evolved")
-            )
+        # unevolved: no union schema, cheap reads
+        man = cat._load_manifest("t")
+        assert not man["evolved"] and man["schema"] is None
 
     def test_append_rejects_silent_schema_drift(self, spark, mkcat):
         cat = mkcat()
@@ -444,7 +429,7 @@ class TestOverwritePartitions:
 
 
 class TestManifestPurity:
-    """The manifest strategy's object-store contract: NO hardlinks, NO
+    """The catalog's object-store contract: NO hardlinks, NO
     directory renames — the only rename anywhere is the single-file
     pointer/manifest os.replace. Enforced by instrumenting the os
     module during a full workload (write, partitioned write, append,
@@ -456,16 +441,16 @@ class TestManifestPurity:
         real_replace = os.replace
 
         def no_link(*a, **k):  # pragma: no cover - failure path
-            raise AssertionError("os.link used by manifest strategy")
+            raise AssertionError("os.link used by the catalog")
 
         def no_rename(src, dst, **k):  # pragma: no cover - failure path
             raise AssertionError(
-                f"os.rename used by manifest strategy: {src} -> {dst}"
+                f"os.rename used by the catalog: {src} -> {dst}"
             )
 
         def file_only_replace(src, dst, **k):
             assert os.path.isfile(src), (
-                f"manifest strategy may only replace FILES, got dir: {src}"
+                f"the catalog may only replace FILES, got dir: {src}"
             )
             return real_replace(src, dst, **k)
 
@@ -474,9 +459,7 @@ class TestManifestPurity:
         monkeypatch.setattr(cmod.os, "replace", file_only_replace)
         monkeypatch.setattr(cmod.shutil, "move", no_rename)
 
-        cat = Catalog(
-            spark, str(tmp_path / "cat"), keep_snapshots=2, strategy="manifest"
-        )
+        cat = Catalog(spark, str(tmp_path / "cat"), keep_snapshots=2)
         cat.write(_df(spark, "a", 4), "t")
         cat.append(_df(spark, "b", 2), "t")
         cat.append(
@@ -513,9 +496,7 @@ class TestManifestPurity:
         """commit_fanout_split makes two tables reference ONE staged
         dir; churning the MAIN table past its retention must not GC
         the stage while the rejects manifest still points into it."""
-        cat = Catalog(
-            spark, str(tmp_path / "cat"), keep_snapshots=0, strategy="manifest"
-        )
+        cat = Catalog(spark, str(tmp_path / "cat"), keep_snapshots=0)
         routed = spark.range(10).select(
             F.col("id"),
             F.when(F.col("id") % 5 == 0, "__reject_parse__")
@@ -535,7 +516,7 @@ class TestManifestPurity:
         swap and assert reads still see the old version."""
         import json as _json
 
-        cat = Catalog(spark, str(tmp_path / "cat"), strategy="manifest")
+        cat = Catalog(spark, str(tmp_path / "cat"))
         cat.write(_df(spark, "a", 3), "t")
         # hand-stage an orphan (what a crash mid-commit leaves behind)
         stage = cat._new_stage("t")
@@ -582,9 +563,7 @@ class TestReviewFindings:
         the next commit cleans it up."""
         import json as _json
 
-        cat = Catalog(
-            spark, str(tmp_path / "cat"), keep_snapshots=1, strategy="manifest"
-        )
+        cat = Catalog(spark, str(tmp_path / "cat"), keep_snapshots=1)
         cat.write(_df(spark, "a"), "t")   # v1
         cat.write(_df(spark, "b"), "t")   # v2 current, v1 retained
         # orphan v9 (manifest written, pointer swap never happened)
@@ -609,11 +588,11 @@ class TestReviewFindings:
         a different spelling of the same root (absolute vs
         dot-relative) must neither GC live data nor fail to read."""
         root = str(tmp_path / "cat")
-        cat_abs = Catalog(spark, root, strategy="manifest")
+        cat_abs = Catalog(spark, root)
         cat_abs.write(_df(spark, "a", 4), "t")
         # same root via an equivalent but differently-spelled path
         alias = str(tmp_path / "." / "cat")
-        cat_alias = Catalog(spark, alias, keep_snapshots=0, strategy="manifest")
+        cat_alias = Catalog(spark, alias, keep_snapshots=0)
         cat_alias.write(_df(spark, "b", 4), "other")  # triggers GC sweep
         assert {r.tag for r in cat_abs.read("t").collect()} == {"a"}
         assert {r.tag for r in cat_alias.read("t").collect()} == {"a"}
@@ -630,42 +609,40 @@ class TestSecondReviewFindings:
         read back its own writes (the relativization change once made
         _abs double-join the root)."""
         monkeypatch.chdir(tmp_path)
-        cat = Catalog(spark, "relcat", strategy="manifest")
+        cat = Catalog(spark, "relcat")
         cat.write(_df(spark, "a", 4), "t")
         assert {r.tag for r in cat.read("t").collect()} == {"a"}
         cat.append(_df(spark, "b", 2), "t")
         assert cat.read("t").count() == 6
         assert cat._table_file_stats("t")[0] > 0
 
-    def test_posix_history_versions_survive_expiry(self, spark, tmp_path):
-        """history() must label the current version with a monotonic
-        number that never collides with expired versions (posix now
-        persists a commit counter)."""
-        cat = Catalog(spark, str(tmp_path / "cat"), keep_snapshots=3,
-                      strategy="posix")
-        for tag in "abcde":
-            cat.write(_df(spark, tag), "t")
-        cur = [r for r in cat.history("t").collect() if r.is_current][0]
-        assert cur.version == 5
-        cat.expire_snapshots("t", keep=0)
-        cur2 = [r for r in cat.history("t").collect() if r.is_current][0]
-        assert cur2.version == 5  # not reset to 1 by the empty log
 
-    def test_posix_history_distinct_versions_without_retention(
-        self, spark, tmp_path
-    ):
-        """keep_snapshots=0: there are never snapshots to fall back on,
-        so the counter must be seeded on the FIRST commit — otherwise
-        the first two committed states are both labeled v1 (ADVICE r3)."""
-        cat = Catalog(spark, str(tmp_path / "cat0"), keep_snapshots=0,
-                      strategy="posix")
-        versions = []
-        for tag in "abc":
-            cat.write(_df(spark, tag), "t")
-            versions.append(
-                [r for r in cat.history("t").collect() if r.is_current][0].version
-            )
-        assert versions == [1, 2, 3]
+def test_plain_parquet_dir_is_named_not_a_catalog_table(tmp_path):
+    """A ``<root>/<table>`` directory of plain parquet (an older
+    directory-rename layout, or run_stream_pipeline's raw appends) has
+    no manifest pointer: reading it through the Catalog names the path
+    and says what it is, instead of claiming the table is absent."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "cat"
+    flat = root / "t"
+    flat.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2]}), str(flat / "part-0.parquet"))
+    parted = root / "sequenced_events" / "sink=sink_user"
+    parted.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [3]}), str(parted / "part-0.parquet"))
+
+    cat = Catalog(None, str(root))  # the error path needs no session
+    for tbl in ("t", "sequenced_events"):
+        with pytest.raises(ValueError, match="plain parquet directory") as e:
+            cat.read(tbl)
+        assert str(root / tbl) in str(e.value)
+        with pytest.raises(ValueError, match="plain parquet directory"):
+            cat.count_rows(tbl)
+    assert not cat.exists("t")
+    with pytest.raises(ValueError, match="table 'gone' does not exist"):
+        cat.read("gone")
 
 
 class TestManifestStatsPruning:
@@ -677,7 +654,7 @@ class TestManifestStatsPruning:
 
     def _cat(self, spark, tmp_path, sub="statcat"):
         return Catalog(
-            spark, str(tmp_path / sub), strategy="manifest",
+            spark, str(tmp_path / sub),
             stats_columns=("id", "ts", "tag"),
         )
 
@@ -750,7 +727,7 @@ class TestManifestStatsPruning:
         """Old entries keep their stats verbatim through append and
         rollback (metadata-only recommits never re-read old data)."""
         cat = Catalog(
-            spark, str(tmp_path / "rb"), strategy="manifest",
+            spark, str(tmp_path / "rb"),
             keep_snapshots=2, stats_columns=("id",),
         )
         cat.write(self._batch(spark, 0, 10, "a"), "t")
@@ -763,19 +740,11 @@ class TestManifestStatsPruning:
         assert cat._load_manifest("t")["entries"][0]["stats"] == st0
 
     def test_unconfigured_catalog_records_no_stats(self, spark, tmp_path):
-        cat = Catalog(spark, str(tmp_path / "nostat"), strategy="manifest")
+        cat = Catalog(spark, str(tmp_path / "nostat"))
         cat.write(self._batch(spark, 0, 10, "a"), "t")
         assert "stats" not in cat._load_manifest("t")["entries"][0]
         # where= still works, as a plain filter
         assert cat.read("t", where=("id", ">=", 5)).count() == 5
-
-    def test_posix_where_filters_without_stats(self, spark, tmp_path):
-        cat = Catalog(
-            spark, str(tmp_path / "px"), strategy="posix",
-            stats_columns=("id",),
-        )
-        cat.write(self._batch(spark, 0, 10, "a"), "t")
-        assert cat.read("t", where=("id", "<", 3)).count() == 3
 
     def test_kind_mismatch_never_misprunes(self, spark, tmp_path):
         """Review finding: comparable-but-wrong lowered types (date
@@ -785,7 +754,7 @@ class TestManifestStatsPruning:
         import datetime
 
         cat = Catalog(
-            spark, str(tmp_path / "kinds"), strategy="manifest",
+            spark, str(tmp_path / "kinds"),
             stats_columns=("d", "ts"),
         )
         df = spark.range(0, 10).select(
@@ -817,7 +786,7 @@ class TestManifestStatsPruning:
             cat.read("t", where=("ts", ">", 0)).count()
 
     def test_fanout_leaf_stats_grouped_and_partition_col(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path
     ):
         """commit_fanout_split records stats for every sink entry via
         ONE grouped agg (incl. min=max stats on the partition column
@@ -825,16 +794,12 @@ class TestManifestStatsPruning:
         import conftest as _cf
         from otel2pv_spark.plans import pipeline as pl
 
-        monkeypatch.setenv("SPARK_GRAFT_CATALOG", "manifest")
         out = str(tmp_path / "fanstats")
         cfg = pl.PipelineConfig(
             out_root=out, run_id="fs1", stats_columns=("sink", "turn_idx")
         )
         pl.run_from_events(spark, _cf.SF_DIR, cfg)
-        cat = Catalog(
-            spark, out, strategy="manifest",
-            stats_columns=("sink", "turn_idx"),
-        )
+        cat = Catalog(spark, out, stats_columns=("sink", "turn_idx"))
         man = cat._load_manifest("sequenced_events")
         assert all("stats" in e for e in man["entries"])
         for e in man["entries"]:
@@ -855,13 +820,13 @@ class TestManifestStatsPruning:
         entries stats-less (metadata-only recommit, no data re-read)
         while freshly staged leaves gain stats."""
         root = str(tmp_path / "legacy")
-        old = Catalog(spark, root, strategy="manifest")
+        old = Catalog(spark, root)
         df = spark.range(0, 20).select(
             F.col("id"),
             (F.col("id") % 2).cast("string").alias("p"),
         )
         old.write(df, "t", partition_by=["p"])
-        cat = Catalog(spark, root, strategy="manifest", stats_columns=("id",))
+        cat = Catalog(spark, root, stats_columns=("id",))
         newdf = spark.range(100, 110).select(
             F.col("id"), F.lit("1").alias("p")
         )
@@ -876,7 +841,7 @@ class TestManifestStatsPruning:
         rebuild, partition-value stats for BOTH levels, and pruned
         reads all work at leaf grain."""
         cat = Catalog(
-            spark, str(tmp_path / "ml"), strategy="manifest",
+            spark, str(tmp_path / "ml"),
             stats_columns=("a", "b", "id"),
         )
         df = spark.range(0, 40).select(
@@ -913,10 +878,7 @@ class TestManifestStatsPruning:
         NaN returns NaN; every Python comparison with NaN is False, so
         an unguarded bound would PRUNE entries holding matching rows.
         NaN bounds must record nothing (missing = cannot prune)."""
-        cat = Catalog(
-            spark, str(tmp_path / "nan"), strategy="manifest",
-            stats_columns=("score",),
-        )
+        cat = Catalog(spark, str(tmp_path / "nan"), stats_columns=("score",))
         df = spark.range(0, 10).select(
             F.col("id"),
             F.when(F.col("id") == 7, F.lit(float("nan")))
@@ -936,7 +898,7 @@ class TestManifestStatsPruning:
         column — its min=max stat must be recorded regardless of leaf
         count (derived from the leaf NAME, zero extra jobs)."""
         cat = Catalog(
-            spark, str(tmp_path / "oneleaf"), strategy="manifest",
+            spark, str(tmp_path / "oneleaf"),
             stats_columns=("p", "id"),
         )
         df = spark.range(0, 5).select(F.col("id"), F.lit("only").alias("p"))
@@ -1033,7 +995,7 @@ class TestManifestStatsPruning:
         assert cat.count_rows("t", where=("id", "<", 120)) == 120
         # an entry without a recorded count (stats not configured)
         # falls back to the scan instead of guessing
-        legacy = Catalog(spark, str(tmp_path / "cnt_legacy"), strategy="manifest")
+        legacy = Catalog(spark, str(tmp_path / "cnt_legacy"))
         legacy.write(self._batch(spark, 0, 30, "a"), "t")
         man2 = legacy._load_manifest("t")
         assert all("rows" not in e for e in man2["entries"])

@@ -309,11 +309,15 @@ def test_stream_job_drains_and_matches_batch_counts(spark, tmp_path):
     }))
     res = job.main(["--config", str(cfgp)])
     assert res["stopped"]
-    # mode-1 streaming appends RAW parquet dirs (not Catalog tables) —
-    # physical reads are correct here under either strategy
+    # mode-1 streaming appends RAW parquet dirs (not Catalog tables),
+    # and a Catalog read of them says so
     seq = spark.read.parquet(str(tmp_path / "st_out" / "sequenced_events"))
     rej = spark.read.parquet(str(tmp_path / "st_out" / "rejects"))
     assert seq.count() + rej.count() == tr.count()
+    from otel2pv_spark.sources.catalog import Catalog
+
+    with pytest.raises(ValueError, match="plain parquet directory"):
+        Catalog(spark, str(tmp_path / "st_out")).read("sequenced_events")
 
 
 def test_stream_job_config_validation(tmp_path):
@@ -416,24 +420,21 @@ def test_maintenance_config_validation(tmp_path):
 
 
 def test_catalog_metadata_tables(spark, tmp_path):
-    """history()/files() — the Iceberg metadata-table analog, both
-    strategies."""
+    """history()/files() — the Iceberg metadata-table analog."""
     from otel2pv_spark.sources.catalog import Catalog
 
-    for strategy in ("posix", "manifest"):
-        cat = Catalog(spark, str(tmp_path / strategy), keep_snapshots=3,
-                      strategy=strategy)
-        cat.write(spark.range(10).repartition(2), "t")
-        cat.write(spark.range(20).repartition(3), "t")
-        h = {r.version: r for r in cat.history("t").collect()}
-        assert len(h) == 2
-        cur = [r for r in h.values() if r.is_current]
-        assert len(cur) == 1 and cur[0].n_files == 3
-        prev = [r for r in h.values() if not r.is_current][0]
-        assert prev.n_files == 2
-        f = cat.files("t").collect()
-        assert len(f) == 3 and all(r.bytes > 0 for r in f)
-        assert len(cat.files("t", version=prev.version).collect()) == 2
+    cat = Catalog(spark, str(tmp_path / "meta"), keep_snapshots=3)
+    cat.write(spark.range(10).repartition(2), "t")
+    cat.write(spark.range(20).repartition(3), "t")
+    h = {r.version: r for r in cat.history("t").collect()}
+    assert len(h) == 2
+    cur = [r for r in h.values() if r.is_current]
+    assert len(cur) == 1 and cur[0].n_files == 3
+    prev = [r for r in h.values() if not r.is_current][0]
+    assert prev.n_files == 2
+    f = cat.files("t").collect()
+    assert len(f) == 3 and all(r.bytes > 0 for r in f)
+    assert len(cat.files("t", version=prev.version).collect()) == 2
 
 
 def test_maintenance_preserves_history_by_default(spark, tmp_path):
@@ -443,7 +444,7 @@ def test_maintenance_preserves_history_by_default(spark, tmp_path):
     from otel2pv_spark.sources.catalog import Catalog
 
     root = str(tmp_path / "mh")
-    cat = Catalog(spark, root, keep_snapshots=3, strategy="manifest")
+    cat = Catalog(spark, root, keep_snapshots=3)
     for tag in ("a", "b", "c"):
         cat.write(
             spark.range(100).selectExpr("id", f"'{tag}' as tag"), "t"
@@ -457,14 +458,8 @@ def test_maintenance_preserves_history_by_default(spark, tmp_path):
         "tables": [{"name": "t", "compact": {}}],   # NO expiry requested
         "spark": {"master": "local[4]", "shuffle_partitions": 8},
     }))
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_CATALOG"] = "manifest"
-    try:
-        job.main(["--config", str(cfgp)])
-    finally:
-        del _os.environ["SPARK_GRAFT_CATALOG"]
-    cat2 = Catalog(spark, root, keep_snapshots=3, strategy="manifest")
+    job.main(["--config", str(cfgp)])
+    cat2 = Catalog(spark, root, keep_snapshots=3)
     # the two retained versions survive, plus the pre-compaction state
     assert len(cat2.snapshots("t")) == 3
     assert {r.tag for r in cat2.read("t").collect()} == {"c"}

@@ -138,9 +138,9 @@ def test_pipeline_stats_columns_enable_pruned_sink_reads(
     spark, sf_dir, tmp_path
 ):
     """Opt-in PipelineConfig.stats_columns flows to the sink commits:
-    under the manifest strategy the committed sequenced_events entries
-    carry [min, max] stats and a selective Catalog.read(where=...)
-    equals the plain filtered read (pruning exercised end-to-end)."""
+    the committed sequenced_events entries carry [min, max] stats and a
+    selective Catalog.read(where=...) equals the plain filtered read
+    (pruning exercised end-to-end)."""
     from otel2pv_spark.sources.catalog import Catalog
 
     out = str(tmp_path / "statsout")
@@ -149,9 +149,8 @@ def test_pipeline_stats_columns_enable_pruned_sink_reads(
     )
     pipeline.run_from_events(spark, sf_dir, cfg)
     cat = Catalog(spark, out, stats_columns=("conv_id", "turn_idx"))
-    if cat.strategy == "manifest":
-        man = cat._load_manifest("sequenced_events")
-        assert any("stats" in e for e in man["entries"])
+    man = cat._load_manifest("sequenced_events")
+    assert any("stats" in e for e in man["entries"])
     got = cat.read("sequenced_events", where=("turn_idx", "<=", 1)).count()
     want = (
         cat.read("sequenced_events").filter(F.col("turn_idx") <= 1).count()
@@ -172,8 +171,6 @@ def test_synth_generator_deterministic(spark):
 def test_catalog_compact(spark, tmp_path):
     """Compaction rewrites many small files into the target count
     without changing the data, for both flat and partitioned tables."""
-    import glob
-
     from otel2pv_spark.sources.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path))
@@ -186,8 +183,6 @@ def test_catalog_compact(spark, tmp_path):
     stats = cat.compact("flat", target_file_mb=256)
     assert stats["files_before"] == 32 and stats["target_files"] == 1
     assert cat._table_file_stats("flat")[0] == 1
-    if cat.strategy == "posix":
-        assert len(glob.glob(f"{tmp_path}/flat/*.parquet")) == 1
     assert cat.read("flat").count() == 10_000
     assert sorted(r["id"] for r in cat.read("flat").collect()) == list(range(10_000))
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+from conftest import table_mtime_fingerprint
 from otel2pv_spark.plans import pipeline
 from otel2pv_spark.sources.catalog import Catalog
 from otel2pv_spark.sources.manifest import RunManifest
@@ -21,22 +22,6 @@ def _mtimes(root: str) -> dict[str, float]:
         for f in files:
             p = os.path.join(dirpath, f)
             out[os.path.relpath(p, root)] = os.path.getmtime(p)
-    return out
-
-
-def _table_mtimes(spark, root: str, tbl: str) -> dict:
-    """Data-file mtimes of a committed table, strategy-agnostic (the
-    posix strategy keeps files under the table dir; the manifest
-    strategy under immutable staged dirs named by the manifest)."""
-    cat = Catalog(spark, root)
-    if cat.strategy == "posix":
-        return _mtimes(cat.path(tbl))
-    man = cat._load_manifest(tbl)
-    out = {}
-    for e in man["entries"]:
-        p = cat._abs(e["path"])
-        for rel, t in _mtimes(p).items():
-            out[(p, rel)] = t
     return out
 
 
@@ -66,14 +51,14 @@ def test_resume_after_partial_commit(spark, tmp_path):
     cat_b = Catalog(spark, out_b)
     cat_b.drop("_metrics")
     cat_b.drop("_lineage")
-    fanout_before = _table_mtimes(spark, out_b, "sequenced_events")
+    fanout_before = table_mtime_fingerprint(spark, out_b, "sequenced_events")
 
     res = pipeline.run_from_events(
         spark, SF, pipeline.PipelineConfig(out_root=out_b, run_id="crash")
     )
     assert res["rows"] == full["rows"]
     # committed stages were NOT rewritten
-    assert _table_mtimes(spark, out_b, "sequenced_events") == fanout_before
+    assert table_mtime_fingerprint(spark, out_b, "sequenced_events") == fanout_before
     # resumed outputs identical to the uninterrupted run
     cat_a = Catalog(spark, out_a)
     for tbl in ("sequenced_events", "rejects"):

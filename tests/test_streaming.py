@@ -897,11 +897,8 @@ def test_stream_state_absent_vs_unreadable(spark, tmp_path):
         str(tmp_path / d) for d in ("src", "state", "out", "ckpt")
     )
     cat = Catalog(spark, state)
-    if cat.strategy == "posix":
-        os.makedirs(cat.path("series_last"))
-    else:
-        os.makedirs(os.path.join(state, "_meta", "series_last"))
-        os.makedirs(os.path.join(state, "_data", "series_last", "s-crashed"))
+    os.makedirs(os.path.join(state, "_meta", "series_last"))
+    os.makedirs(os.path.join(state, "_data", "series_last", "s-crashed"))
     _write_counter_files(src, [
         [(1, "2026-01-01 10:00:00", 7, "bytes", 10.0),
          (2, "2026-01-01 10:10:00", 7, "bytes", 12.0)],
