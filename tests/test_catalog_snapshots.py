@@ -19,9 +19,42 @@ def _df(spark, tag: str, n: int = 5):
     )
 
 
-@pytest.fixture
-def mkcat(spark, tmp_path):
-    """Catalog factory rooted in the test's tmp dir."""
+def _guard_posix_renames(monkeypatch):
+    """Make the posix calls an object store lacks fail inside the
+    catalog module: hardlinks, directory renames and moves. The only
+    rename the commit protocol may use is a single-FILE os.replace
+    (the manifest / VERSION pointer swap)."""
+    import otel2pv_spark.sources.catalog as cmod
+
+    real_replace = os.replace
+
+    def no_link(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("os.link used by the catalog")
+
+    def no_rename(src, dst, **k):  # pragma: no cover - failure path
+        raise AssertionError(f"os.rename used by the catalog: {src} -> {dst}")
+
+    def file_only_replace(src, dst, **k):
+        assert os.path.isfile(src), (
+            f"the catalog may only replace FILES, got dir: {src}"
+        )
+        return real_replace(src, dst, **k)
+
+    monkeypatch.setattr(cmod.os, "link", no_link)
+    monkeypatch.setattr(cmod.os, "rename", no_rename)
+    monkeypatch.setattr(cmod.os, "replace", file_only_replace)
+    monkeypatch.setattr(cmod.shutil, "move", no_rename)
+
+
+@pytest.fixture(params=["manifest", "posix"])
+def mkcat(request, spark, tmp_path, monkeypatch):
+    """Catalog factory rooted in the test's tmp dir. Each semantic test
+    runs twice: ``[manifest]`` as is, and ``[posix]`` with the posix
+    calls an object store lacks (hardlink, directory rename, move)
+    made to fail, so every operation the test drives also proves the
+    catalog never relies on them."""
+    if request.param == "posix":
+        _guard_posix_renames(monkeypatch)
 
     def make(keep_snapshots: int = 0, sub: str = "cat"):
         return Catalog(
@@ -436,28 +469,7 @@ class TestManifestPurity:
     evolve, fanout split, partition overwrite, rollback, compact)."""
 
     def test_no_hardlinks_or_dir_renames(self, spark, tmp_path, monkeypatch):
-        import otel2pv_spark.sources.catalog as cmod
-
-        real_replace = os.replace
-
-        def no_link(*a, **k):  # pragma: no cover - failure path
-            raise AssertionError("os.link used by the catalog")
-
-        def no_rename(src, dst, **k):  # pragma: no cover - failure path
-            raise AssertionError(
-                f"os.rename used by the catalog: {src} -> {dst}"
-            )
-
-        def file_only_replace(src, dst, **k):
-            assert os.path.isfile(src), (
-                f"the catalog may only replace FILES, got dir: {src}"
-            )
-            return real_replace(src, dst, **k)
-
-        monkeypatch.setattr(cmod.os, "link", no_link)
-        monkeypatch.setattr(cmod.os, "rename", no_rename)
-        monkeypatch.setattr(cmod.os, "replace", file_only_replace)
-        monkeypatch.setattr(cmod.shutil, "move", no_rename)
+        _guard_posix_renames(monkeypatch)
 
         cat = Catalog(spark, str(tmp_path / "cat"), keep_snapshots=2)
         cat.write(_df(spark, "a", 4), "t")
@@ -543,11 +555,11 @@ class TestManifestPurity:
 class TestReviewFindings:
     """Regressions for the round-3 code-review findings."""
 
-    def test_all_rejects_fanout_commits_readable_empty_main(self, spark, mkcat):
+    def test_all_rejects_fanout_commits_readable_empty_main(self, spark, tmp_path):
         """Every row routed to a reject sink: the MAIN table must still
         commit readable (empty, full schema) — a zero-entry manifest /
         empty directory would break every downstream readback."""
-        cat = mkcat()
+        cat = Catalog(spark, str(tmp_path / "cat"))
         routed = spark.range(4).select(
             F.col("id"), F.lit("__reject_parse__").alias("sink")
         )
