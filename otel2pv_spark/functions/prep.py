@@ -139,6 +139,22 @@ def curate(
     deterministic ``drop_reason`` (duplicate > lang > quality
     priority), so downstream can audit exactly why data was dropped —
     silent filtering at 100 TB is how corpora go wrong."""
+    return _curate_ledger(
+        df, id_col, text_col, quality_threshold, lang, salt
+    ).drop("scrubbed")
+
+
+def _curate_ledger(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    quality_threshold: float = 0.3,
+    lang: str = "en",
+    salt: str = "split-v1",
+) -> DataFrame:
+    """``curate``'s columns plus the ``scrubbed`` text its gates ran
+    over: the curation plan's one ledger, so the later stages read the
+    scrubbed text from it instead of scrubbing the input a second time."""
     scrubbed = scrub_text(df, id_col=id_col, text_col=text_col)
 
     tok = tokens("scrubbed")
@@ -205,6 +221,7 @@ def curate(
         F.when(
             drop_reason.isNull(), _split_expr(_hash_frac(id_col, salt), DEFAULT_SPLITS)
         ).alias("split"),
+        "scrubbed",
     )
 
 

@@ -13,12 +13,22 @@ decision and FIRST drop reason (duplicate > lang > quality > near_dup
 as ``prep.curate``: at 100 TB, silent drops are how corpora go wrong.
 
 Scale shape by stage: curate is one exchange (its dedup window);
-clustering is LSH-bucketed pair generation + O(log n) CC rounds; the
+clustering is LSH-bucketed pair generation + O(log n) CC rounds (a
+graph small enough for the driver finishes there by union-find); the
 decontaminate eval side broadcasts; sampling is a hash-threshold
 projection against a broadcast rate table; packing shuffles once on
-the shard key. Stages communicate by doc_id joins on the lazily-built
-plans — only the CC fixpoint loop and the sampling normalizer run
-actions before the final writes. Outputs commit through the same
+the shard key.
+
+Each stage is computed once. ``build_audit`` snapshots the ledger
+(curate's decision and split per document plus the scrubbed text the
+later stages run over) and each stage's narrow output: clusters
+(doc_id, cluster_id, is_canonical), contamination (doc_id,
+contaminated) and, when configured, the sampling decision. A stage reads
+the snapshots before it, and the audit is one left-join fold of the
+ledger with those outputs. Without the snapshots every stage's input
+is a lazy join on the previous stage's plan, so curate and the scrub
+re-run in every branch of the audit plan (55 scans of the input files
+for 1,000 documents). Outputs commit through the same
 ``Catalog``/``RunManifest`` machinery as the pipeline (atomic swap,
 crash-resume by step).
 """
@@ -35,6 +45,7 @@ from pyspark.sql import functions as F
 from ..functions import dedup as dd
 from ..functions import prep
 from ..functions import textstats as ts
+from ..snapshot import snapshot
 from ..sources.catalog import Catalog
 from ..sources.manifest import RunManifest
 
@@ -72,7 +83,9 @@ def build_audit(
     is configured. Stages run over the SCRUBBED text (two documents
     differing only in redacted PII are duplicates) and each stage sees
     only the previous stage's survivors, so drop_reason is the first
-    gate that fired."""
+    gate that fired. The ledger and stage outputs are materialized
+    here (Spark jobs run before this returns); the returned plan reads
+    only those snapshots."""
     if (cfg.temperature_alpha is not None) and cfg.sample_rates:
         raise ValueError(
             "CurationConfig: temperature_alpha and sample_rates are "
@@ -90,55 +103,62 @@ def build_audit(
         raise ValueError(
             "CurationConfig: temperature_alpha/sample_rates require strata_col"
         )
-    cur = prep.curate(
+    # the ledger: curate's decision and split per input document plus
+    # the scrubbed text every later stage runs over, computed once
+    ledger = prep._curate_ledger(
         docs, quality_threshold=cfg.quality_threshold, lang=cfg.lang
+    ).select("doc_id", "scrubbed", F.col("drop_reason").alias("_cr"), "split")
+    if cfg.strata_col:
+        # the stratum rides in the ledger: no later stage reads docs
+        ledger = ledger.join(docs.select("doc_id", cfg.strata_col), "doc_id")
+    ledger = ledger.transform(snapshot)
+    kept1 = ledger.filter(F.col("_cr").isNull()).select(
+        "doc_id", F.col("scrubbed").alias("text")
     )
-    scrubbed = prep.scrub_text(docs).select("doc_id", "scrubbed")
-    kept1 = scrubbed.join(cur.filter("kept").select("doc_id"), "doc_id")
 
-    clusters = dd.dedup_clusters(
-        kept1.withColumnRenamed("scrubbed", "text"),
-        n=cfg.dedup_n,
-        num_hashes=cfg.num_hashes,
-        bands=cfg.bands,
+    clusters = (
+        dd.dedup_clusters(
+            kept1, n=cfg.dedup_n, num_hashes=cfg.num_hashes, bands=cfg.bands
+        )
+        .select("doc_id", "cluster_id", "is_canonical")
+        .transform(snapshot)
     )
     canon = kept1.join(
         clusters.filter("is_canonical").select("doc_id"), "doc_id"
     )
 
-    cont = prep.decontaminate(
-        canon.withColumnRenamed("scrubbed", "text"),
-        eval_df,
-        n=cfg.decontaminate_n,
+    cont = (
+        prep.decontaminate(canon, eval_df, n=cfg.decontaminate_n)
+        .select("doc_id", "contaminated")
+        .transform(snapshot)
     )
-    surv = canon.join(
-        cont.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
-    )
-
-    if cfg.strata_col and cfg.temperature_alpha is not None:
-        samp = prep.temperature_sample(
-            surv.join(docs.select("doc_id", cfg.strata_col), "doc_id"),
-            strata_col=cfg.strata_col,
-            alpha=cfg.temperature_alpha,
-            target_frac=cfg.target_frac,
-        ).select("doc_id", "sampled")
-    elif cfg.strata_col and cfg.sample_rates:
-        samp = prep.stratified_sample(
-            surv.join(docs.select("doc_id", cfg.strata_col), "doc_id"),
-            cfg.sample_rates,
-            strata_col=cfg.strata_col,
-        ).select("doc_id", "sampled")
-    else:
-        samp = surv.select("doc_id", F.lit(True).alias("sampled"))
-
     audit = (
-        cur.select(
-            "doc_id", F.col("drop_reason").alias("_cr"), "split"
-        )
-        .join(clusters.select("doc_id", "cluster_id", "is_canonical"), "doc_id", "left")
-        .join(cont.select("doc_id", "contaminated"), "doc_id", "left")
-        .join(samp.withColumnRenamed("sampled", "_s"), "doc_id", "left")
+        ledger.select("doc_id", "_cr", "split")
+        .join(clusters, "doc_id", "left")
+        .join(cont, "doc_id", "left")
     )
+
+    if cfg.strata_col:
+        surv = (
+            ledger.join(cont.filter(~F.col("contaminated")), "doc_id")
+            .select("doc_id", cfg.strata_col)
+        )
+        if cfg.temperature_alpha is not None:
+            samp = prep.temperature_sample(
+                surv,
+                strata_col=cfg.strata_col,
+                alpha=cfg.temperature_alpha,
+                target_frac=cfg.target_frac,
+            )
+        else:
+            samp = prep.stratified_sample(
+                surv, cfg.sample_rates, strata_col=cfg.strata_col
+            )
+        samp = samp.select("doc_id", F.col("sampled").alias("_s"))
+        audit = audit.join(samp.transform(snapshot), "doc_id", "left")
+    else:
+        # no sampling: every survivor is sampled, so the gate never fires
+        audit = audit.withColumn("_s", F.lit(True))
     # first gate that fired: later gates are NULL for earlier drops, so
     # coalesce picks the earliest (when(NULL-cond) yields NULL and is
     # skipped)

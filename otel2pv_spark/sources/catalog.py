@@ -802,12 +802,20 @@ class ManifestCatalog(_CatalogBase):
         keep = self.keep_snapshots if keep is None else keep
         versions = self.snapshots(table)
         expired = versions[: max(0, len(versions) - keep)]
+        # stage roots the expired manifests held: a shared fan-out stage
+        # lives under the OTHER table's _data dir and is swept below
+        # once nothing retained references it
+        released: set[str] = set()
         for v in expired:
+            try:
+                released |= self._stage_roots(self._load_manifest(table, v))
+            except (OSError, ValueError):
+                pass
             try:
                 os.remove(self._manifest_path(table, v))
             except OSError:
                 pass
-        self._gc_unreferenced(table)
+        self._gc_unreferenced(table, released)
         return expired
 
     def _stage_roots(self, man: dict) -> set[str]:
@@ -825,9 +833,20 @@ class ManifestCatalog(_CatalogBase):
             roots.add(os.path.normpath(p))
         return roots
 
-    def _gc_unreferenced(self, table: str) -> None:
+    def _gc_unreferenced(self, table: str, released: set[str]) -> None:
+        """Delete every stage under ``_data/<table>/`` and every
+        ``released`` stage root (root-relative, possibly under another
+        table's ``_data`` dir) that no manifest of any table references.
+        Another table's dir is never listed: it may hold a concurrent
+        writer's not-yet-committed stage."""
         data = self._data_dir(table)
-        if not os.path.isdir(data):
+        candidates = set(released)
+        if os.path.isdir(data):
+            candidates |= {
+                os.path.normpath(self._rel(os.path.join(data, d)))
+                for d in os.listdir(data)
+            }
+        if not candidates:
             return
         referenced: set[str] = set()
         meta_root = os.path.join(self.root, "_meta")
@@ -845,10 +864,11 @@ class ManifestCatalog(_CatalogBase):
                     except (OSError, json.JSONDecodeError):
                         continue
                     referenced |= self._stage_roots(man)
-        for d in os.listdir(data):
-            rel = os.path.normpath(self._rel(os.path.join(data, d)))
-            if rel not in referenced:
-                shutil.rmtree(os.path.join(data, d), ignore_errors=True)
+        for rel in candidates - referenced:
+            # only stage dirs this catalog made: _data/<table>/s-<id>
+            parts = rel.split(os.sep)
+            if len(parts) == 3 and parts[0] == "_data":
+                shutil.rmtree(self._abs(rel), ignore_errors=True)
 
     def rollback(self, table: str, version: int) -> None:
         """Make ``version`` current again: a NEW manifest referencing

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -73,3 +75,19 @@ def table_parquet_globs(root, tbl):
         )
         for e in man["entries"]
     ]
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Yield a list that holds, once the block exits, the ids of the
+    Spark jobs the block ran (one fresh job group on this thread)."""
+    sc = spark.sparkContext
+    group = "jobs-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

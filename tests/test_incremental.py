@@ -102,6 +102,38 @@ def test_incremental_idempotent_rerun(spark, sf_dir, tmp_path):
     assert first == second
 
 
+def test_incremental_leaves_no_unreferenced_stage(spark, sf_dir, tmp_path):
+    """run_incremental rewrites sequenced_events, then rejects; the
+    fan-out stage both tables shared lives under
+    ``_data/sequenced_events/`` and must be swept once the rejects
+    commit releases it, not kept until the next sequenced_events
+    commit."""
+    import glob
+    import json
+    import os
+
+    tr = datagen.transcripts_from_events(spark, sf_dir)
+    convs = [r.conv_id for r in tr.select("conv_id").distinct().limit(3).collect()]
+    root = str(tmp_path / "out")
+    pipeline.run(spark, tr, pipeline.PipelineConfig(out_root=root, run_id="base"))
+    pipeline.run_incremental(
+        spark, tr, pipeline.PipelineConfig(out_root=root, run_id="d1"), convs
+    )
+
+    referenced = set()
+    for ptr in glob.glob(os.path.join(root, "_meta", "*", "VERSION")):
+        with open(ptr) as fh:
+            version = fh.read().strip()
+        with open(os.path.join(os.path.dirname(ptr), f"v{version}.json")) as fh:
+            for e in json.load(fh)["entries"]:
+                referenced.add(os.path.normpath(e.get("base") or e["path"]))
+    stages = {
+        os.path.relpath(d, root)
+        for d in glob.glob(os.path.join(root, "_data", "*", "s-*"))
+    }
+    assert stages and stages <= referenced, stages - referenced
+
+
 def test_refresh_dims_matches_full_recompute(spark, sf_dir, tmp_path):
     """Dim-delta maintenance: re-home one tool's sink, refresh, and the
     tables must be bit-identical to a from-scratch run under the new

@@ -11,8 +11,9 @@ from __future__ import annotations
 
 import hashlib
 import re
+from unittest import mock
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from otel2pv_spark.functions import prep
 
@@ -113,9 +114,14 @@ def _py_components(edges, nodes):
         max_size=60,
     )
 )
+@example(edges=[(i, j) for i in range(8) for j in range(i + 1, 8)])
 def test_connected_components_matches_union_find(spark, edges):
     """Large-star/small-star vs union-find on random graphs (self-loops
-    and duplicate edges included; chains, cycles, isolated nodes)."""
+    and duplicate edges included; chains, cycles, isolated nodes), on
+    every path: rounds only (driver bound 0), driver finish only (bound
+    above every graph), and a bound of 10, which a dense graph falls
+    below after its first round (the K8 example: 28 edges, then a
+    7-edge star)."""
     from otel2pv_spark.functions import dedup as dd
 
     nodes = list(range(31))
@@ -123,12 +129,14 @@ def test_connected_components_matches_union_find(spark, edges):
     edf = spark.createDataFrame(
         edges or [(0, 0)], ["doc_a", "doc_b"]
     )  # empty DataFrames need a schema; (0,0) is a self-loop no-op
-    got = {
-        r["doc_id"]: r["component"]
-        for r in dd.connected_components(edf, nodes=ndf).collect()
-    }
     want = _py_components([e for e in edges if e[0] != e[1]], nodes)
-    assert got == want
+    for bound in (0, 1 << 20, 10):
+        with mock.patch.object(dd, "_DRIVER_FINISH_EDGES", bound):
+            got = {
+                r["doc_id"]: r["component"]
+                for r in dd.connected_components(edf, nodes=ndf).collect()
+            }
+        assert got == want, bound
 
 
 @SET

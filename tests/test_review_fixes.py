@@ -9,7 +9,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import read_table
+from conftest import read_table, spark_jobs
 from otel2pv_spark import datagen
 from otel2pv_spark.plans import pipeline
 
@@ -206,14 +206,18 @@ def test_curation_sampling_misconfig_fails_loudly(spark):
 
     docs = spark.createDataFrame([(1, "a b c", "s")], "doc_id long, text string, source string")
     ev = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="silently no-op"):
-        curation.build_audit(
-            docs, ev, curation.CurationConfig(strata_col="source")
-        )
-    with pytest.raises(ValueError, match="require strata_col"):
-        curation.build_audit(
-            docs, ev, curation.CurationConfig(temperature_alpha=0.5)
-        )
+    # build_audit materializes its stages eagerly; a misconfiguration
+    # must fail before the first of them runs
+    with spark_jobs(spark) as jobs:
+        with pytest.raises(ValueError, match="silently no-op"):
+            curation.build_audit(
+                docs, ev, curation.CurationConfig(strata_col="source")
+            )
+        with pytest.raises(ValueError, match="require strata_col"):
+            curation.build_audit(
+                docs, ev, curation.CurationConfig(temperature_alpha=0.5)
+            )
+    assert jobs == []
 
 
 def test_null_text_routes_to_rejects(spark):
