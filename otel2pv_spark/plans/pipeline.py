@@ -7,10 +7,10 @@ dynamic-partition write — with exactly ONE data shuffle (on conv_id,
 shared by every window via the hash-partitioning subset rule) and NO
 cached/persisted intermediates. Parse rejects and unroutable rows are
 ROUTED (reserved ``__reject_*`` sink partitions) instead of forked into
-a second plan branch, then split out of the written output with
-metadata-only directory renames; metrics/lineage/row-count derive from
-cheap column-pruned scans of the written (column-compressed,
-partition-pruned) output rather than extra passes over cached data.
+a second plan branch, and become the rejects table at manifest level
+(no data moves); metrics/lineage/row-count derive from cheap
+column-pruned scans of the written output rather than extra passes
+over cached data. A late-data merge is the same one staged write.
 
 Why this shape at 100 TB: you cannot cache the working set, so every
 ``persist()`` becomes a second full materialization, and every extra
@@ -39,9 +39,11 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..snapshot import snapshot
 from .. import datagen
@@ -308,6 +310,14 @@ def build_sequenced(
     return routable, rejects
 
 
+def _local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-built rows over an Arrow table: a ``LocalRelation``, not
+    the Python-backed scan of ``createDataFrame(list)``."""
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+    return spark.createDataFrame(table)
+
+
 def _metrics_rows(cat: Catalog, run_id: str) -> int:
     """Total rows from _metrics for THIS run. _metrics is replaced by
     whichever run wrote last, so a resume must filter on run_id rather
@@ -341,7 +351,8 @@ def _derive_metrics_lineage(
         for r in per:
             by_sink[r.sink] = by_sink.get(r.sink, 0) + r.rows
         cat.write(
-            spark.createDataFrame(
+            _local_table(
+                spark,
                 [(run_id, s, n) for s, n in sorted(by_sink.items())],
                 "run_id string, sink string, rows bigint",
             ),
@@ -359,7 +370,8 @@ def _derive_metrics_lineage(
                 cur[1] = min(cur[1], r.min_conv_id)
                 cur[2] = max(cur[2], r.max_conv_id)
         cat.write(
-            spark.createDataFrame(
+            _local_table(
+                spark,
                 [
                     (run_id, "sequence", pid, n, lo, hi)
                     for pid, (n, lo, hi) in sorted(by_pid.items())
@@ -383,18 +395,17 @@ def run(
     """Execute + persist all outputs; resumable via the run manifest.
 
     Default (single-pass) execution does exactly ONE heavy job — the
-    fan-out write of every row — then derives rejects (partition-pruned
-    read of the moved reject dirs), per-sink metrics (count over the
-    sink partition column of the written output), per-input-partition
-    lineage (two-column pruned scan) and the row count (sum of metrics,
-    driver-side over ≤ #sinks rows) WITHOUT touching the input again.
+    fan-out write of every row, step ``fanout`` (``sequenced_events``
+    and ``rejects``) — then derives ``metrics``, ``lineage`` (one
+    column-pruned readback) and the row count WITHOUT touching the
+    input again.
     """
     run_id = cfg.run_id or uuid.uuid4().hex[:12]
     cat = Catalog(spark, cfg.out_root, stats_columns=cfg.stats_columns or None)
     man = RunManifest(cfg.out_root, run_id)
     t0 = time.time()
 
-    steps = ("fanout", "rejects", "metrics", "lineage")
+    steps = ("fanout", "metrics", "lineage")
     if all(man.is_committed(s) for s in steps):
         # fully-resumed run: nothing to recompute — answer from _metrics
         n_rows = _metrics_rows(cat, run_id)
@@ -413,15 +424,12 @@ def run(
     routed_all = build_single_pass(transcripts, tool_meta, role_meta, cfg)
 
     if not man.is_committed("fanout"):
-        # ONE job writes every row; the reject partitions are then
-        # moved out to become the rejects table (metadata-only), so
-        # "rejects" is committed by the same atomic commit. The move /
-        # swap mechanics live behind the Catalog so an Iceberg
+        # ONE job writes every row; the reject partitions become the
+        # rejects table at manifest level, so this step commits both.
+        # The split mechanics live behind the Catalog so an Iceberg
         # implementation (partition REPLACE + snapshot swap) drops in.
         cat.commit_fanout_split(routed_all, "sequenced_events", "rejects")
         man.commit("fanout", {"path": cat.path("sequenced_events")})
-    if not man.is_committed("rejects"):
-        man.commit("rejects", {"path": cat.path("rejects")})
 
     if man.is_committed("metrics") and man.is_committed("lineage"):
         n_rows = _metrics_rows(cat, run_id)
@@ -464,11 +472,11 @@ def run_incremental(
 
     Scale shape: the recompute scans only the affected rows (at the
     real target, an Iceberg snapshot-diff prunes the scan to changed
-    files; here a semi-join filter), and the merge is Catalog.
-    replace_keys — MERGE/partition-overwrite on Iceberg, anti-join +
-    atomic swap on the parquet stand-in. Metrics/lineage re-derive
-    from the merged output with the same column-pruned readback as
-    run().
+    files; here a semi-join filter), and the merge is one step,
+    ``incr_merge``: ``Catalog.replace_keys`` writes (both tables minus
+    the keys) ∪ recompute in one staged write split like run()'s
+    fan-out. Metrics/lineage re-derive from the merged output with
+    the same column-pruned readback as run().
 
     ``changed_convs``: DataFrame with a conv_id column, or an iterable
     of conv_id strings.
@@ -481,28 +489,17 @@ def run_incremental(
     if isinstance(changed_convs, DataFrame):
         keys = changed_convs.select("conv_id").distinct()
     else:
-        keys = spark.createDataFrame(
-            [(c,) for c in changed_convs], "conv_id string"
-        )
+        keys = _local_table(spark, [(c,) for c in changed_convs], "conv_id string")
 
     affected = transcripts.join(keys, "conv_id", "left_semi")
     tool_meta = tool_meta if tool_meta is not None else datagen.tool_meta(spark)
     role_meta = role_meta if role_meta is not None else datagen.role_meta(spark)
     routed_all = build_single_pass(affected, tool_meta, role_meta, cfg)
 
-    if not man.is_committed("incr_fanout"):
-        cat.commit_fanout_split(routed_all, "_incr_events", "_incr_rejects")
-        man.commit("incr_fanout")
     if not man.is_committed("incr_merge"):
-        cat.replace_keys(
-            "sequenced_events", "_incr_events", keys, partition_by=["sink"]
-        )
-        # commit_fanout_split always materializes _incr_rejects (empty
-        # with full schema when the recompute produced none), so ONE
-        # replace_keys covers both cases: the changed conversations'
-        # old reject rows are anti-joined out and any new ones spliced
-        # in — a no-reject recompute correctly DROPS stale rejects.
-        cat.replace_keys("rejects", "_incr_rejects", keys, partition_by=["sink"])
+        # both tables lose every row of the changed conversations, so a
+        # recompute without rejects DROPS their stale reject rows
+        cat.replace_keys(routed_all, "sequenced_events", "rejects", keys)
         man.commit("incr_merge")
 
     # metrics + lineage re-derived from the merged output — the same
@@ -512,8 +509,6 @@ def run_incremental(
     # row — original run for untouched conversations, the incremental
     # scan for recomputed ones.)
     n_rows = _derive_metrics_lineage(spark, cat, man, run_id)
-    cat.drop("_incr_events")
-    cat.drop("_incr_rejects")
     wall = time.time() - t0
     return {
         "run_id": run_id,
@@ -621,8 +616,8 @@ def refresh_dims(
         .distinct()
         .transform(snapshot)
     )
-    # a changed key no transcript references must not trigger two
-    # corpus-scale replace_keys rewrites to splice in nothing
+    # a changed key no transcript references must not trigger a
+    # corpus-scale replace_keys rewrite to splice in nothing
     if affected_convs.isEmpty():
         return {"changed_dim_keys": n_keys, "recomputed_convs": 0}
     res = run_incremental(

@@ -16,8 +16,8 @@ IMMUTABLE directories that are never renamed or hardlinked; each
 commit writes a new manifest JSON (the file list + partition spec +
 schema-evolution flag) and then atomically swaps a single VERSION
 pointer file. That pointer swap is the only rename in the protocol:
-the same temp + fsync + rename step as the reference's atomic file
-writer (Server/atomicWrite.go:153-226), applied to one small file —
+the reference's atomic file write (Server/atomicWrite.go:153-226,
+``manifest._atomic_write``), applied to one small file —
 the POSIX stand-in for an object store's atomic conditional PUT
 (If-Match) of the pointer object, exactly how Iceberg's
 version-hint/metadata pointer commit works. Appends reference
@@ -36,6 +36,7 @@ Iceberg mapping of each method (what the real implementation does):
   partitioning, then TWO metadata-only operations: move the reserved
   reject partitions into the rejects table (partition-level REPLACE)
   and snapshot-swap staging into the main table. No data rewrite.
+- ``replace_keys``     → ``MERGE INTO`` both tables of that pair by key.
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from pyspark.sql import functions as F
 # sinks): the single-pass plan ROUTES invalid rows here, and the commit
 # splits them out into the rejects table at metadata level.
 from ..operators.route import REJECT_SINK_PREFIX
+from .manifest import _atomic_write
 
 
 def _has_parquet(d: str) -> bool:
@@ -350,7 +352,7 @@ def _entry_may_match(
 
 
 class _CatalogBase:
-    """The table operations composed from ``read``/``write`` (diff,
+    """The table operations composed from ``read`` and the commits (diff,
     keyed merge, compaction, metadata tables, append validation).
     The commit protocol itself — staging, manifests, the pointer swap
     — is ``ManifestCatalog``."""
@@ -421,32 +423,31 @@ class _CatalogBase:
 
     def replace_keys(
         self,
+        routed_all: DataFrame,
         table: str,
-        staging_table: str,
+        rejects_table: str,
         keys: DataFrame,
         key_col: str = "conv_id",
-        partition_by: list[str] | None = None,
     ) -> None:
-        """Key-level merge: rows of ``table`` whose ``key_col`` appears
-        in ``keys`` are replaced by the contents of ``staging_table``
-        (which holds the recomputed rows for exactly those keys).
+        """Key-level merge of a fan-out pair: rows of ``table`` and
+        ``rejects_table`` whose ``key_col`` appears in ``keys`` are
+        replaced by ``routed_all`` (the recomputed rows for exactly
+        those keys, routed as for ``commit_fanout_split``).
 
         Iceberg analog: MERGE INTO / DELETE WHERE key IN (...) +
-        APPEND, file-pruned by the key-bucket partition spec — a
-        metadata+affected-files operation. The parquet stand-in
-        rewrites the table (anti-join ∪ staging) behind the same
-        atomic commit; the CALLER's semantics are identical.
+        APPEND, file-pruned by the key-bucket partition spec. The
+        parquet stand-in writes (each table anti-joined on ``keys``) ∪
+        ``routed_all`` in ONE ``commit_fanout_split``.
 
-        Idempotent: re-running the same merge with the same staging
-        contents yields the same table (anti-join removes the
-        previously merged rows first)."""
-        staged = self.read(staging_table)
-        if self.exists(table):
-            old = self.read(table)
-            merged = old.join(keys, key_col, "left_anti").unionByName(staged)
-        else:
-            merged = staged
-        self.write(merged, table, partition_by=partition_by)
+        Idempotent: the anti-join removes any rows a previous merge of
+        the same keys left, so a re-run after a crash between the two
+        pointer swaps (new rejects, old main table) converges."""
+        merged = routed_all
+        for t in (table, rejects_table):
+            if self.exists(t):
+                kept = self.read(t).join(keys, key_col, "left_anti")
+                merged = merged.unionByName(kept)
+        self.commit_fanout_split(merged, table, rejects_table)
 
     def compact(
         self,
@@ -747,19 +748,8 @@ class ManifestCatalog(_CatalogBase):
             "partition_by": partition_by,
             "schema": schema,
         }
-        man_path = self._manifest_path(table, nxt)
-        man_tmp = man_path + ".tmp-" + uuid.uuid4().hex[:8]
-        with open(man_tmp, "w") as fh:
-            json.dump(man, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(man_tmp, man_path)  # single-file atomic
-        ptr_tmp = self._pointer(table) + ".tmp-" + uuid.uuid4().hex[:8]
-        with open(ptr_tmp, "w") as fh:
-            fh.write(str(nxt))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptr_tmp, self._pointer(table))  # THE commit point
+        _atomic_write(self._manifest_path(table, nxt), json.dumps(man))
+        _atomic_write(self._pointer(table), str(nxt))  # THE commit point
         # a crash between a previous attempt's manifest write and its
         # pointer swap leaves an orphan v>current manifest; it was
         # never committed, so drop it (snapshots() also ignores
@@ -1185,9 +1175,8 @@ class ManifestCatalog(_CatalogBase):
         check): with ``merge_schema=True`` the batch may add or omit
         columns (readers see NULLs where a file lacks one) and apply
         the safe widenings int→long and float→double; any other
-        difference raises. Unpartitioned tables only (use
-        ``commit_fanout_split`` / ``replace_keys`` on partitioned
-        ones)."""
+        difference raises. Unpartitioned tables only (a fan-out pair is
+        committed by ``commit_fanout_split`` / ``replace_keys``)."""
         if not self.exists(table):
             self.write(df, table)
             return
@@ -1195,7 +1184,7 @@ class ManifestCatalog(_CatalogBase):
         if man.get("partition_by"):
             raise ValueError(
                 f"append targets unpartitioned tables; {table!r} is "
-                "hive-partitioned (use replace_keys/commit_fanout_split)"
+                "hive-partitioned (a fan-out pair: commit_fanout_split/replace_keys)"
             )
         evolves, cur_schema = self._validate_append(df, table, merge_schema)
         union = _union_schema(cur_schema, df.schema)

@@ -193,7 +193,9 @@ def run_stream_pipeline_keyed(
     Catalog ``turns`` table keyed on (conv_id, turn_idx) — an anti-join
     makes redelivery/replay idempotent, first version of a key wins;
     (2) recompute ONLY the touched conversations over their FULL turn
-    history; (3) ``replace_keys``-merge into the sink tables (Iceberg
+    history; (3) merge the recompute into ``sequenced_events`` and
+    ``rejects`` with ``Catalog.replace_keys``: one staged write of
+    (both tables minus the touched conversations) ∪ recompute (Iceberg
     MERGE at the real target). This is the reference's late-message
     mop-up (a late same-tree message re-processes that tree,
     groupandverify.go:456-474) as a keyed merge, and the standard

@@ -37,7 +37,7 @@ def _write_cfg(tmp_path, **over):
 def test_job_end_to_end(spark, tmp_path):
     res = job.main(["--config", _write_cfg(tmp_path)])
     assert res["rows"] == 989
-    assert sorted(res["committed"]) == ["fanout", "lineage", "metrics", "rejects"]
+    assert sorted(res["committed"]) == ["fanout", "lineage", "metrics"]
     out = read_table(spark, tmp_path / "out", "sequenced_events")
     assert out.count() == 989
 

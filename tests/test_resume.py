@@ -34,7 +34,7 @@ def test_resume_after_partial_commit(spark, tmp_path):
         spark, SF, pipeline.PipelineConfig(out_root=out_a, run_id="full")
     )
 
-    # crashed run: fanout + rejects committed, then "killed" — simulate
+    # crashed run: fanout (both sink tables) committed, then "killed" — simulate
     # by running once and deleting the later stages' outputs + commits
     pipeline.run_from_events(
         spark, SF, pipeline.PipelineConfig(out_root=out_b, run_id="crash")
@@ -91,3 +91,37 @@ def test_manifest_atomicity(tmp_path):
     # replaced, never truncated in place)
     assert RunManifest(str(tmp_path), "r").is_committed("a")
     assert not RunManifest(str(tmp_path), "r").is_committed("b")
+
+
+def test_catalog_commit_fsyncs_meta_dir_after_pointer_swap(tmp_path, monkeypatch):
+    """The pointer swap is durable: after ``os.replace`` of VERSION the
+    table's ``_meta/<table>/`` directory is fsynced, so a crash cannot
+    roll the rename back (Spark-free: ``_commit`` only writes
+    metadata)."""
+    events, dirs = [], {}
+    real_open, real_fsync, real_replace = os.open, os.fsync, os.replace
+
+    def spy_open(path, flags, *a, **kw):
+        fd = real_open(path, flags, *a, **kw)
+        dirs[fd] = os.path.abspath(path)
+        return fd
+
+    def spy_fsync(fd):
+        events.append(("fsync", dirs.get(fd)))
+        real_fsync(fd)
+
+    def spy_replace(src, dst, *a, **kw):
+        events.append(("replace", os.path.abspath(dst)))
+        real_replace(src, dst, *a, **kw)
+
+    cat = Catalog(None, str(tmp_path))
+    monkeypatch.setattr(os, "open", spy_open)
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    cat._commit("t", [{"path": str(tmp_path / "_data" / "t" / "s-0")}], False, None)
+    monkeypatch.undo()
+
+    meta = os.path.join(str(tmp_path), "_meta", "t")
+    swap = events.index(("replace", os.path.join(meta, "VERSION")))
+    assert ("fsync", meta) in events[swap + 1:], events
+    assert cat._current_version("t") == 1

@@ -38,7 +38,7 @@ def test_spark_submit_pyfiles(tmp_path, sf_dir):
     res = json.loads(
         next(ln for ln in p.stdout.splitlines() if ln.startswith('{"run_id"'))
     )
-    assert res["committed"] == ["fanout", "lineage", "metrics", "rejects"]
+    assert res["committed"] == ["fanout", "lineage", "metrics"]
 
     from conftest import table_parquet_globs
 
